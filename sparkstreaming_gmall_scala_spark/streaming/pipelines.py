@@ -358,8 +358,9 @@ def sku_dim_pipeline(
 
     The parent dims are re-read per batch (the reference re-queries
     Phoenix inside transform{}), so a parent-dim update lands in the NEXT
-    batch's denormalization; the upsert is last-write-wins per sku_id,
-    matching Phoenix UPSERT semantics."""
+    batch's denormalization; the upsert is last-write-wins per sku_id by
+    ``ts``, matching Phoenix UPSERT semantics, also when one batch holds
+    several changes of a sku."""
     sku = file_stream(spark, src_dir, SKU_SCHEMA)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -369,8 +370,7 @@ def sku_dim_pipeline(
         )
         spu = spark.read.parquet(spu_dir).select("spu_id", "spu_name")
         denorm = (
-            batch_df.dropDuplicates(["sku_id"])
-            .join(F.broadcast(tm), "tm_id", "left")
+            batch_df.join(F.broadcast(tm), "tm_id", "left")
             .join(F.broadcast(c3), "category3_id", "left")
             .join(F.broadcast(spu), "spu_id", "left")
         )

@@ -151,6 +151,125 @@ def test_stateful_allocation_residual_across_batches(spark, tmp_path):
     assert round(sum(shares.values()), 2) == 25.0
 
 
+def _per_order_allocation(batches, ttl_ms=600_000):
+    """The order-keyed allocation loop (one state entry per order),
+    replayed batch by batch under Spark's event-time rules: rows at or
+    below the watermark drop as late, an order's data runs before
+    timeouts fire, an order times out once its timeout falls below the
+    watermark, and the next watermark is the max event time so far minus
+    the TTL. Rows are ``(order_id, detail_id, ts_ms, amount,
+    original_total, final_total)``; returns ``{detail_id: share}``."""
+
+    def cents(x):
+        return int(x * 100 + 0.5)
+
+    state: dict[int, tuple[int, int, int]] = {}
+    shares: dict[int, float] = {}
+    watermark = max_seen = 0
+    for rows in batches:
+        groups: dict[int, list] = {}
+        for r in rows:
+            if r[2] > watermark:
+                groups.setdefault(r[0], []).append(r)
+        for order_id, group in groups.items():
+            origin_sum, split_sum, _ = state.get(order_id, (0, 0, 0))
+            for _, detail_id, _, amount, original, final in sorted(
+                group, key=lambda r: r[1]
+            ):
+                amount_c, final_c = cents(amount), cents(final)
+                if amount_c == cents(original) - origin_sum:
+                    share_c = final_c - split_sum
+                else:
+                    share_c = int(final_c * amount / original + 0.5)
+                origin_sum += amount_c
+                split_sum += share_c
+                shares[detail_id] = share_c / 100.0
+            last = max(r[2] for r in group)
+            state[order_id] = (
+                origin_sum, split_sum, max(last, watermark + 1) + ttl_ms
+            )
+        state = {o: v for o, v in state.items() if v[2] >= watermark}
+        max_seen = max([max_seen] + [r[2] for r in rows])
+        watermark = max(watermark, max_seen - ttl_ms)
+    return shares
+
+
+def test_bucketed_allocation_matches_per_order_loop(spark, tmp_path):
+    """The hash-bucketed allocation state gives every detail exactly the
+    share the order-keyed loop gives it: orders split across batches,
+    several orders per bucket, a detail landing after its order's 600 s
+    TTL, a late detail, and two restarts from the checkpoint."""
+    import datetime as dt
+    import glob
+    import random
+
+    from sparkstreaming_gmall_scala_spark.streaming.allocation import BUCKETS
+
+    t0 = dt.datetime(2024, 1, 1, 10, 0, tzinfo=dt.timezone.utc)
+    t0_ms = int(t0.timestamp() * 1000)
+    rng = random.Random(7)
+    batches: list[list[tuple]] = [[] for _ in range(7)]
+    detail_id = 0
+    # batches 0-3, event time 0-100 s: orders of 1-4 details, each detail
+    # landing in its order's first batch or up to two batches later
+    for order_id in range(1, 41):
+        first = rng.randrange(3)
+        amounts = [rng.randrange(1, 5000) for _ in range(rng.randint(1, 4))]
+        original = sum(amounts)
+        final = original - rng.randrange(0, original // 3 + 1)
+        for a in amounts:
+            detail_id += 1
+            k = min(3, first + rng.randrange(3))
+            ts_ms = t0_ms + (30 * k + rng.randrange(10)) * 1000
+            batches[k].append(
+                (order_id, detail_id, ts_ms, a / 100, original / 100, final / 100)
+            )
+    at = lambda s: t0_ms + s * 1000  # noqa: E731
+    # order 100: three details of 1.00 of 3.00, final 10.00. Two at 0 s;
+    # the third lands at 800 s, after 1,300 s and 1,310 s pushed the
+    # watermark past 600 s: its state is gone, so it takes a fresh
+    # proportional 3.33 instead of the residual 3.34.
+    batches[0] += [(100, 901, at(0), 1.0, 3.0, 10.0),
+                   (100, 902, at(0), 1.0, 3.0, 10.0)]
+    batches[4] += [(200, 903, at(1300), 5.0, 9.0, 8.0)]
+    batches[5] += [(300, 904, at(1310), 2.0, 2.0, 1.5)]
+    batches[6] += [(100, 905, at(800), 1.0, 3.0, 10.0),
+                   (200, 906, at(100), 4.0, 9.0, 8.0)]  # late: dropped
+
+    want = _per_order_allocation(batches)
+    assert want[905] == 3.33 and 906 not in want
+
+    order_ids = sorted({r[0] for b in batches for r in b})
+    per_bucket = (
+        spark.createDataFrame([(o,) for o in order_ids], "order_id long")
+        .groupBy(F.pmod(F.xxhash64("order_id"), F.lit(BUCKETS)))
+        .count()
+        .collect()
+    )
+    assert max(r["count"] for r in per_bucket) >= 2
+
+    src, out, ckpt = _dirs(tmp_path, "src", "out", "ckpt")
+    stamp = time.time() - 100
+    for run in ([0, 1, 2], [3, 4], [5, 6]):
+        for k in run:
+            before = set(glob.glob(os.path.join(src, "*.parquet")))
+            rows = [
+                (o, d, dt.datetime.fromtimestamp(ts / 1000, dt.timezone.utc),
+                 a, orig, fin)
+                for o, d, ts, a, orig, fin in batches[k]
+            ]
+            _drop(spark, ALLOC_SCHEMA, rows, src)
+            (new,) = set(glob.glob(os.path.join(src, "*.parquet"))) - before
+            os.utime(new, (stamp + k, stamp + k))  # one file per batch, in order
+        q = allocation_pipeline(spark, src, out, ckpt, available_now=True)
+        assert q.awaitTermination(120), f"drain of batches {run} did not end"
+    got = {
+        r["detail_id"]: r["final_detail_amount"]
+        for r in IdempotentBatchWriter(out).read(spark).collect()
+    }
+    assert got == want
+
+
 def test_trademark_stat_per_batch_scope(spark, tmp_path):
     """A1/S12: the aggregate is per-batch scoped (not cumulative), and
     each batch lands under its own batch_id partition — the exactly-once
@@ -365,6 +484,41 @@ def test_sku_dim_pipeline_denorm_and_late_dim_update(spark, tmp_path):
     assert len(got) == 2
     assert got[1]["sku_name"] == "mate-128gb"  # last-write-wins per sku
     assert got[2]["tm_name"] == "xiaomi"  # updated parent dim visible
+
+
+def test_sku_dim_pipeline_latest_change_wins_within_batch(spark, tmp_path):
+    """Two changes of one sku in one file: the dim keeps the later one by
+    ``ts``, not whichever row a per-batch dedup happens to keep first."""
+    import datetime as dt
+
+    from sparkstreaming_gmall_scala_spark.streaming.pipelines import (
+        SKU_SCHEMA,
+        sku_dim_pipeline,
+    )
+
+    src, tm, c3, spu, out, ckpt = _dirs(
+        tmp_path, "src", "tm", "c3", "spu", "out", "ckpt"
+    )
+    _write_dim(spark, [(10, "huawei")], ["tm_id", "tm_name"], tm)
+    _write_dim(spark, [(20, "phones")], ["category3_id", "category3_name"], c3)
+    _write_dim(spark, [(30, "mate")], ["spu_id", "spu_name"], spu)
+    day = dt.datetime(2024, 1, 1)
+    _drop(
+        spark,
+        SKU_SCHEMA,
+        [
+            (7, 30, 10, 20, "old", 1.0, day),
+            (7, 30, 10, 20, "new", 2.0, day + dt.timedelta(seconds=5)),
+        ],
+        src,
+    )
+    q = sku_dim_pipeline(spark, src, tm, c3, spu, out, ckpt)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    got = [(r["sku_id"], r["sku_name"]) for r in spark.read.parquet(out).collect()]
+    assert got == [(7, "new")]
 
 
 def test_kafka_fanout_writer_carries_dynamic_topic(spark, tmp_path):
@@ -2020,6 +2174,81 @@ def test_cdc_dim_apply_pipeline_deletes_and_restart(spark, tmp_path):
         assert table() == {2: "b1"}
     finally:
         q.stop()
+
+
+def test_dim_pipeline_latest_change_wins_within_batch(spark, tmp_path):
+    """Several changes of one key in one batch: the upsert keeps the one
+    with the latest ``ts``, whatever their order in the file, and it
+    beats the row stored by an earlier batch."""
+    from sparkstreaming_gmall_scala_spark.streaming.pipelines import (
+        TRADEMARK_SCHEMA,
+        dim_pipeline,
+    )
+
+    src, out, ckpt = _dirs(tmp_path, "src", "out", "ckpt")
+    q = dim_pipeline(spark, src, out, ckpt, TRADEMARK_SCHEMA, "tm_id")
+    try:
+        _drop(spark, TRADEMARK_SCHEMA, [(1, "a0", _t(1)), (2, "b0", _t(1))], src)
+        q.processAllAvailable()
+        _drop(
+            spark,
+            TRADEMARK_SCHEMA,
+            [(1, "a1", _t(2)), (1, "a3", _t(4)), (1, "a2", _t(3)),
+             (3, "c2", _t(3)), (3, "c1", _t(2))],
+            src,
+        )
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    got = {r["tm_id"]: r["tm_name"] for r in spark.read.parquet(out).collect()}
+    assert got == {1: "a3", 2: "b0", 3: "c2"}
+
+
+def test_cdc_dim_apply_pipeline_latest_change_wins_within_batch(spark, tmp_path):
+    """One batch with several changes per key: the latest by ``ts`` wins,
+    so update->delete removes a stored key, insert->delete never lands,
+    delete->insert re-creates, and update->update keeps the later row,
+    whatever the changes' order in the file."""
+    from pyspark.sql import types as T
+
+    from sparkstreaming_gmall_scala_spark.streaming.pipelines import (
+        cdc_dim_apply_pipeline,
+    )
+
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType()),
+            T.StructField("name", T.StringType()),
+            T.StructField("op", T.StringType()),
+            T.StructField("ts", T.LongType()),
+        ]
+    )
+    src, dim, ckpt = _dirs(tmp_path, "src", "dim", "ckpt")
+    q = cdc_dim_apply_pipeline(
+        spark, src, dim, ckpt, schema, ["id"], op_col="op", order_col="ts"
+    )
+    try:
+        _drop(
+            spark, schema,
+            [(1, "a0", "insert", 1), (2, "b0", "insert", 1), (4, "d0", "insert", 1)],
+            src,
+        )
+        q.processAllAvailable()
+        _drop(
+            spark, schema,
+            [
+                (1, None, "delete", 3), (1, "a1", "update", 2),  # update->delete
+                (3, "c0", "insert", 2), (3, None, "delete", 3),  # insert->delete
+                (2, "b1", "insert", 3), (2, None, "delete", 2),  # delete->insert
+                (4, "d2", "update", 3), (4, "d1", "update", 2),  # update->update
+            ],
+            src,
+        )
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    got = {r["id"]: r["name"] for r in spark.read.parquet(dim).collect()}
+    assert got == {2: "b1", 4: "d2"}
 
 
 def test_append_only_index_time_travel_reads(spark, tmp_path):
