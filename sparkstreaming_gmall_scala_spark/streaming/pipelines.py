@@ -230,15 +230,25 @@ def probe_first_order(
     """Cross-batch first-order probe: a user is first-order iff never
     claimed, or claimed by THIS batch id (replay).
 
+    An order with a NULL ``user_id`` belongs to no user, so it is never a
+    first order ('0') and, being unflagged, writes no claim row. (The
+    reference's ``user_id`` is a Scala ``Long`` with no NULL case,
+    bean/OrderInfo.scala:7-8; without this rule every batch would flag
+    its earliest NULL-user order, since NULL never matches a claim.)
+
     No broadcast hint on ``state``: user_status grows with every user ever
     seen (the reference's Phoenix table is unbounded by design,
     dwd/OrderInfoApp.scala:271-279) — a forced broadcast OOMs at scale.
     AQE picks broadcast while the table is small and switches to a shuffle
     join once it outgrows the threshold (plan pinned by
     tests/test_plan_properties.py)."""
-    is_first = (F.col("_intra") == "1") & (
-        F.col("first_batch_id").isNull()
-        | (F.col("first_batch_id") == F.lit(batch_id))
+    is_first = (
+        F.col("user_id").isNotNull()
+        & (F.col("_intra") == "1")
+        & (
+            F.col("first_batch_id").isNull()
+            | (F.col("first_batch_id") == F.lit(batch_id))
+        )
     )
     return (
         corrected.join(state, "user_id", "left")

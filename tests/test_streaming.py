@@ -151,6 +151,72 @@ def test_stateful_allocation_residual_across_batches(spark, tmp_path):
     assert round(sum(shares.values()), 2) == 25.0
 
 
+def test_stateful_allocation_replays_batch_lost_before_commit(spark, tmp_path):
+    """A crash after a batch's sink and state writes but before its
+    commit log entry: the restart replays that batch over the same
+    offsets, rewriting the state-store file that already exists, with
+    stray temp files from an interrupted atomic write lying in the offset
+    log and a state partition. The sink and every share come out
+    identical, and the next batch continues the running sums."""
+    import glob
+
+    src, out, ckpt = _dirs(tmp_path, "src", "out", "ckpt")
+
+    def drain(rows):
+        if rows:
+            _drop(spark, ALLOC_SCHEMA, rows, src)
+        q = allocation_pipeline(spark, src, out, ckpt, available_now=True)
+        assert q.awaitTermination(120), "drain did not terminate"
+        return q
+
+    def sink_rows():
+        return sorted(
+            tuple(r) for r in IdempotentBatchWriter(out).read(spark).collect()
+        )
+
+    # order 7: 3 x 10.00 of 30.00, final 25.00; order 8: 3 x 10.00 of
+    # 30.00, final 20.00 — both split across batches. The second batch
+    # stays below the first one's max event time, so the watermark holds
+    # and no no-data batch follows it: it is the last batch in the logs.
+    drain([(7, 1, TS.format(5), 10.0, 30.0, 25.0),
+           (7, 2, TS.format(6), 10.0, 30.0, 25.0)])
+    q = drain([(7, 3, TS.format(3), 10.0, 30.0, 25.0),
+               (8, 11, TS.format(4), 10.0, 30.0, 20.0)])
+    last = max(p["batchId"] for p in q.recentProgress if p["numInputRows"])
+    commits = os.path.join(ckpt, "commits")
+    assert max(int(f) for f in os.listdir(commits) if f.isdigit()) == last
+    before = sink_rows()
+
+    # crash before commit: the commit entry never landed, and two atomic
+    # writes died between creating their temp file and renaming it
+    os.remove(os.path.join(commits, str(last)))
+    os.remove(os.path.join(commits, f".{last}.crc"))
+    partition = sorted(glob.glob(os.path.join(ckpt, "state", "0", "*")))[0]
+    # the replay's state commit renames over this existing version file
+    assert os.path.exists(os.path.join(partition, f"{last + 1}.delta"))
+    for stray in (
+        os.path.join(ckpt, "offsets", f".{last + 1}.{uuid.uuid4()}.tmp"),
+        os.path.join(partition, f".{last + 2}.delta.{uuid.uuid4()}.tmp"),
+    ):
+        with open(stray, "wb") as f:
+            f.write(b"torn")
+
+    q = drain([])
+    replayed = [p for p in q.recentProgress if p["numInputRows"]]
+    assert [p["batchId"] for p in replayed] == [last], q.recentProgress
+    assert sink_rows() == before
+
+    drain([(8, 12, TS.format(7), 10.0, 30.0, 20.0),
+           (8, 13, TS.format(8), 10.0, 30.0, 20.0)])
+    shares = {
+        r["detail_id"]: r["final_detail_amount"]
+        for r in IdempotentBatchWriter(out).read(spark).collect()
+    }
+    assert shares == {
+        1: 8.33, 2: 8.33, 3: 8.34, 11: 6.67, 12: 6.67, 13: 6.66
+    }, shares
+
+
 def _per_order_allocation(batches, ttl_ms=600_000):
     """The order-keyed allocation loop (one state entry per order),
     replayed batch by batch under Spark's event-time rules: rows at or
@@ -435,6 +501,38 @@ def test_order_info_pipeline_first_flag_restart_and_replay(spark, tmp_path):
     )
     assert all(r["count"] == 1 for r in per_user_firsts), per_user_firsts
     assert {r["user_id"] for r in per_user_firsts} == {1, 2, 3}
+
+
+def test_order_info_null_user_is_never_first_order(spark, tmp_path):
+    """An order with a NULL user_id cannot be anyone's first order: it is
+    flagged '0' in every batch and writes no claim row, while a real
+    user's first order in the same batches is flagged as before."""
+    from sparkstreaming_gmall_scala_spark.streaming.pipelines import (
+        ORDER_INFO_SCHEMA,
+        order_info_batch,
+    )
+
+    state, out = _dirs(tmp_path, "state", "out")
+    process = order_info_batch(spark, state, IdempotentBatchWriter(out))
+    batches = [
+        [(10, None, 1, TS.format(1), 1.0), (11, 5, 1, TS.format(2), 2.0)],
+        [(20, None, 1, TS.format(3), 3.0), (21, None, 1, TS.format(4), 4.0)],
+        [(30, None, 1, TS.format(5), 5.0), (31, 6, 1, TS.format(6), 6.0)],
+    ]
+    for batch_id, rows in enumerate(batches):
+        process(spark.createDataFrame(rows, ORDER_INFO_SCHEMA), batch_id)
+    flags = {
+        r["order_id"]: r["if_first_order"]
+        for r in IdempotentBatchWriter(out).read(spark).collect()
+    }
+    assert flags == {
+        10: "0", 11: "1", 20: "0", 21: "0", 30: "0", 31: "1"
+    }, flags
+    claims = sorted(
+        (r["user_id"], r["first_batch_id"])
+        for r in spark.read.parquet(state).collect()
+    )
+    assert claims == [(5, 0), (6, 2)], claims
 
 
 def test_sku_dim_pipeline_denorm_and_late_dim_update(spark, tmp_path):
