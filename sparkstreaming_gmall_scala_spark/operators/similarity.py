@@ -724,7 +724,7 @@ def label_centroid_dims(df: DataFrame, label_col: str, vec_col: str) -> DataFram
 
 def label_centroids(df: DataFrame, label_col: str, vec_col: str) -> DataFrame:
     """Per-label centroid of the embedding column as array<double> —
-    library form; the catalog's gated query uses label_centroid_dims
+    library form; the catalog query uses label_centroid_dims
     (scalar rows) because array cells aren't hashable by the oracle
     canonicalizer."""
     per_dim = label_centroid_dims(df, label_col, vec_col)

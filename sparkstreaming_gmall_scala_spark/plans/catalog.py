@@ -26,12 +26,6 @@ class Query:
     oracle: str | None
     doc: str = ""
     tags: tuple[str, ...] = field(default_factory=tuple)
-    # The driver's correctness gate budgets 50 rows; entries whose behavior
-    # is fully covered by a gated sibling (an in-memory twin of a persisted
-    # index, a duplicate sessionization surface) stay registered — callable,
-    # benched, pytest-covered — but ungated so every DISTINCT behavior gets
-    # a CORRECTNESS row.
-    gated: bool = True
 
 
 REGISTRY: dict[str, Query] = {}
@@ -41,7 +35,6 @@ def register(
     name: str,
     oracle: str | None = None,
     tags: tuple[str, ...] = (),
-    gated: bool = True,
 ) -> Callable[[Builder], Builder]:
     """Decorator: register a query builder under ``name``."""
 
@@ -50,7 +43,7 @@ def register(
             raise ValueError(f"duplicate query name {name!r}")
         REGISTRY[name] = Query(
             name=name, builder=fn, oracle=oracle, doc=fn.__doc__ or "",
-            tags=tags, gated=gated,
+            tags=tags,
         )
         return fn
 
@@ -58,22 +51,7 @@ def register(
 
 
 def load_all() -> dict[str, Query]:
-    """Import every plans module so decorators populate REGISTRY, then
-    overlay the round-robin gate rotation: the rotating slots cycle
-    through ``rotation.POOL`` so every distinct oracle-bearing behavior
-    gets a driver CORRECTNESS row at least once per pool cycle (the
-    static ``gated`` flags carry the always-gated CORE and the ungated
-    twins; registration flags for POOL names are overridden here each
-    load)."""
-    import dataclasses
-
+    """Import every plans module so its decorators populate REGISTRY."""
     from . import llm, parity, scale, streaming_analog, temporal, tpch  # noqa: F401
-    from .rotation import POOL, active_rotation
 
-    active = set(active_rotation())
-    for name in POOL:
-        q = REGISTRY[name]
-        want = name in active
-        if q.gated != want:
-            REGISTRY[name] = dataclasses.replace(q, gated=want)
     return REGISTRY

@@ -98,9 +98,6 @@ def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) WHERE rank <= 100
     """,
     tags=("llm", "text", "tokenizer", "bpe"),
-    # Full-oracle POOL entry (appended; first driver row when the window
-    # reaches it).
-    gated=False,
 )
 def bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-100 BPE merge candidates: corpus-wide adjacent-token-pair
@@ -128,8 +125,6 @@ def bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) WHERE rank <= 200
     """,
     tags=("llm", "text", "tokenizer"),
-    # Full-oracle POOL entry (appended with the round-8 additions).
-    gated=False,
 )
 def vocab_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-200 corpus vocabulary by token frequency (rank ties break
@@ -226,8 +221,6 @@ def lang_id_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM c
     """,
     tags=("llm", "text"),
-    # Full-oracle POOL entry (appended with knn_sq8/bpe_pairs).
-    gated=False,
 )
 def script_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document character-class mix (alpha / digit / whitespace /
@@ -308,9 +301,6 @@ _QUALITY_SQL = f"""
     WHERE q.quality >= 0.45 AND l.pred_lang = 'en'
     """,
     tags=("llm", "text", "dedup", "pipeline"),
-    # round-6 rotation: subset of the still-gated corpus_clean_near and
-    # of corpus_curate (now gated); slot freed for the round-5 families.
-    gated=False,
 )
 def corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The end-to-end training-data cleaning recipe as ONE composed query:
@@ -485,7 +475,6 @@ def _bm25_index_dir(spark: SparkSession, sf_dir: str) -> str:
     ) WHERE rank <= 10
     """,
     tags=("streaming", "text", "search"),
-    gated=False,
 )
 def bm25_search_live_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """bm25_search answered from the STREAMING postings index: 3
@@ -572,7 +561,6 @@ def bm25_search_live_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) WHERE fused_rank <= 10
     """,
     tags=("llm", "search", "hybrid"),
-    gated=False,
 )
 def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval via Reciprocal Rank Fusion — THE standard RAG
@@ -698,7 +686,6 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) WHERE fused_rank <= 10
     """,
     tags=("streaming", "search", "hybrid"),
-    gated=False,
 )
 def hybrid_search_rrf_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """hybrid_search_rrf with the LEXICAL side answered from the
@@ -823,7 +810,6 @@ def _mmr_oracle() -> str:
     "mmr_rerank",
     oracle=_mmr_oracle(),
     tags=("llm", "search", "diversify"),
-    gated=False,
 )
 def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal Marginal Relevance re-ranking of the dense top-20
@@ -1014,7 +1000,6 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM pairs
     """,
     tags=("llm", "dedup", "prefix-filter"),
-    gated=False,
 )
 def jaccard_prefix_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ngram_jaccard_pairs through PREFIX FILTERING (AllPairs/PPJoin,
@@ -1307,9 +1292,6 @@ def _lsh_oracle() -> str:
     "knn_lsh",
     oracle=_lsh_oracle(),
     tags=("llm", "similarity", "lsh"),
-    # In-memory twin of the gated knn_lsh_persisted (pytest asserts exact
-    # result-equality between the two paths); ungated for gate budget.
-    gated=False,
 )
 def knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-5 via banded random-hyperplane LSH (8 planes = 4 bands × 2
@@ -1395,7 +1377,7 @@ def embed_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label embedding centroid components as scalar rows
     (label, pos, dim_mean) — exact decimal sums (order-insensitive →
     deterministic under any partitioning). The array-assembling form is
-    label_centroids(); the gated query emits scalars because the oracle
+    label_centroids(); the catalog query emits scalars because the oracle
     canonicalizer can't sort/hash array cells."""
     from ..operators.similarity import label_centroid_dims
 
@@ -1407,9 +1389,6 @@ def embed_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     "knn_ivf",
     oracle=None,  # approximate by construction; pytest measures recall.
     tags=("llm", "similarity", "ivf"),
-    # In-memory twin of the gated knn_ivf_persisted (pytest asserts exact
-    # result-equality between the two paths); ungated for gate budget.
-    gated=False,
 )
 def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-5 via IVF (k-means coarse quantizer, 8 cells, nprobe=3):
@@ -1438,10 +1417,6 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=None,  # approximate by construction; pytest asserts exact
     # result-equality with the in-memory ivf_topk instead.
     tags=("llm", "similarity", "ivf", "persisted"),
-    # round-6 rotation: a rows-only driver row carries less signal than a
-    # hash-green one; the real checks (recall bound + persisted≡in-memory
-    # path equality) live in pytest. Slot freed for the round-5 families.
-    gated=False,
 )
 def knn_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-5 over PERSISTED inverted lists: ivf_build assigns cells
@@ -1503,7 +1478,6 @@ def _ivf_persisted_index(spark: SparkSession, sf_dir: str):
     oracle=None,  # approximate by construction; recall measured per-round
     # in bench (recall_at_5) and the curve in RECALL.md / gen_recall.
     tags=("llm", "similarity", "ivf", "persisted", "multiprobe"),
-    gated=False,
 )
 def knn_ivf_probe6(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The IVF MULTI-PROBE operating point (r14 verdict #6): the same
@@ -1940,7 +1914,6 @@ def _cells_index_dir(spark: SparkSession, sf_dir: str) -> tuple[str, list]:
     # integers exactly at any batch split
     oracle=_CLUSTER_DRIFT_ORACLE,
     tags=("streaming", "similarity", "clustering", "quality"),
-    gated=False,
 )
 def cluster_drift_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """cluster_drift answered from the STREAMING per-cell mart
@@ -2151,11 +2124,6 @@ _SQ8_TOPK_ORACLE = f"""
     "knn_sq8",
     oracle=_SQ8_TOPK_ORACLE,
     tags=("llm", "similarity", "sq8"),
-    # Full-oracle POOL entry: rotates into the driver gate (the first
-    # compressed-ANN entry with a hash-checked oracle — SQ8's bounds are
-    # exact aggregates and its arithmetic is fixed-order, unlike the
-    # trained-quantizer PQ/IVF families).
-    gated=False,
 )
 def knn_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-5 by SQ8 scalar quantization (operators/sq.py — faiss
@@ -2187,7 +2155,6 @@ def knn_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with the in-memory twin green).
     oracle=_SQ8_TOPK_ORACLE,
     tags=("llm", "similarity", "sq8", "persisted"),
-    gated=False,
 )
 def knn_sq8_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-5 over a PERSISTED SQ8 index: the codes table is encoded
@@ -2242,7 +2209,6 @@ def knn_sq8_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # RECALL.md fixtures + the partition-pruned probe plan are pinned in
     # tests/test_sq.py.
     tags=("llm", "similarity", "ivf", "sq8", "persisted"),
-    gated=False,
 )
 def knn_ivf_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-5 over a PERSISTED IVF-SQ8 index (faiss "IVF,SQ8",
@@ -2327,10 +2293,6 @@ def knn_ivf_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DuckDB-reproducible (the IVF family's constraint, squared); recall
     # floor + full-path determinism pinned in tests/test_similarity.py.
     tags=("llm", "similarity", "pq"),
-    # Rows-only entry — stays ungated for the same reason the other two
-    # rows-only rows rotated out in round 6: a hash-green slot carries
-    # more driver signal than a rows-only one.
-    gated=False,
 )
 def knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-5 by product quantization (operators/pq.py): m=8 subspace
@@ -2359,7 +2321,6 @@ def knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # result-equality with the in-memory path (deterministic train ⇒
     # identical codebooks ⇒ identical codes ⇒ identical ranking).
     tags=("llm", "similarity", "pq", "persisted"),
-    gated=False,
 )
 def knn_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-5 over a PERSISTED PQ index: codebooks + codes are trained
@@ -2410,7 +2371,6 @@ def knn_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=None,  # composes the two non-reproducible quantizers; recall
     # floor + partition-pruning plan guard in tests/test_similarity.py.
     tags=("llm", "similarity", "ivf", "pq"),
-    gated=False,
 )
 def knn_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed 100 TB ANN architecture (faiss IVFPQ): IVF cells
@@ -2458,7 +2418,6 @@ def knn_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=None,  # same constraint as knn_ivf_pq; pytest pins persisted
     # ≡ in-memory and the partition-pruned probe scan.
     tags=("llm", "similarity", "ivf", "pq", "persisted"),
-    gated=False,
 )
 def knn_ivf_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-5 over a PERSISTED IVF-PQ index — the steady-state form of
@@ -2536,7 +2495,6 @@ def knn_ivf_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=None,  # k-means cells are engine-opaque (the IVF constraint);
     # soundness/completeness-within-cells pinned in tests/test_similarity.py
     tags=("llm", "dedup", "similarity"),
-    gated=False,
 )
 def semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic near-dup removal with the
@@ -2619,7 +2577,7 @@ def _pagerank_oracle(iters: int = 6, damping_pct: int = 85) -> str:
     near-dup graph has NO dangling nodes by construction (every node
     comes from the symmetric edge list, so out_deg ≥ 1), so the
     engine's dangling term is identically zero and the oracle omits it.
-    The edge derivation is embed_near_dup's hash-gated oracle verbatim.
+    The edge derivation is embed_near_dup's hash-checked oracle verbatim.
     Implemented as _pagerank_oracle_from over the exact-pair scored CTE
     (r14 ADVICE: the two unrolled-CTE bodies were verbatim copies that
     could drift on the next oracle tweak)."""
@@ -2638,7 +2596,6 @@ def _pagerank_oracle(iters: int = 6, damping_pct: int = 85) -> str:
     "dup_pagerank",
     oracle=_pagerank_oracle(),
     tags=("llm", "dedup", "graph"),
-    gated=False,
 )
 def dup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank centrality over the near-dup pair graph (each undirected
@@ -2697,7 +2654,7 @@ def _lp_oracle(rounds: int = 3) -> str:
     dup_pagerank move). Each round is pure integer counting plus a
     deterministic (count DESC, label ASC) argmax — exactly the engine's
     row_number window — so the label frames match value-for-value. The
-    edge derivation is embed_near_dup's hash-gated oracle verbatim."""
+    edge derivation is embed_near_dup's hash-checked oracle verbatim."""
     base = f"""
     WITH scored AS (
       SELECT q.vec_id AS id_a, c.vec_id AS id_b,
@@ -2719,7 +2676,6 @@ def _lp_oracle(rounds: int = 3) -> str:
     "dup_communities",
     oracle=_lp_oracle(),
     tags=("llm", "dedup", "graph"),
-    gated=False,
 )
 def dup_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synchronous label-propagation communities over the near-dup pair
@@ -2841,7 +2797,6 @@ def lsh_pairs_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dup_pagerank_lsh",
     oracle=_pagerank_oracle_from(_lsh_scored_cte()),
     tags=("llm", "dedup", "graph", "lsh"),
-    gated=False,
 )
 def dup_pagerank_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dup_pagerank's banded-LSH scale twin (completing the graph
@@ -2852,8 +2807,7 @@ def dup_pagerank_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lsh_pairs_persisted) shared with dup_communities_lsh.
     Deterministic planes ⇒ still a FULL oracle (the unrolled-CTE
     PageRank over the LSH pair SQL). Hub ranking agreement with the
-    exact graph pinned on the clustered fixture in tests/test_graph.py
-    and measured per-round at bench SF in BENCH_r{N}.agreement."""
+    exact graph pinned on the clustered fixture in tests/test_graph.py."""
     from ..operators.pagerank import pagerank
 
     pairs = lsh_pairs_persisted(spark, sf_dir)
@@ -2867,7 +2821,6 @@ def dup_pagerank_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dup_communities_lsh",
     oracle=_lp_oracle_lsh(),
     tags=("llm", "dedup", "graph", "lsh"),
-    gated=False,
 )
 def dup_communities_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dup_communities' documented 100 TB twin (r13 verdict #4): the
@@ -2920,10 +2873,6 @@ def embed_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the last ulp → not hash-comparable; tests assert pair-set equality
     # with the exact baseline within a rounding-boundary tolerance.
     tags=("llm", "dedup", "similarity", "vectorized"),
-    # Same pair set as the hash-gated embed_near_dup (pytest asserts the
-    # equality); ungated so the 50-row gate spends its budget on distinct
-    # behaviors rather than a rows-only twin.
-    gated=False,
 )
 def embed_near_dup_vec(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup, throughput path: Arrow-batched numpy matmul
@@ -2964,10 +2913,6 @@ def _near_dup_lsh_oracle() -> str:
     "embed_near_dup_lsh",
     oracle=_near_dup_lsh_oracle(),
     tags=("llm", "dedup", "similarity", "lsh"),
-    # round-6 rotation: OR-construction twin of gated embed_near_dup; the
-    # banded machinery is gated via minhash_lsh_pairs. In-suite parity
-    # keeps the full oracle check.
-    gated=False,
 )
 def embed_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup, 100 TB path: banded-LSH candidate pairs then
@@ -3019,11 +2964,6 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     """,
     tags=("llm", "multimodal"),
-    # Same Arrow mapInPandas pipeline as the gated multimodal_features;
-    # ungated so the driver's 50-row gate budget covers the four distinct
-    # corpus-quality behaviors (doc_repetition/decontaminate/domain_mix/
-    # boilerplate_ngrams) instead of a third checksum variant.
-    gated=False,
 )
 def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Payload resize to 64 bytes (truncate / cycle-pad) through the
@@ -3052,8 +2992,6 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     """,
     tags=("llm", "multimodal"),
-    # Same Arrow pipeline as the gated multimodal_features (see resize).
-    gated=False,
 )
 def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame sampling (every 16th byte) through the Arrow batch pipeline —
@@ -3075,9 +3013,6 @@ def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents WHERE strlen(text) > 0
     """,
     tags=("llm", "multimodal"),
-    # Ungated like the other multimodal variants: the driver gate budgets
-    # distinct behaviors; this one's full-oracle check runs in-suite.
-    gated=False,
 )
 def media_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-column round trip through a REAL container format (r9
@@ -3098,10 +3033,7 @@ def media_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Corpus-quality extensions (gated as of round 5: the four near-twin
-# entries customers_with_orders / dau_first_visit / multimodal_resize /
-# multimodal_frames rotated out of the 50-row gate so every DISTINCT
-# behavior gets a driver CORRECTNESS row).
+# Corpus-quality extensions.
 # ---------------------------------------------------------------------------
 @register(
     "doc_repetition",
@@ -3270,8 +3202,7 @@ def boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Corpus assembly: chunking for embedding/RAG ingestion and concat-and-
 # chunk sequence packing for pretraining loaders (operators/packing.py).
-# Ungated (the driver's 50-row budget is spent on the families above);
-# full oracles, checked by tools/verify_local + the invariant pytests.
+# Full oracles, checked by tools/verify_local + the invariant pytests.
 # ---------------------------------------------------------------------------
 
 # Raw-case tokens (chunking preserves the original text, unlike the
@@ -3297,7 +3228,6 @@ _RAW_TOKENS = "list_filter(string_split_regex(text, '\\s+'), t -> t <> '')"
     FROM starts
     """,
     tags=("llm", "packing", "rag"),
-    gated=False,
 )
 def chunk_tokens_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RAG/embedding-ingestion chunker: overlapping 64-token windows with
@@ -3337,7 +3267,6 @@ def chunk_tokens_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM w
     """,
     tags=("llm", "packing", "pretraining"),
-    gated=False,
 )
 def pack_sequences_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Concat-and-chunk packing manifest (GPT-style pretraining): docs are
@@ -3355,7 +3284,7 @@ def pack_sequences_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Round-5 corpus-cleaning extensions: Gopher-rule composite filter,
 # token-entropy perplexity proxy, PII masking, cross-doc line dedup.
-# Ungated (gate budget); full oracles via tools/verify_local + pytest.
+# Full oracles via tools/verify_local + pytest.
 # ---------------------------------------------------------------------------
 
 
@@ -3475,7 +3404,6 @@ def token_entropy_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     """,
     tags=("llm", "text", "pii"),
-    gated=False,
 )
 def pii_mask_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII scrubbing: emails then phone-shaped digit groups redacted with
@@ -3649,8 +3577,6 @@ _CURATE_SQL = f"""
     FROM sel WHERE cnt = 4
     """,
     tags=("llm", "text", "dedup", "fingerprint"),
-    # Full-oracle POOL entry (appended with the round-8 additions).
-    gated=False,
 )
 def winnow_fingerprints_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing fingerprints (MOSS, SIGMOD 2003) at k=8-token grams /
@@ -3698,7 +3624,6 @@ def winnow_fingerprints_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM g GROUP BY doc_id, grp
     """,
     tags=("llm", "dedup", "substring"),
-    gated=False,
 )
 def dup_spans_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact substring-level duplication spans (the Lee et al. 2021
@@ -3767,7 +3692,6 @@ def dup_spans_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY d.doc_id
     """,
     tags=("llm", "dedup", "substring"),
-    gated=False,
 )
 def cut_spans_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Apply substring-level dedup (the Lee et al. 2021 "cut" step
@@ -3810,7 +3734,6 @@ def cut_spans_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents d LEFT JOIN per USING (doc_id)
     """,
     tags=("llm", "text", "quality", "lm"),
-    gated=False,
 )
 def lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style LM quality signal: per-doc mean bigram log-probability
@@ -3952,7 +3875,6 @@ _FEATURES_SQL = f"""
     "corpus_features",
     oracle=_FEATURES_SQL,
     tags=("llm", "pipeline", "quality", "dedup", "sampling"),
-    gated=False,
 )
 def corpus_features_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The single-scan curation feature table (round-5 verdict's 100 TB
@@ -3976,7 +3898,6 @@ def corpus_features_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "corpus_curate_fast",
     oracle=_CURATE_SQL,
     tags=("llm", "pipeline", "quality", "dedup", "sampling"),
-    gated=False,
 )
 def corpus_curate_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """corpus_curate's result from ONE corpus scan: filter the
@@ -4004,7 +3925,6 @@ def corpus_curate_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     """,
     tags=("llm", "scoring", "classifier"),
-    gated=False,
 )
 def model_score_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classifier-filter scoring (the GPT-3/LLaMA quality-classifier
@@ -4091,7 +4011,6 @@ def containment_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents d LEFT JOIN per USING (doc_id)
     """,
     tags=("llm", "sampling", "selection", "dsir"),
-    gated=False,
 )
 def dsir_select_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR importance selection (Xie et al. 2023): weight every doc by
@@ -4149,7 +4068,6 @@ def dsir_select_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM tiled
     """,
     tags=("llm", "text", "quality", "lm", "ccnet"),
-    gated=False,
 )
 def ccnet_buckets_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet's head/middle/tail corpus split: per-source NTILE(3) over
@@ -4201,7 +4119,6 @@ def ccnet_buckets_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents d LEFT JOIN hits h USING (doc_id)
     """,
     tags=("llm", "decontamination", "bloom"),
-    gated=False,
 )
 def bloom_decontaminate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Eval-set decontamination through an m-bit bloom filter (the Dolma
@@ -4268,7 +4185,6 @@ def bloom_decontaminate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lab
     """,
     tags=("llm", "dedup", "graph", "policy"),
-    gated=False,
 )
 def dedup_keep_best_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical-doc keep policy over near-dup clusters: where
@@ -4320,7 +4236,6 @@ def dedup_keep_best_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             <= lpad(lower(to_hex(thr.thr_int)), 4, '0')
     """,
     tags=("llm", "sampling", "mixing", "tokens"),
-    gated=False,
 )
 def token_mix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """domain_mix with the budget in TOKENS — how mixtures are actually
@@ -4375,7 +4290,6 @@ def token_mix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM w
     """,
     tags=("llm", "pipeline", "packing", "pretraining"),
-    gated=False,
 )
 def corpus_to_shards_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The END-TO-END corpus-preparation pipeline as one composed query:
@@ -4387,14 +4301,14 @@ def corpus_to_shards_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     user of the engine actually runs: raw corpus in, training-shard
     manifest out, one plan end to end — curation costs one corpus scan
     (plan-guarded via corpus_features), packing adds one hash exchange
-    on shard, and every stage is the SAME operator the standalone gated
+    on shard, and every stage is the SAME operator the standalone catalog
     queries verify. Fully SQL-expressible, so the whole pipeline is one
     hash-checked oracle row.
 
     Scan accounting: TWO corpus scans total — one into the feature cache
     (curation), one re-reading kept docs' text for token counting at
     pack time (the feature table deliberately doesn't carry text; its
-    schema is this round's gated corpus_features contract). The pack-time
+    schema is the corpus_features contract). The pack-time
     scan is keep-filtered and pruned to (doc_id, text). Plan-guarded in
     tests/test_packing.py: the post-materialization plan holds exactly
     one file scan."""
@@ -4429,7 +4343,6 @@ def corpus_to_shards_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM base
     """,
     tags=("llm", "packing", "pretraining", "shuffle"),
-    gated=False,
 )
 def shuffle_shards_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic global training-order shuffle: md5(id) shuffle keys
@@ -4458,7 +4371,6 @@ def shuffle_shards_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM fp JOIN k USING (media_fp)
     """,
     tags=("llm", "multimodal", "dedup"),
-    gated=False,
 )
 def media_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact media dedup by payload checksum (the LAION-style stage:
@@ -4507,7 +4419,6 @@ def media_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) WHERE rank <= 5
     """,
     tags=("llm", "similarity", "contrastive"),
-    gated=False,
 )
 def hard_negatives_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hard-negative mining for contrastive training (the DPR/ANCE
@@ -4561,7 +4472,6 @@ def _cms_oracle(depth: int, width: int, topk: int) -> str:
     "heavy_hitters_cms",
     oracle=_cms_oracle(depth=4, width=256, topk=20),
     tags=("llm", "sketch", "events"),
-    gated=False,
 )
 def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 heaviest event emitters ranked by COUNT-MIN ESTIMATE
@@ -4613,7 +4523,6 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM nodes GROUP BY node
     """,
     tags=("llm", "dedup", "graph"),
-    gated=False,
 )
 def dup_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc triangle support in the >=0.5-Jaccard near-dup graph —
@@ -4771,7 +4680,6 @@ def term_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY n_cooc DESC, pair LIMIT 100
     """,
     tags=("llm", "text", "cooccurrence"),
-    gated=False,
 )
 def skipgram_cooc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-100 window-2 skip-gram co-occurrence pairs with PPM lift —
@@ -4803,7 +4711,6 @@ def skipgram_cooc(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM m GROUP BY doc_id
     """,
     tags=("llm", "text", "search"),
-    gated=False,
 )
 def phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-phrase retrieval ('table hash' adjacent) via a positional
@@ -4846,7 +4753,6 @@ def phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY comp.canon
     """,
     tags=("llm", "dedup", "fuzzy", "graph"),
-    gated=False,
 )
 def name_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity resolution END-TO-END: the blocked fuzzy name matches
@@ -4928,7 +4834,6 @@ def name_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM occ
     """,
     tags=("llm", "text", "search"),
-    gated=False,
 )
 def keyword_contexts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KWIC (keyword-in-context) extraction for the term 'spark': every
@@ -4998,7 +4903,6 @@ def _lang_confusion_oracle() -> str:
     "lang_confusion",
     oracle=_lang_confusion_oracle(),
     tags=("llm", "text", "quality"),
-    gated=False,
 )
 def lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Label-quality audit: the confusion matrix of the marker-argmax
@@ -5058,7 +4962,6 @@ def lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN nrm nb ON nb.source = source_b
     """,
     tags=("llm", "mixing", "similarity"),
-    gated=False,
 )
 def domain_unigram_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise cosine similarity between the SOURCES' unigram count
@@ -5151,7 +5054,6 @@ def domain_unigram_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY ds.doc_id
     """,
     tags=("llm", "dedup", "quality"),
-    gated=False,
 )
 def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document n-gram novelty: the share of a doc's distinct
@@ -5221,7 +5123,6 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM per GROUP BY label
     """,
     tags=("llm", "embeddings", "quality", "audit"),
-    gated=False,
 )
 def embedding_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label audit of embedding vector norms — the pre-index sanity
@@ -5292,7 +5193,6 @@ def embedding_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM per GROUP BY label
     """,
     tags=("llm", "embedding", "projection"),
-    gated=False,
 )
 def jl_projection_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Johnson-Lindenstrauss random-sign projection 64 → 16 dims with a
@@ -5391,7 +5291,6 @@ def jl_projection_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE d.n_chars < b.b10 OR d.n_chars > b.b90
     """,
     tags=("llm", "quality", "audit"),
-    gated=False,
 )
 def length_tail_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Documents outside their SOURCE's exact [p10, p90] length band —
@@ -5475,7 +5374,6 @@ def _lang_margin_oracle() -> str:
     "lang_id_margin",
     oracle=_lang_margin_oracle(),
     tags=("llm", "text", "quality"),
-    gated=False,
 )
 def lang_id_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-ID CONFIDENCE: the margin between the best and runner-up
@@ -5520,7 +5418,6 @@ def lang_id_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unrolled. Exact-equality pin against a pure local peeling
     # reference in tests/test_graph.py instead.
     tags=("llm", "dedup", "graph"),
-    gated=False,
 )
 def dup_cores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-core decomposition of the near-dup pair graph: coreness per
@@ -5563,7 +5460,6 @@ def dup_cores(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM w
     """,
     tags=("llm", "mixing", "sampling"),
-    gated=False,
 )
 def domain_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-flattened data-mixing weights per source domain — the
@@ -5636,7 +5532,6 @@ def domain_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents GROUP BY lang
     """,
     tags=("llm", "tokenizer", "text"),
-    gated=False,
 )
 def token_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer fertility per language: characters per BPE-ish token and
@@ -5715,7 +5610,6 @@ def token_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1
     """,
     tags=("llm", "dedup", "report"),
-    gated=False,
 )
 def dedup_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dedup BUSINESS CASE in one table: per source domain, how many
@@ -5810,7 +5704,6 @@ def dedup_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY ks.k
     """,
     tags=("llm", "tokenizer", "vocab"),
-    gated=False,
 )
 def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus coverage of a top-k frequency vocabulary at k = 100 / 1k /
@@ -5908,7 +5801,6 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM norm GROUP BY 1, 2
     """,
     tags=("llm", "dedup", "provenance"),
-    gated=False,
 )
 def dup_cross_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Provenance structure of the near-dup pair graph: for every
@@ -6055,7 +5947,6 @@ _CALIB_ORACLE = f"""
     "calibrated_quality_scores",
     oracle=_CALIB_ORACLE,
     tags=("llm", "quality", "calibration", "dedup"),
-    gated=False,
 )
 def calibrated_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Isotonic calibration APPLIED (closing the isotonic_revenue loop,
@@ -6179,7 +6070,6 @@ def _calib_index_dir(spark: SparkSession, sf_dir: str) -> str:
     # re-derived labels — and everything downstream — match exactly
     oracle=_CALIB_ORACLE,
     tags=("streaming", "quality", "calibration", "dedup"),
-    gated=False,
 )
 def calibrated_quality_scores_live(
     spark: SparkSession, sf_dir: str
@@ -6226,7 +6116,6 @@ _CURATE_CALIB_SQL = f"""
     "corpus_curate_calibrated",
     oracle=_CURATE_CALIB_SQL,
     tags=("llm", "pipeline", "quality", "calibration", "dedup"),
-    gated=False,
 )
 def corpus_curate_calibrated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The calibration loop CLOSED into curation (r13 verdict #5):
@@ -6336,7 +6225,6 @@ _SKYLINE_ORACLE = f"""
     "doc_skyline",
     oracle=_SKYLINE_ORACLE,
     tags=("llm", "quality", "selection", "skyline"),
-    gated=False,
 )
 def doc_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pareto frontier (2-D skyline) over per-doc (quality score,
@@ -6451,7 +6339,6 @@ def _spectral_oracle(iters: int = 3, dim: int = 64) -> str:
     "embed_spectral_audit",
     oracle=_spectral_oracle(),
     tags=("llm", "embedding", "quality", "spectral"),
-    gated=False,
 )
 def embed_spectral_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dominant-direction audit of the embedding corpus: a 3-step
@@ -6533,7 +6420,6 @@ def _gram_index_dir(spark: SparkSession, sf_dir: str) -> str:
     # integers exactly at any batch split
     oracle=_spectral_oracle(),
     tags=("streaming", "embedding", "quality", "spectral"),
-    gated=False,
 )
 def embed_spectral_audit_live(
     spark: SparkSession, sf_dir: str
@@ -6630,7 +6516,6 @@ def _pca_oracle(iters: int = 3, dim: int = 64) -> str:
     "embed_pca_audit",
     oracle=_pca_oracle(),
     tags=("llm", "embedding", "quality", "spectral", "pca"),
-    gated=False,
 )
 def embed_pca_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CENTERED spectral audit — the true top PRINCIPAL direction:

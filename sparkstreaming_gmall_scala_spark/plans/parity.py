@@ -403,11 +403,6 @@ def customers_no_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
                         AND o.o_orderstatus = 'F')
     """,
     tags=("parity", "join"),
-    # Honest-name alias of customers_no_orders (round-7 verdict #8): the
-    # old name stays as the driver-facing CORRECTNESS-history key; this
-    # is the name new consumers should reach for. Ungated twin — same
-    # plan, same oracle, checked in-suite by test_oracle_parity.
-    gated=False,
 )
 def customers_no_fulfilled_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customers with no fulfilled ('F') orders — the honest name for
@@ -422,10 +417,6 @@ def customers_no_fulfilled_orders(spark: SparkSession, sf_dir: str) -> DataFrame
     WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
     """,
     tags=("parity", "join"),
-    # The '1' branch of the same J5 existence probe as the gated
-    # customers_no_orders; ungated (round 5) to free a gate row for the
-    # corpus-quality ops.
-    gated=False,
 )
 def customers_with_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-semi join — the '1' branch of the same existence probe."""
@@ -566,10 +557,6 @@ def windowed_order_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l_orderkey
     """,
     tags=("parity", "dedup"),
-    # round-6 rotation: the J2 dedup semantics are subsumed by the gated
-    # windowed_order_join (whose oracle dedups the window re-emissions);
-    # in-suite parity keeps this exact check. Slot freed for round-5 work.
-    gated=False,
 )
 def join_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference re-emits each joined pair up to 4× (sliding window
@@ -723,7 +710,6 @@ def returned_item_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY n.n_name
     """,
     tags=("parity", "join", "agg"),
-    gated=False,
 )
 def local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: revenue per nation where the customer and the
@@ -812,7 +798,6 @@ _SCD2_SEG_CTES = """s AS (
     WINDOW w2 AS (PARTITION BY o_custkey ORDER BY grp)
     """,
     tags=("parity", "scd2", "window"),
-    gated=False,
 )
 def customer_status_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD Type-2 history of each customer's order status: consecutive
@@ -857,7 +842,6 @@ def customer_status_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN customer c ON c.c_custkey = o.o_custkey
     """,
     tags=("parity", "join", "agg", "having"),
-    gated=False,
 )
 def large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape: orders whose total line quantity exceeds a
@@ -900,7 +884,6 @@ def large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY year(o_orderdate)
     """,
     tags=("parity", "pivot", "agg"),
-    gated=False,
 )
 def order_priority_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Status counts pivoted to columns per order year — the reshape
@@ -944,7 +927,6 @@ def order_priority_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND (d.eff_to IS NULL OR o.o_orderdate < d.eff_to)
     """,
     tags=("parity", "scd2", "asof", "join"),
-    gated=False,
 )
 def orders_with_status_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every order joined to the SCD2 status version VALID AT its own
@@ -1002,7 +984,6 @@ def orders_with_status_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE status_t1 IS DISTINCT FROM status_t2
     """,
     tags=("parity", "scd2", "diff"),
-    gated=False,
 )
 def dim_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot DIFF of a dimension between two as-of instants, answered
@@ -1064,7 +1045,6 @@ def dim_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_orderstatus
     """,
     tags=("parity", "cdc", "refresh"),
-    gated=False,
 )
 def cdc_refresh_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-style refresh (RF1 inserts + RF2 deletes) driven through

@@ -28,10 +28,6 @@ from .catalog import register
     FROM events GROUP BY event_type
     """,
     tags=("scale", "skew", "agg"),
-    # round-6 rotation: the salting technique's driver row stays via
-    # skew_salted_join (gated); the agg variant's real signal is the
-    # pytest equality with its unsalted twin + in-suite parity.
-    gated=False,
 )
 def skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-phase salted aggregation over the events stream table: a hot
@@ -232,7 +228,6 @@ def revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the exact form instead (the dau_approx pattern).
     oracle=None,
     tags=("scale", "agg", "quantile", "approx"),
-    gated=False,
 )
 def price_quantiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100 TB form of ``price_quantiles``: ``approx_percentile`` keeps
@@ -324,7 +319,6 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     GROUP BY 1
     """,
     tags=("scale", "layout", "join"),
-    gated=False,
 )
 def bucketed_customer_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The storage-level co-located join — Spark's one TRUE shuffle-free
@@ -371,7 +365,6 @@ def bucketed_customer_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1
     """,
     tags=("scale", "layout", "prune", "bucket"),
-    gated=False,
 )
 def bucketed_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BUCKET PRUNING — the third pruning form next to static partition
@@ -479,7 +472,6 @@ from .parity import _REV_SQL as _REV_SQL_OL  # noqa: E402
     FROM per_order GROUP BY 1
     """,
     tags=("scale", "layout", "join"),
-    gated=False,
 )
 def bucketed_order_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The co-located FACT × FACT join on the reference's own J1 shape —
@@ -532,7 +524,6 @@ def bucketed_order_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2
     """,
     tags=("scale", "layout", "prune"),
-    gated=False,
 )
 def events_day_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STATIC partition pruning — the time-slice read every operational
@@ -585,7 +576,6 @@ def events_day_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2
     """,
     tags=("scale", "layout", "prune", "dpp"),
-    gated=False,
 )
 def events_dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DYNAMIC partition pruning — the star-schema scan killer: full
@@ -641,7 +631,6 @@ _ZEXPR = _z_expr_sql(("l_partkey", "l_suppkey"), bits=16)
     FROM lineitem
     """,
     tags=("scale", "layout"),
-    gated=False,
 )
 def zorder_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Morton (z-order) code of every lineitem over (l_partkey,
@@ -667,7 +656,6 @@ from ..operators.histogram import histogram_oracle_sql as _hist_oracle  # noqa: 
     "value_histogram",
     oracle=_hist_oracle("events", "value", 32),
     tags=("scale", "sketch", "agg"),
-    gated=False,
 )
 def value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """32-bin fixed histogram of event values with in-query bounds —
@@ -714,7 +702,6 @@ def value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     """,
     tags=("scale", "profile", "agg"),
-    gated=False,
 )
 def table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANALYZE-style column profile of orders (row count, null count,
@@ -783,7 +770,6 @@ def table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     """,
     tags=("scale", "quality", "agg"),
-    gated=False,
 )
 def expectations_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Declarative data-expectations audit (the Great-Expectations /
@@ -848,7 +834,6 @@ def expectations_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders o
     """,
     tags=("scale", "quality", "join", "agg"),
-    gated=False,
 )
 def fk_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Referential-integrity audit of the star schema: orphan counts for
@@ -957,7 +942,6 @@ def fk_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
                  ROWS UNBOUNDED PRECEDING)
     """,
     tags=("scale", "window", "ratio-to-report", "agg"),
-    gated=False,
 )
 def revenue_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ABC/Pareto classification of brands by revenue: cumulative share
@@ -1024,7 +1008,6 @@ def revenue_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) WHERE rk <= 50
     """,
     tags=("scale", "sampling", "window"),
-    gated=False,
 )
 def events_sample_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACTLY 50 events per event_type, deterministically
@@ -1070,7 +1053,6 @@ def events_sample_k(spark: SparkSession, sf_dir: str) -> DataFrame:
                      / (m.n - 1))) > 3.0
     """,
     tags=("scale", "stats", "agg", "quality"),
-    gated=False,
 )
 def value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type 3-sigma outlier events — the statistical quality filter
@@ -1126,7 +1108,6 @@ def value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) WHERE rk <= 50
     """,
     tags=("scale", "sampling", "weighted", "window"),
-    gated=False,
 )
 def weighted_doc_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACTLY 50 docs per language sampled with probability proportional
@@ -1172,7 +1153,6 @@ _T = _split_thresholds(_SPLITS)  # [('train', 0xe666), ('val', 0xf333), ('test',
     GROUP BY 1, 2
     """,
     tags=("scale", "sampling", "split"),
-    gated=False,
 )
 def corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """90/5/5 train/val/test assignment audit, per language
@@ -1222,7 +1202,6 @@ def corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE 2 * dev2x > 3 * mad4x
     """,
     tags=("scale", "stats", "quality"),
-    gated=False,
 )
 def mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Median/MAD robust outliers per event_type — the heavy-tail-safe
@@ -1282,7 +1261,6 @@ def mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM e WHERE e6 > 0
     """,
     tags=("scale", "stats", "agg"),
-    gated=False,
 )
 def type_hour_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chi-squared independence cells for the event_type × hour-of-day
@@ -1356,7 +1334,6 @@ def type_hour_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM picks
     """,
     tags=("scale", "skew", "profile"),
-    gated=False,
 )
 def key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew diagnostic for lineitem's supplier join key — the planning
@@ -1418,7 +1395,6 @@ def key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE n1 > 1 AND nt - n1 > 1
     """,
     tags=("scale", "stats", "experiment"),
-    gated=False,
 )
 def welch_t_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Welch two-sample t-statistic per nation (that nation's order
@@ -1517,7 +1493,6 @@ def welch_t_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM a WHERE CAST(n AS HUGEINT) * sxx - sx * sx > 0
     """,
     tags=("scale", "stats", "regression"),
-    gated=False,
 )
 def revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-nation least-squares revenue trend (cents/day, ppm-floored):
@@ -1597,7 +1572,6 @@ def revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM d GROUP BY decile
     """,
     tags=("scale", "stats", "percentile"),
-    gated=False,
 )
 def order_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decile profile of order values (n/min/max/sum per value-bucketed
@@ -1650,7 +1624,6 @@ def order_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM m WHERE n > 1
     """,
     tags=("scale", "stats", "correlation"),
-    gated=False,
 )
 def spend_orders_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spearman rank correlation between each customer's order COUNT and
@@ -1709,7 +1682,6 @@ def spend_orders_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM pick WHERE rn = 1
     """,
     tags=("scale", "stats", "changepoint"),
-    gated=False,
 )
 def revenue_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUSUM change-point per nation: the day maximizing the cumulative
@@ -1773,7 +1745,6 @@ def revenue_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM w JOIN b ON w.t = b.t JOIN tot ON w.t = tot.t
     """,
     tags=("scale", "stats", "robust"),
-    gated=False,
 )
 def winsorized_value_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type 5/95-winsorized mean of event values — the robust-stats
@@ -1873,7 +1844,6 @@ def winsorized_value_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM m WHERE n > 0 AND sx > 0
     """,
     tags=("scale", "stats", "concentration"),
-    gated=False,
 )
 def revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gini coefficient of per-customer spend (revenue concentration):
@@ -1962,7 +1932,6 @@ def revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM f JOIN last ON f.n_name = last.n_name AND f.rn = last.n
     """,
     tags=("scale", "stats", "forecast"),
-    gated=False,
 )
 def revenue_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-nation exponentially-weighted moving average of daily revenue
@@ -2033,7 +2002,6 @@ def revenue_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM f JOIN last ON f.n_name = last.n_name AND f.rn = last.n
     """,
     tags=("scale", "stats", "forecast"),
-    gated=False,
 )
 def holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holt double-exponential smoothing of per-nation daily revenue
@@ -2134,7 +2102,6 @@ def holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM scored
     """,
     tags=("scale", "scoring", "segmentation"),
-    gated=False,
 )
 def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM customer segmentation — recency/frequency/monetary quintile
@@ -2253,7 +2220,6 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM filled f JOIN coh ON coh.c0 = f.c0
     """,
     tags=("scale", "cohort", "window"),
-    gated=False,
 )
 def cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort LTV matrix: customers grouped by first-order month, average
@@ -2367,7 +2333,6 @@ def cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ranked WHERE rn = (m + 1) // 2
     """,
     tags=("scale", "regression", "robust"),
-    gated=False,
 )
 def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theil-Sen robust trend per nation: the MEDIAN of all pairwise
@@ -2484,7 +2449,6 @@ _BENFORD_PPM = (
     FROM e LEFT JOIN c ON c.digit = e.digit CROSS JOIN t
     """,
     tags=("scale", "quality", "audit"),
-    gated=False,
 )
 def benford_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benford's-law first-digit audit of order amounts — the classic
@@ -2575,7 +2539,6 @@ def benford_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM u
     """,
     tags=("scale", "quality", "audit"),
-    gated=False,
 )
 def fd_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate-functional-dependency audit: for each CANDIDATE rule
@@ -2644,7 +2607,6 @@ def fd_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM per
     """,
     tags=("scale", "concentration", "audit"),
-    gated=False,
 )
 def hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Herfindahl-Hirschman revenue concentration per nation: Σ share²
@@ -2727,7 +2689,6 @@ def hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
                      / (m.n - 1))) > 3.0
     """,
     tags=("scale", "stats", "seasonal", "quality"),
-    gated=False,
 )
 def seasonal_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-sigma outliers against a SEASONAL baseline — each event scored
@@ -2810,7 +2771,6 @@ def seasonal_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM d CROSS JOIN nn
     """,
     tags=("scale", "stats", "test"),
-    gated=False,
 )
 def ks_spend_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample Kolmogorov-Smirnov test between the order-value
@@ -2933,7 +2893,6 @@ def ks_spend_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM agg
     """,
     tags=("scale", "stats", "test"),
-    gated=False,
 )
 def mwu_spend_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample Mann-Whitney U (Wilcoxon rank-sum) between fulfilled
@@ -3087,7 +3046,6 @@ def mwu_spend_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE nd.n_days >= 2
     """,
     tags=("scale", "stats", "trend"),
-    gated=False,
 )
 def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Kendall trend TEST per nation over the trailing-365-day
@@ -3222,7 +3180,6 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM pairs CROSS JOIN tx CROSS JOIN ty
     """,
     tags=("scale", "stats", "correlation"),
-    gated=False,
 )
 def kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kendall τ-b between daily order COUNT and daily revenue — the
@@ -3328,7 +3285,6 @@ def kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM runs
     """,
     tags=("scale", "stats", "test"),
-    gated=False,
 )
 def revenue_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wald–Wolfowitz runs test on daily revenue: are above/below-median
@@ -3429,7 +3385,6 @@ def _dow_anova_sql() -> str:
     "dow_anova",
     oracle=_dow_anova_sql(),
     tags=("scale", "stats", "seasonal"),
-    gated=False,
 )
 def dow_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-way ANOVA of daily revenue by day-of-week: eta² (share of
@@ -3563,7 +3518,6 @@ def dow_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE n_o IS NOT NULL
     """,
     tags=("scale", "stats", "test"),
-    gated=False,
 )
 def levene_bf_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brown-Forsythe variance-homogeneity test of order value across
@@ -3674,7 +3628,6 @@ def levene_bf_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM w WHERE prev_cents IS NOT NULL
     """,
     tags=("scale", "window", "reporting"),
-    gated=False,
 )
 def revenue_mom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Month-over-month revenue growth — the board-deck table (monthly
@@ -3747,7 +3700,6 @@ def revenue_mom(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM per CROSS JOIN tot
     """,
     tags=("scale", "concentration", "percentile"),
-    gated=False,
 )
 def spend_lorenz(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lorenz-curve points of per-customer spend: cumulative revenue
@@ -3878,7 +3830,6 @@ _ISOTONIC_ORACLE = """
     "isotonic_revenue",
     oracle=_ISOTONIC_ORACLE,
     tags=("scale", "stats", "calibration"),
-    gated=False,
 )
 def isotonic_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Isotonic (monotone non-decreasing) regression of daily revenue
@@ -3991,7 +3942,6 @@ def isotonic_calibration_eval(bins: DataFrame) -> DataFrame:
     WHERE rule1 OR (side <> 0 AND run_len >= 8)
     """,
     tags=("scale", "quality", "monitoring"),
-    gated=False,
 )
 def spc_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Statistical-process-control violations on daily revenue — the two
@@ -4058,7 +4008,6 @@ def spc_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM chi CROSS JOIN n CROSS JOIN dims CROSS JOIN dims2
     """,
     tags=("scale", "stats", "test"),
-    gated=False,
 )
 def cramers_v_type_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cramér's V — the 0..1 EFFECT SIZE for the event-type × hour
@@ -4158,7 +4107,6 @@ def cramers_v_type_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM j GROUP BY 1
     """,
     tags=("scale", "quality", "audit"),
-    gated=False,
 )
 def order_price_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Invoice reconciliation audit: recompute every order's total from
@@ -4246,7 +4194,6 @@ def order_price_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM halves CROSS JOIN tot
     """,
     tags=("scale", "share", "drift"),
-    gated=False,
 )
 def share_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue-share drift per brand between the first and second half
@@ -4336,7 +4283,6 @@ def share_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM hist
     """,
     tags=("scale", "profile", "basket"),
-    gated=False,
 )
 def basket_size_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-width distribution: how many orders have k line items, with

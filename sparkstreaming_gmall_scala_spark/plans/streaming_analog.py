@@ -47,9 +47,6 @@ def dau(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=None,  # HLL estimates are engine-specific by construction; the
     # pytest bound test checks |approx - exact| / exact <= 5%.
     tags=("streaming-analog", "dedup", "agg", "approx"),
-    # round-6 rotation: a rows-only driver row carries less signal than a
-    # hash-green one; the 5% error bound lives in pytest. Slot freed.
-    gated=False,
 )
 def dau_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DAU via HyperLogLog++ (approx_count_distinct, rsd=2%) — the 100 TB
@@ -89,7 +86,6 @@ def dau_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM agg
     """,
     tags=("streaming-analog", "sketch", "distinct"),
-    gated=False,
 )
 def kmv_distinct_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-day distinct users via a K-Minimum-Values sketch (k = 64) —
@@ -202,7 +198,6 @@ def _kmv_index_dir(spark: SparkSession, sf_dir: str) -> str:
     FROM agg
     """,
     tags=("streaming", "sketch", "distinct"),
-    gated=False,
 )
 def kmv_distinct_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """kmv_distinct_daily's estimate answered from the STREAMING k-min
@@ -284,7 +279,6 @@ def kmv_distinct_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM est
     """,
     tags=("streaming-analog", "sketch", "setops"),
-    gated=False,
 )
 def kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV sketch SET ALGEBRA: estimate |A|, |B|, |A∪B| and |A∩B| for
@@ -513,7 +507,6 @@ _HOLT_ORACLE = """
     "revenue_ewma_live",
     oracle=_EWMA_ORACLE,
     tags=("streaming", "stats", "forecast"),
-    gated=False,
 )
 def revenue_ewma_live_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """revenue_ewma answered from the STREAMING nation-daily index: the
@@ -533,7 +526,6 @@ def revenue_ewma_live_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "holt_forecast_live",
     oracle=_HOLT_ORACLE,
     tags=("streaming", "stats", "forecast"),
-    gated=False,
 )
 def holt_forecast_live_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """holt_forecast answered from the STREAMING nation-daily index —
@@ -561,10 +553,6 @@ def holt_forecast_live_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) WHERE rn = 1
     """,
     tags=("streaming-analog", "dedup", "window"),
-    # Same A2 streaming-distinct family as the gated dau (per-day distinct
-    # devices); ungated (round 5) to free a gate row for the corpus-quality
-    # ops.
-    gated=False,
 )
 def dau_first_visit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The row the reference actually emits per (day, device): the FIRST
@@ -689,10 +677,6 @@ def session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM flagged
     """,
     tags=("streaming-analog", "window", "session"),
-    # Same gap-sessionization behavior as the gated session_stats (the
-    # session_window streaming twin); ungated to keep every distinct
-    # behavior inside the driver's 50-row gate budget.
-    gated=False,
 )
 def sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """30-min-gap sessionization: lag to flag gap starts, running sum to
@@ -764,7 +748,6 @@ def hourly_event_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events GROUP BY 1, 2
     """,
     tags=("streaming", "layout", "exactly-once", "ingest"),
-    gated=False,
 )
 def events_ingest_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-once through the STORAGE LAYOUT instead of an offset
@@ -806,10 +789,9 @@ def events_ingest_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2
     """,
     tags=("streaming", "layout", "compaction", "ingest"),
-    gated=False,
 )
 def events_compacted_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The compaction LIFECYCLE gated end-to-end (r13 verdict #6): a
+    """The compaction LIFECYCLE oracle-checked end-to-end (r13 verdict #6): a
     deliberately FRAGMENTED 3-batch partition ingest (8 files per dt dir
     per batch — what a multi-executor streaming writer leaves), a
     replayed middle batch, then small-file compaction to one file per
@@ -859,7 +841,6 @@ def events_compacted_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events, s GROUP BY 1
     """,
     tags=("streaming", "layout", "schema-evolution", "ingest"),
-    gated=False,
 )
 def events_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCHEMA EVOLUTION across partitions — the normal state of any
@@ -892,7 +873,6 @@ def events_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=None,  # Datasketches HLL has no DuckDB twin; pytest pins the
     # ≤5% error vs exact rolling distinct and the lossless merge
     tags=("streaming-analog", "sketch", "events"),
-    gated=False,
 )
 def rolling_mau_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling 30-day distinct users per day, answered ENTIRELY from
@@ -940,7 +920,6 @@ def rolling_mau_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM cov WHERE rn = 1
     """,
     tags=("streaming-analog", "sketch", "quantile"),
-    gated=False,
 )
 def value_quantiles_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """p50/p95/p99 of event values answered from the MERGEABLE fixed-bin
@@ -1008,7 +987,6 @@ def value_quantiles_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM cov WHERE rn = 1
     """,
     tags=("streaming-analog", "sketch", "quantile", "keyed"),
-    gated=False,
 )
 def type_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type p50/p95/p99 from the KEYED mergeable histogram —
@@ -1061,7 +1039,6 @@ def type_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN f fb ON fb.b = brand_b
     """,
     tags=("streaming", "affinity", "basket"),
-    gated=False,
 )
 def brand_affinity_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """brand_affinity answered from the STREAMING counter indexes
@@ -1166,7 +1143,6 @@ def _basket_index_dirs(spark: SparkSession, sf_dir: str) -> list[str]:
     JOIN f fb ON fb.b = consequent
     """,
     tags=("streaming", "affinity", "rules"),
-    gated=False,
 )
 def assoc_rules_live_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """assoc_rules answered from the STREAMING counter indexes (r11
@@ -1226,7 +1202,6 @@ def assoc_rules_live_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE rule1 OR (side <> 0 AND run_len >= 8)
     """,
     tags=("streaming", "quality", "monitoring"),
-    gated=False,
 )
 def spc_violations_live_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """spc_violations answered from the STREAMING daily index
@@ -1309,7 +1284,6 @@ def _spc_index_dirs(spark: SparkSession, sf_dir: str) -> str:
     FROM dev GROUP BY dow
     """,
     tags=("streaming", "seasonal", "decompose"),
-    gated=False,
 )
 def dow_seasonal_factors_live_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dow_seasonal_factors answered from the STREAMING daily index —
@@ -1335,7 +1309,6 @@ def dow_seasonal_factors_live_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (tests/test_isotonic.py), the mart fold is exact integer addition.
     oracle=_ISOTONIC_ORACLE,
     tags=("streaming", "stats", "calibration"),
-    gated=False,
 )
 def isotonic_revenue_live_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """isotonic_revenue answered from the STREAMING daily index — the

@@ -223,7 +223,6 @@ def user_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM k GROUP BY hour
     """,
     tags=("temporal", "events", "agg"),
-    gated=False,
 )
 def event_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly OHLC bars over purchase values — the first/last-by-event-
@@ -257,7 +256,6 @@ def event_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events WHERE event_type = 'purchase'
     """,
     tags=("temporal", "window", "frame"),
-    gated=False,
 )
 def user_value_ma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user trailing 7-event moving average/sum/count of purchase
@@ -304,7 +302,6 @@ def user_value_ma(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     """,
     tags=("temporal", "window", "range-frame"),
-    gated=False,
 )
 def user_spend_range_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per purchase, the user's trailing 7 CALENDAR-DAY spend — the
@@ -354,7 +351,6 @@ def user_spend_range_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     """,
     tags=("temporal", "window", "rank"),
-    gated=False,
 )
 def order_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Where does each order's value sit within its priority class —
@@ -404,7 +400,6 @@ def order_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM grid g LEFT JOIN p ON p.user_id = g.user_id AND p.hr = g.hr
     """,
     tags=("temporal", "gap-fill", "window"),
-    gated=False,
 )
 def hourly_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-series regularization: each user's purchase history as a
@@ -534,7 +529,6 @@ _SESS_SQL = """
       AND next_b > bucket_start + INTERVAL 1 DAY
     """,
     tags=("temporal", "interval", "sweep"),
-    gated=False,
 )
 def session_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Peak concurrent user sessions per day — the interval-STABBING
@@ -592,7 +586,6 @@ def session_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o.outage_start, o.n_errors
     """,
     tags=("temporal", "interval", "join"),
-    gated=False,
 )
 def sessions_in_outage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessions touching each outage hour (hours with >= 2 error
@@ -677,7 +670,6 @@ def sessions_in_outage(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM clipped GROUP BY user_id, b
     """,
     tags=("temporal", "interval", "twap"),
-    gated=False,
 )
 def twap_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user DAILY time-weighted average of the event value level —
@@ -730,7 +722,6 @@ def twap_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM alloc GROUP BY channel
     """,
     tags=("temporal", "attribution", "join"),
-    gated=False,
 )
 def revenue_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Linear multi-touch attribution: every purchase's value splits
@@ -802,7 +793,6 @@ def revenue_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM x GROUP BY 1
     """,
     tags=("temporal", "window", "hopping"),
-    gated=False,
 )
 def hopping_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding/hopping-window aggregate: 6-hour windows advancing every
@@ -866,7 +856,6 @@ def hopping_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0
     """,
     tags=("temporal", "stats", "corr"),
-    gated=False,
 )
 def daily_value_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-day Pearson correlation between two hourly series — purchase
@@ -955,7 +944,6 @@ def daily_value_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM c JOIN tot USING (from_type)
     """,
     tags=("temporal", "sequence", "markov"),
-    gated=False,
 )
 def event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order Markov transition matrix over per-user event
@@ -1021,7 +1009,6 @@ def event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lag CROSS JOIN tot GROUP BY band, n
     """,
     tags=("temporal", "asof", "funnel"),
-    gated=False,
 )
 def conversion_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conversion-latency distribution: for every purchase, the time
@@ -1081,7 +1068,6 @@ def conversion_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o.d
     """,
     tags=("temporal", "events", "window-distinct"),
-    gated=False,
 )
 def rolling_dau_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT trailing-7-day distinct users per active day — the
@@ -1112,7 +1098,6 @@ def rolling_dau_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1 ORDER BY n DESC, path LIMIT 25
     """,
     tags=("temporal", "events", "paths"),
-    gated=False,
 )
 def top_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-25 three-step user journeys (consecutive event-type paths,
@@ -1166,7 +1151,6 @@ def top_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE nearest_event_id IS NOT NULL AND abs(delta_us) <= 14400000000
     """,
     tags=("temporal", "events", "asof"),
-    gated=False,
 )
 def nearest_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Each purchase attributed to the NEAREST click by the same user
@@ -1215,7 +1199,6 @@ def nearest_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY a.s, b.s, ta.n, tb.n
     """,
     tags=("temporal", "events", "audience"),
-    gated=False,
 )
 def audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audience-segment overlap matrix: for every event-type pair, how
@@ -1325,7 +1308,6 @@ def audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM km WHERE d > 0
     """,
     tags=("temporal", "events", "survival"),
-    gated=False,
 )
 def user_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kaplan-Meier user-survival curve over activity lifetimes: a
@@ -1387,7 +1369,6 @@ def user_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM per
     """,
     tags=("temporal", "diversity", "profile"),
-    gated=False,
 )
 def user_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Behavioral diversity per user: the Simpson diversity index
@@ -1453,7 +1434,6 @@ def user_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
           / CAST(n AS DOUBLE) > 0
     """,
     tags=("temporal", "profile", "dispersion"),
-    gated=False,
 )
 def user_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inter-event burstiness per user: B = (σ−μ)/(σ+μ) over the user's
@@ -1539,7 +1519,6 @@ def user_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE n_pairs * sxx - sx * sx > 0 AND n_pairs * syy - sy * sy > 0
     """,
     tags=("temporal", "stats", "timeseries"),
-    gated=False,
 )
 def revenue_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lag-1..7 autocorrelation of daily revenue — the weekly-rhythm
@@ -1643,7 +1622,6 @@ def revenue_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY priority
     """,
     tags=("temporal", "quantiles", "ops"),
-    gated=False,
 )
 def ship_lag_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-to-ship cycle-time quartiles per order priority — the
@@ -1720,7 +1698,6 @@ def ship_lag_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM cum GROUP BY dow
     """,
     tags=("temporal", "quantiles", "seasonal"),
-    gated=False,
 )
 def dow_revenue_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily-revenue quartiles per day of week (0=Sunday, the portable
@@ -1805,7 +1782,6 @@ def dow_revenue_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE n_pairs * sxx - sx * sx > 0 AND n_pairs * syy - sy * sy > 0
     """,
     tags=("temporal", "stats", "timeseries"),
-    gated=False,
 )
 def lag_lead_xcorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lead-lag cross-correlation between daily purchase revenue and
@@ -1920,7 +1896,6 @@ def lag_lead_xcorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM cum
     """,
     tags=("temporal", "quantiles", "retention"),
-    gated=False,
 )
 def interorder_gap_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quartiles of the days-between-consecutive-orders distribution —
@@ -1989,7 +1964,6 @@ def interorder_gap_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM dev GROUP BY dow
     """,
     tags=("temporal", "seasonal", "decompose"),
-    gated=False,
 )
 def dow_seasonal_factors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Detrended weekly seasonal factors — the decomposition companion to

@@ -75,7 +75,6 @@ _QTY_SQL = "CAST(l_quantity AS DECIMAL(18,2))"
     GROUP BY o.o_orderpriority
     """,
     tags=("tpch", "semi-join", "agg"),
-    gated=False,
 )
 def late_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: how many orders per priority had at least one line
@@ -126,7 +125,6 @@ def late_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY n1.n_name, n2.n_name, year(l.l_shipdate)
     """,
     tags=("tpch", "join", "agg"),
-    gated=False,
 )
 def volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape: trade volume between two nations by year, either
@@ -207,7 +205,6 @@ def volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) GROUP BY o_year
     """,
     tags=("tpch", "join", "agg", "ratio"),
-    gated=False,
 )
 def market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape: NATION_2's share of PROMO-part revenue sold into
@@ -280,7 +277,6 @@ def market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) GROUP BY c_count
     """,
     tags=("tpch", "outer-join", "agg"),
-    gated=False,
 )
 def customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 shape: how many customers placed 0, 1, 2, … non-urgent
@@ -326,7 +322,6 @@ def customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l.l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
     """,
     tags=("tpch", "join", "agg", "ratio"),
-    gated=False,
 )
 def promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape: what percentage of a year's revenue came from
@@ -369,7 +364,6 @@ def promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE r.total_revenue = (SELECT max(total_revenue) FROM revenue)
     """,
     tags=("tpch", "agg", "scalar-subquery"),
-    gated=False,
 )
 def top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape: the supplier(s) with the quarter's highest
@@ -427,7 +421,6 @@ def top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) WHERE l_quantity < 0.2 * part_avg_qty
     """,
     tags=("tpch", "join", "window", "agg"),
-    gated=False,
 )
 def small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17 shape: lost yearly revenue if small-quantity orders for
@@ -485,7 +478,6 @@ def small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
            AND l.l_quantity BETWEEN 20 AND 30)
     """,
     tags=("tpch", "join", "disjunctive"),
-    gated=False,
 )
 def disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape: revenue matching any of three brand/size/quantity
@@ -554,7 +546,6 @@ def disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY s.s_name
     """,
     tags=("tpch", "semi-join", "anti-join", "agg"),
-    gated=False,
 )
 def waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape: suppliers solely responsible for late multi-
@@ -630,7 +621,6 @@ def waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY c.c_nationkey
     """,
     tags=("tpch", "anti-join", "scalar-subquery", "agg"),
-    gated=False,
 )
 def sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape: well-funded customers in seven target nations
@@ -731,7 +721,6 @@ _PS_COST_SQL = """
     LIMIT 100
     """,
     tags=("tpch", "join", "window", "correlated"),
-    gated=False,
 )
 def min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape: for each qualifying part, the European supplier(s)
@@ -802,7 +791,6 @@ def min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l_quantity < 24
     """,
     tags=("tpch", "agg", "pushdown"),
-    gated=False,
 )
 def promo_share_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape: revenue that would vanish if mid-band discounts
@@ -851,7 +839,6 @@ def promo_share_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY n.n_name, year(o.o_orderdate)
     """,
     tags=("tpch", "join", "agg"),
-    gated=False,
 )
 def product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape: profit (revenue minus supply cost) on one product
@@ -912,7 +899,6 @@ def product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE val * 1000 > (SELECT sum(val) FROM v)
     """,
     tags=("tpch", "agg", "scalar-subquery"),
-    gated=False,
 )
 def important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 shape: parts whose traded value through one nation's
@@ -974,7 +960,6 @@ def important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1
     """,
     tags=("tpch", "join", "conditional-agg"),
-    gated=False,
 )
 def shipmode_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape: line counts by urgency class per shipping class.
@@ -1038,7 +1023,6 @@ def shipmode_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY p.p_brand, p.p_type, p.p_size
     """,
     tags=("tpch", "anti-join", "distinct-agg"),
-    gated=False,
 )
 def supplier_part_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape: how many distinct suppliers can provide each
@@ -1099,7 +1083,6 @@ def supplier_part_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     """,
     tags=("tpch", "semi-join", "nested"),
-    gated=False,
 )
 def excess_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20 shape: suppliers who moved more than half their
@@ -1163,7 +1146,6 @@ def excess_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN f fb ON fb.b = brand_b
     """,
     tags=("tpch", "affinity", "basket"),
-    gated=False,
 )
 def brand_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket brand affinity: for every brand pair, the number of
@@ -1283,7 +1265,6 @@ def brand_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN f fb ON fb.b = consequent
     """,
     tags=("tpch", "affinity", "rules"),
-    gated=False,
 )
 def assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directional association rules over the market baskets: for every

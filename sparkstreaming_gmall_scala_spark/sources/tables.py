@@ -26,8 +26,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # memo key -> inferred StructType. Every spark.read.parquet without an
 # explicit schema runs a one-task footer-read JOB before the query
 # proper — ~0.15-0.3 s of pure scheduling per load_table call, paid

@@ -17,7 +17,7 @@ dedup-by-key pass, no transaction log.
 ``ingest_events_partitioned`` simulates the 3-batch time-ordered feed
 and then REPLAYS the middle batch (duplicate delivery), so every
 consumer of the resulting table is checking idempotence, not just
-ingestion: the gated query ``events_ingest_rollup`` folds the table and
+ingestion: the catalog query ``events_ingest_rollup`` folds the table and
 its DuckDB oracle is the rollup of the RAW events table — they can only
 hash-match if the replay changed nothing.
 

@@ -1,57 +1,43 @@
-"""DuckDB oracle parity for UNGATED catalog entries at sf0.001.
+"""DuckDB oracle parity for every oracle-bearing catalog entry at sf0.001.
 
-The driver's correctness gate only runs the 50 gated queries; the ungated
-entries (in-memory twins, gate-budget rotations, and the extension
-families past the budget) carry full oracles too — this test runs that
-same row-count + columns + exact-value comparison inside the suite so an
-ungated regression can't hide until a manual verify_local run.
+Each entry's Spark result is compared with its oracle by
+``tools/verify_local.frame_diff``: row count, columns, list-typed columns,
+dtype kinds, then exact values (order-insensitive). This is the check the
+local gate makes, so a regression shows up in the suite rather than in a
+manual ``verify_local`` run.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 import pytest
 
 from sparkstreaming_gmall_scala_spark.plans.catalog import load_all
 from sparkstreaming_gmall_scala_spark.sources.tables import TABLES
+from tools.verify_local import frame_diff
 
-SF_DIR = "/root/testdata/sf0.001"
-
-_UNGATED_WITH_ORACLE = sorted(
-    n for n, q in load_all().items() if not q.gated and q.oracle is not None
-)
+_WITH_ORACLE = sorted(n for n, q in load_all().items() if q.oracle is not None)
 
 
 @pytest.fixture(scope="module")
-def duck():
+def duck(sf_dir):
     import duckdb
 
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF_DIR}/{t}.parquet')"
+            f"read_parquet('{sf_dir}/{t}.parquet')"
         )
     yield con
     con.close()
 
 
-def _canon(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1)
-    for c in df.columns:
-        if str(df[c].dtype).startswith("object"):
-            df[c] = df[c].map(repr)
-    return df.sort_values(by=list(df.columns), kind="mergesort").reset_index(
-        drop=True
-    )
-
-
-@pytest.mark.parametrize("name", _UNGATED_WITH_ORACLE)
-def test_ungated_query_matches_oracle(spark, duck, name):
+# Every entry with an oracle, CORE included; the name is kept so existing
+# test IDs stay valid.
+@pytest.mark.parametrize("name", _WITH_ORACLE)
+def test_ungated_query_matches_oracle(spark, sf_dir, duck, name):
     q = load_all()[name]
-    sdf = q.builder(spark, SF_DIR).toPandas()
-    odf = duck.execute(q.oracle).fetchdf()
-    assert len(sdf) == len(odf), (len(sdf), len(odf))
-    assert sorted(sdf.columns) == sorted(odf.columns)
-    a, b = _canon(sdf.copy()), _canon(odf.copy())
-    pd.testing.assert_frame_equal(a, b, check_dtype=False, check_exact=True)
+    got = q.builder(spark, sf_dir).toPandas()
+    want = duck.execute(q.oracle).fetchdf()
+    problem = frame_diff(got, want)
+    assert problem is None, problem

@@ -55,7 +55,7 @@ def test_union_of_batches_equals_batch_scoring(spark, sf_dir, tmp_path):
 
 def test_self_trained_model_reproduces_dsir_logweights(spark, sf_dir, tmp_path):
     """Persist-then-score must equal the one-plan self-scoring operator —
-    the persisted model is the SAME table, so the catalog entry's gated
+    the persisted model is the SAME table, so the catalog entry's
     oracle transitively covers the streaming scorer's math."""
     d = _docs(spark, sf_dir)
     model_dir = str(tmp_path / "model")

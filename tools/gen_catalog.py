@@ -1,10 +1,9 @@
 """Generate CATALOG.md from the live query registry.
 
-One row per registered query: name, driver-gate status this round,
-oracle kind, tags, and the first docstring sentence. Regenerate with
-``python tools/gen_catalog.py``; ``tests/test_catalog.py`` pins the
-committed file equal to a fresh render so the table can't drift from
-the code.
+One row per registered query: name, oracle kind, tags, and the first
+docstring sentence. Regenerate with ``python tools/gen_catalog.py``;
+``tests/test_catalog.py`` pins the committed file equal to a fresh render
+so the table can't drift from the code.
 """
 
 from __future__ import annotations
@@ -15,10 +14,6 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from sparkstreaming_gmall_scala_spark.plans.catalog import load_all  # noqa: E402
-from sparkstreaming_gmall_scala_spark.plans.rotation import (  # noqa: E402
-    _SLOTS_V2,
-    POOL,
-)
 
 
 def first_sentence(doc: str) -> str:
@@ -30,48 +25,29 @@ def first_sentence(doc: str) -> str:
 
 
 def render() -> str:
-    """Render CATALOG.md. Deliberately ROUND-INVARIANT (round-7 verdict):
-    the Gate column shows the static registration status only — ``gated``
-    for always-gated entries, ``pool`` for rotation-pool members (whose
-    per-round gate flag cycles; see `plans/rotation.py`), ``—`` for the
-    statically ungated twins. Nothing here reads ``current_round()``, so
-    the committed file (and its pin test) cannot go stale when the driver
-    writes a new CORRECTNESS_r*.json."""
     reg = load_all()
-    pool = set(POOL)
-    always_gated = sum(1 for n, q in reg.items() if q.gated and n not in pool)
     lines = [
         "# Query catalog",
         "",
         "Auto-generated from the live registry by `tools/gen_catalog.py` "
-        "(pinned current by `tests/test_catalog.py`). The Gate column is "
-        "round-invariant: `gated` entries (the CORE parity spine) are in "
-        "the driver's 50-row correctness gate every round; `pool` entries "
-        "cycle through the rotating gate slots (`plans/rotation.py`) so "
-        "each gets a driver row within `ceil(len(POOL)/slots)` rounds; "
-        "`—` entries are documented twins/subsets whose signal lives in "
-        "pytest equality with a gated sibling.",
+        "(pinned current by `tests/test_catalog.py`). Every `full` entry is "
+        "checked against its DuckDB oracle by `tests/test_oracle_parity.py` "
+        "and `tools/verify_local.py`; `rows-only` entries are covered by "
+        "pytest semantics tests instead.",
         "",
-        f"{len(reg)} queries; {always_gated} always-gated + {_SLOTS_V2} "
-        f"rotating slots (pool of {len(POOL)}) fill the 50-row gate each "
-        f"round; {sum(1 for q in reg.values() if q.oracle is not None)} "
+        f"{len(reg)} queries; "
+        f"{sum(1 for q in reg.values() if q.oracle is not None)} "
         "with full DuckDB oracles.",
         "",
-        "| Query | Gate | Oracle | Tags | What |",
-        "|---|---|---|---|---|",
+        "| Query | Oracle | Tags | What |",
+        "|---|---|---|---|",
     ]
     for name in sorted(reg):
         q = reg[name]
-        if name in pool:
-            gate = "pool"
-        elif q.gated:
-            gate = "gated"
-        else:
-            gate = "—"
         oracle = "full" if q.oracle is not None else "rows-only"
         tags = " ".join(q.tags)
         doc = first_sentence(q.doc).replace("|", "\\|")
-        lines.append(f"| `{name}` | {gate} | {oracle} | {tags} | {doc} |")
+        lines.append(f"| `{name}` | {oracle} | {tags} | {doc} |")
     lines.append("")
     return "\n".join(lines)
 

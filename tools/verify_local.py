@@ -9,11 +9,12 @@ the same parquet files, and compares row count, column names, and values
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 import pandas as pd
@@ -44,6 +45,37 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(by=list(df.columns), kind="mergesort").reset_index(
         drop=True
     )
+
+
+def frame_diff(got: pd.DataFrame, want: pd.DataFrame) -> str | None:
+    """Why ``got`` (Spark) differs from ``want`` (the oracle), or None.
+
+    Checks, in order: row count, column names, list-typed columns, dtype
+    kinds, then exact values after ``canon``. Dtype kinds must agree (int
+    vs float vs object) because the external gate's value-hash is
+    type-sensitive; exact width (int32 vs int64) is relaxed."""
+    problems = []
+    if len(got) != len(want):
+        problems.append(f"rows {len(got)} vs {len(want)}")
+    if sorted(got.columns) != sorted(want.columns):
+        problems.append(f"cols {sorted(got.columns)} vs {sorted(want.columns)}")
+    bad_lists = sorted(set(list_cols(got)) | set(list_cols(want)))
+    if bad_lists:
+        problems.append(
+            f"list-typed cols {bad_lists} (the gate's canon crashes on these)"
+        )
+    if problems:
+        return "; ".join(problems)
+    a, b = canon(got.copy()), canon(want.copy())
+    kinds_a = [a[c].dtype.kind for c in a.columns]
+    kinds_b = [b[c].dtype.kind for c in b.columns]
+    if kinds_a != kinds_b:
+        return f"dtype kinds {kinds_a} vs {kinds_b}"
+    try:
+        pd.testing.assert_frame_equal(a, b, check_dtype=False, check_exact=True)
+    except AssertionError as e:
+        return f"values: {str(e).splitlines()[-1][:200]}"
+    return None
 
 
 def main() -> int:
@@ -79,34 +111,9 @@ def main() -> int:
             traceback.print_exc(limit=3)
             n_fail += 1
             continue
-        problems = []
-        if len(sdf) != len(odf):
-            problems.append(f"rows {len(sdf)} vs {len(odf)}")
-        if sorted(sdf.columns) != sorted(odf.columns):
-            problems.append(f"cols {sorted(sdf.columns)} vs {sorted(odf.columns)}")
-        bad_lists = sorted(set(list_cols(sdf)) | set(list_cols(odf)))
-        if bad_lists:
-            problems.append(
-                f"list-typed cols {bad_lists} (driver canon crashes on these)"
-            )
-        if not problems:
-            a, b = canon(sdf.copy()), canon(odf.copy())
-            # dtype kinds must agree (int vs float vs object) — the
-            # driver's value-hash is type-sensitive; exact width (int32 vs
-            # int64) is relaxed only when both are integer kinds.
-            kinds_a = [a[c].dtype.kind for c in a.columns]
-            kinds_b = [b[c].dtype.kind for c in b.columns]
-            if kinds_a != kinds_b:
-                problems.append(f"dtype kinds {kinds_a} vs {kinds_b}")
-        if not problems:
-            try:
-                pd.testing.assert_frame_equal(
-                    a, b, check_dtype=False, check_exact=True
-                )
-            except AssertionError as e:
-                problems.append(f"values: {str(e).splitlines()[-1][:200]}")
-        if problems:
-            print(f"FAIL {name}: {'; '.join(problems)}")
+        problem = frame_diff(sdf, odf)
+        if problem:
+            print(f"FAIL {name}: {problem}")
             n_fail += 1
         else:
             print(f"PASS {name} ({len(sdf)} rows, {time.time()-t0:.1f}s)")
