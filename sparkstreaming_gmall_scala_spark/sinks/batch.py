@@ -121,9 +121,9 @@ def recover_dir(path: str) -> None:
       (it already contains the merge of old + updates);
     - crash after the swap, before old cleanup: target is current → drop
       old.
-    Idempotent; called on entry by ``upsert_parquet`` and by state readers
-    (``order_info_batch``) so a crashed upsert can never present as an
-    empty state table.
+    Idempotent; called on entry by ``upsert_parquet`` and by readers
+    (``AppendOnlyIndex``, streaming/scd2.py) so a crashed upsert can
+    never present as an empty table.
     """
     import shutil
 

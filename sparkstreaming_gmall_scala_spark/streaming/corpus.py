@@ -20,7 +20,7 @@ queries run (operators/textstats.py, operators/cleaning.py), composed in
 Replay safety: a doc is kept when its fingerprint is unseen OR the seen
 keeper IS this doc — so replaying a committed batch re-keeps exactly its
 original survivors (their own index entries match) and re-drops the rest.
-Write order is output-then-index (the order_info_batch claims pattern).
+Write order is output-then-index (streaming/dedup.py's replay argument).
 
 Equivalence contract (pinned by tests/test_streaming.py): with arrival
 order following doc_id order, the union of batch outputs equals the

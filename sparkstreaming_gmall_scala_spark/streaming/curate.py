@@ -190,8 +190,8 @@ def curate_ingest_batch(
                 wins_new, seen_wins.unionByName(wins_new)
             )
 
-        # Output-then-index, all families (the order_info_batch claims
-        # pattern): a crash between any two writes replays the batch and
+        # Output-then-index, all families (streaming/dedup.py's replay
+        # argument): a crash between any two writes replays the batch and
         # rewrites only batch_id=N dirs.
         docs_sink(out, batch_id)
         if keeps_hook is not None:

@@ -15,7 +15,7 @@ index (or the same batch) — so the union of all batch outputs equals the
 batch self-join (operators/dedup.py::lsh_candidate_pairs) over the full
 corpus; pinned by tests/test_streaming.py.
 
-Write order is output-then-index (the order_info_batch claims pattern):
+Write order is output-then-index, as for every append-only index here:
 a crash between the two replays the batch against an index that doesn't
 yet contain its bands, recomputing identical pairs. Replaying a batch
 AFTER later batches committed emits a superset of its original pairs

@@ -15,11 +15,17 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..sinks.batch import IdempotentBatchWriter, upsert_parquet
+from ..sources.tables import read_parquet_memo
 from .allocation import allocate_stateful
 from .dau import dau_distinct
 from .join import windowed_equi_join
@@ -224,105 +230,68 @@ SKU_SCHEMA = T.StructType(
 )
 
 
-def probe_first_order(
-    corrected: DataFrame, state: DataFrame, batch_id: int
-) -> DataFrame:
-    """Cross-batch first-order probe: a user is first-order iff never
-    claimed, or claimed by THIS batch id (replay).
+# Hash buckets of the first-order state; part of its checkpoint layout.
+FIRST_ORDER_BUCKETS = 16
 
-    An order with a NULL ``user_id`` belongs to no user, so it is never a
-    first order ('0') and, being unflagged, writes no claim row. (The
-    reference's ``user_id`` is a Scala ``Long`` with no NULL case,
-    bean/OrderInfo.scala:7-8; without this rule every batch would flag
-    its earliest NULL-user order, since NULL never matches a claim.)
 
-    No broadcast hint on ``state``: user_status grows with every user ever
-    seen (the reference's Phoenix table is unbounded by design,
-    dwd/OrderInfoApp.scala:271-279) — a forced broadcast OOMs at scale.
-    AQE picks broadcast while the table is small and switches to a shuffle
-    join once it outgrows the threshold (plan pinned by
-    tests/test_plan_properties.py)."""
-    is_first = (
-        F.col("user_id").isNotNull()
-        & (F.col("_intra") == "1")
-        & (
-            F.col("first_batch_id").isNull()
-            | (F.col("first_batch_id") == F.lit(batch_id))
-        )
-    )
+def _flag_bucket(columns: list[str], longs: list[str]):
+    def flag(key, pdf_iter, state: GroupState):
+        claimed = list(state.get[0]) if state.exists else []
+        pdf = pd.concat(list(pdf_iter), ignore_index=True)
+        # int64 with NULLs would reach pandas as float64, which rounds ids
+        # >= 2**53: each long column comes NULL-free plus a null mask
+        for c in longs:
+            pdf[c] = pd.arrays.IntegerArray(
+                pdf[c].to_numpy(np.int64), pdf[f"_null_{c}"].to_numpy(bool)
+            )
+        pdf = pdf.sort_values(["ts", "order_id"], na_position="first")
+        pdf = pdf.drop_duplicates("order_id")
+        user = pdf["user_id"]
+        first = user.notna() & ~user.duplicated() & ~user.isin(set(claimed))
+        first = first.to_numpy(bool)
+        if first.any():
+            state.update((claimed + user[first].tolist(),))
+        yield pdf[columns].assign(if_first_order=np.where(first, "1", "0"))
+
+    return flag
+
+
+def probe_first_order(orders: DataFrame) -> DataFrame:
+    """Every order once, with ``if_first_order``; the users already
+    claimed live in the state store (the reference's Phoenix
+    ``USER_STATUS``, dwd/OrderInfoApp.scala:92-117,262-279), keyed by
+    ``pmod(xxhash64(user_id), FIRST_ORDER_BUCKETS)`` like
+    streaming/allocation.py: one pandas call per bucket, each holding its
+    claimed ids as one array, updated only when it claims a new user and
+    never expiring. Per batch:
+
+    - rows repeating an ``order_id`` collapse to the earliest by ``ts``
+      (copies that disagree on ``user_id`` hash apart and stay apart);
+    - a user's earliest order by ``(ts, order_id)``, NULL ``ts`` first,
+      is '1' iff no earlier batch claimed the user;
+    - a NULL ``user_id`` is no user's, so it is never first and claims
+      nothing (the reference's ``Long`` has no NULL, bean/OrderInfo.scala:7-8).
+
+    The state is never joined or broadcast (tests/test_plan_properties.py)."""
+    columns = orders.columns
+    longs = [f.name for f in orders.schema if f.dataType == T.LongType()]
     return (
-        corrected.join(state, "user_id", "left")
-        .withColumn("if_first_order", F.when(is_first, "1").otherwise("0"))
-        .drop("_intra", "first_batch_id")
+        orders.select(
+            *(F.coalesce(c, F.lit(0)).alias(c) if c in longs else c for c in columns),
+            *(F.col(c).isNull().alias(f"_null_{c}") for c in longs),
+            F.pmod(F.xxhash64("user_id"), F.lit(FIRST_ORDER_BUCKETS)).alias("_bucket"),
+        )
+        .groupBy("_bucket")
+        .applyInPandasWithState(
+            _flag_bucket(columns, longs),
+            outputStructType=T.StructType(
+                [*orders.schema, T.StructField("if_first_order", T.StringType())]
+            ),
+            stateStructType="user_id array<bigint>",
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
     )
-
-
-def order_info_batch(
-    spark: SparkSession,
-    state_dir: str,
-    sink: IdempotentBatchWriter,
-    dim_dirs: tuple[tuple[str, str, str], ...] = (),
-):
-    """Per-batch body of ``order_info_pipeline`` (exposed so tests can
-    replay a (batch_df, batch_id) directly): first-order flag → intra-batch
-    correction → dim enrichment → batch-keyed sink → first-order state
-    claim (ref: dwd/OrderInfoApp.scala:90-290, the flag probe + groupByKey
-    correction + USER_STATUS saveToPhoenix + ES/Kafka sinks).
-
-    Exactly-once story the reference lacks: the state table records WHICH
-    batch claimed each user's first order (user_id, first_batch_id), so a
-    replayed batch recomputes the identical flags — the reference's
-    IF_CONSUMED='1' upsert would flip the replay's flags to '0'. Write
-    order is output-then-claims: a crash between the two replays the batch
-    whose claims are absent (same flags) or already claimed by the same
-    batch id (same flags) — idempotent either way.
-    """
-    from ..operators.flags import first_event_flag
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        # Intra-batch correction: only each user's earliest order in this
-        # batch may carry the flag (the reference's groupByKey+sortWith).
-        corrected = first_event_flag(
-            batch_df.dropDuplicates(["order_id"]),
-            key="user_id",
-            order_by=["ts", "order_id"],
-            flag_col="_intra",
-        )
-        from ..sinks.batch import has_parquet, recover_dir
-
-        # a crashed claims upsert must never present as an empty state
-        # table (that would re-flag already-claimed users)
-        recover_dir(state_dir)
-        if has_parquet(state_dir):
-            state = spark.read.parquet(state_dir)
-        else:
-            state = spark.createDataFrame([], "user_id long, first_batch_id long")
-        flagged = probe_first_order(corrected, state, batch_id)
-        # Dim enrichment — dims re-read per batch, like the reference's
-        # per-batch Phoenix fetch + broadcast (OrderInfoApp.scala:194-221),
-        # so a late dim update is visible to the next batch.
-        for dim_dir, fact_key, dim_key in dim_dirs:
-            dim = spark.read.parquet(dim_dir)
-            if dim_key != fact_key:
-                dim = dim.withColumnRenamed(dim_key, fact_key)
-            flagged = flagged.join(F.broadcast(dim), fact_key, "left")
-        sink(flagged, batch_id)
-        # Claim first orders AFTER the output lands, reading the claims
-        # back from the just-written batch dir (no recompute, and the
-        # flagged plan above never observes its own state update).
-        written = spark.read.parquet(
-            os.path.join(sink.out_dir, f"batch_id={batch_id}")
-        )
-        claims = (
-            written.filter(F.col("if_first_order") == "1")
-            .select("user_id")
-            .distinct()
-            .join(state.select("user_id"), "user_id", "left_anti")
-            .withColumn("first_batch_id", F.lit(batch_id))
-        )
-        upsert_parquet(spark, claims, state_dir, ["user_id"])
-
-    return process
 
 
 def order_info_pipeline(
@@ -335,15 +304,45 @@ def order_info_pipeline(
     available_now: bool = False,
 ):
     """OrderInfoApp end-to-end (dwd/OrderInfoApp.scala:40-290): order
-    stream → first-order flag with intra-batch correction → dim enrich →
-    batch-keyed sink + first-order claim state, one atomic foreachBatch
-    per micro-batch."""
-    orders = file_stream(spark, src_dir, ORDER_INFO_SCHEMA)
+    stream → ``probe_first_order`` → dim enrichment → batch-keyed sink.
+    Exactly once comes from state-store versioning: a replay reloads the
+    state version its batch started from, recomputes the same flags and
+    rewrites its ``batch_id=N`` dir (the reference's IF_CONSUMED='1'
+    upsert would flip a replay's flags to '0'). The state grows with the
+    claimed users, one id each. ``state_dir`` gets ``USER_STATUS`` as an
+    export the flag never reads: one flat ``(user_id, first_batch_id)``
+    parquet file per batch, named by batch id. The state itself reads as
+    ``spark.read.format("statestore")`` on the checkpoint.
+
+    Dims are re-read per batch like the reference's Phoenix fetch +
+    broadcast (OrderInfoApp.scala:194-221), so a dim update shows in the
+    next batch; the schema memo skips footer inference while unchanged."""
+    flagged = probe_first_order(file_stream(spark, src_dir, ORDER_INFO_SCHEMA))
     sink = IdempotentBatchWriter(out_dir)
-    writer = (
-        orders.writeStream.foreachBatch(
-            order_info_batch(spark, state_dir, sink, dim_dirs)
+    os.makedirs(state_dir, exist_ok=True)
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        for dim_dir, fact_key, dim_key in dim_dirs:
+            dim = read_parquet_memo(spark, dim_dir)
+            if dim_key != fact_key:
+                dim = dim.withColumnRenamed(dim_key, fact_key)
+            batch_df = batch_df.join(F.broadcast(dim), fact_key, "left")
+        sink(batch_df, batch_id)
+        # the batch's claims, read back from its committed dir and sorted,
+        # so a replay rewrites the same bytes
+        users = pq.read_table(
+            os.path.join(out_dir, f"batch_id={batch_id}"),
+            columns=["user_id"], filters=[("if_first_order", "=", "1")],
+        )["user_id"].sort().combine_chunks()
+        claims = pa.table(
+            {"user_id": users, "first_batch_id": pa.repeat(batch_id, len(users))}
         )
+        tmp = os.path.join(state_dir, f".{batch_id}.parquet.tmp")
+        pq.write_table(claims, tmp)
+        os.replace(tmp, os.path.join(state_dir, f"{batch_id:010d}.parquet"))
+
+    writer = (
+        flagged.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
     )

@@ -74,34 +74,26 @@ def test_scans_prune_to_needed_columns(spark, sf_dir, registry):
         assert col not in scan, scan
 
 
-def test_first_order_state_probe_is_not_forced_broadcast(spark):
-    """The cross-batch first-order state table is unbounded (every user
-    ever seen) — the probe must leave the join strategy to the planner so
-    it can shuffle-join once state outgrows the broadcast threshold. With
-    auto-broadcast disabled, a forced hint would still produce a
-    BroadcastHashJoin; the free plan must fall back to a shuffle join."""
+def test_first_order_state_probe_is_not_forced_broadcast(spark, tmp_path):
+    """The first-order state holds every user ever claimed, so it lives in
+    the state store: the flag step is one FlatMapGroupsInPandasWithState
+    behind a hash exchange on the user bucket, and the state is never
+    joined to the orders or broadcast, whatever its size."""
     from sparkstreaming_gmall_scala_spark.streaming.pipelines import (
+        ORDER_INFO_SCHEMA,
         probe_first_order,
     )
+    from sparkstreaming_gmall_scala_spark.streaming.sources import file_stream
 
-    corrected = spark.range(100).selectExpr(
-        "id AS user_id", "id AS order_id", "'1' AS _intra"
+    flagged = probe_first_order(
+        file_stream(spark, str(tmp_path), ORDER_INFO_SCHEMA)
     )
-    state = spark.range(100).selectExpr(
-        "id AS user_id", "id % 3 AS first_batch_id"
+    plan = spark._jvm.PythonSQLUtils.explainString(
+        flagged._jdf.queryExecution(), "simple"
     )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = (
-            probe_first_order(corrected, state, batch_id=7)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert "BroadcastHashJoin" not in plan, plan[:2000]
+    assert "FlatMapGroupsInPandasWithState" in plan, plan[:2000]
+    assert "Exchange hashpartitioning(_bucket" in plan, plan[:2000]
+    assert "Join" not in plan and "Broadcast" not in plan, plan[:2000]
 
 
 def test_decontaminate_broadcasts_the_eval_shingle_set(spark, sf_dir, registry):

@@ -431,13 +431,27 @@ def _write_dim(spark, rows, cols, path):
     spark.createDataFrame(rows, cols).write.mode("overwrite").parquet(path)
 
 
+def _drop_each(spark, schema, batches, src_dir):
+    """One file per batch, each stamped a second after the newest file
+    already there, so one drain reads them as consecutive batches."""
+    import glob
+
+    for rows in batches:
+        before = set(glob.glob(os.path.join(src_dir, "*.parquet")))
+        stamp = max(map(os.path.getmtime, before), default=time.time()) + 1
+        _drop(spark, schema, rows, src_dir)
+        (new,) = set(glob.glob(os.path.join(src_dir, "*.parquet"))) - before
+        os.utime(new, (stamp, stamp))
+
+
 def test_order_info_pipeline_first_flag_restart_and_replay(spark, tmp_path):
     """DWD OrderInfoApp end-to-end: cross-batch first-order flag with
-    intra-batch correction and dim enrichment; the flag survives restarts
-    AND replays (≤1 first order per user, ever)."""
+    intra-batch correction and dim enrichment. The flag survives a
+    restart, and a batch lost before its commit replays through the
+    checkpoint: the sink and the USER_STATUS export come out identical
+    (≤1 first order per user, ever)."""
     from sparkstreaming_gmall_scala_spark.streaming.pipelines import (
         ORDER_INFO_SCHEMA,
-        order_info_batch,
         order_info_pipeline,
     )
 
@@ -451,18 +465,30 @@ def test_order_info_pipeline_first_flag_restart_and_replay(spark, tmp_path):
         prov,
     )
     dims = ((prov, "province_id", "province_id"),)
+
+    def drain(rows):
+        if rows:
+            _drop(spark, ORDER_INFO_SCHEMA, rows, src)
+        q = order_info_pipeline(
+            spark, src, state, out, ckpt, dim_dirs=dims, available_now=True
+        )
+        assert q.awaitTermination(120), "drain did not terminate"
+        return q
+
+    def sink_rows():
+        return sorted(
+            tuple(r) for r in IdempotentBatchWriter(out).read(spark).collect()
+        )
+
+    def export():
+        return {f.name: f.read_bytes() for f in (tmp_path / "state").iterdir()}
+
     # batch 0: user 1 orders twice (order 1 earliest), user 2 once
-    batch0 = [
+    drain([
         (2, 1, 1, TS.format(2), 20.0),
         (1, 1, 1, TS.format(1), 10.0),
         (3, 2, 2, TS.format(1), 30.0),
-    ]
-    _drop(spark, ORDER_INFO_SCHEMA, batch0, src)
-    q = order_info_pipeline(spark, src, state, out, ckpt, dim_dirs=dims)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    ])
     got = {
         r["order_id"]: r
         for r in IdempotentBatchWriter(out).read(spark).collect()
@@ -472,55 +498,54 @@ def test_order_info_pipeline_first_flag_restart_and_replay(spark, tmp_path):
     assert got[3]["if_first_order"] == "1"
     assert got[1]["province_name"] == "shanghai"  # dim enrich rode along
 
-    # restart: new query object, same checkpoint/state; user 1 reorders
-    _drop(spark, ORDER_INFO_SCHEMA, [(4, 1, 2, TS.format(9), 5.0),
-                                     (5, 3, 1, TS.format(9), 7.0)], src)
-    q = order_info_pipeline(spark, src, state, out, ckpt, dim_dirs=dims)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    # restart: new query object, same checkpoint; user 1 reorders
+    q = drain([(4, 1, 2, TS.format(9), 5.0), (5, 3, 1, TS.format(9), 7.0)])
     got = {
         r["order_id"]: r
         for r in IdempotentBatchWriter(out).read(spark).collect()
     }
     assert got[4]["if_first_order"] == "0"  # user 1 claimed in batch 0
     assert got[5]["if_first_order"] == "1"  # user 3 new
+    last = max(p["batchId"] for p in q.recentProgress if p["numInputRows"])
+    before, exported = sink_rows(), export()
+    assert len(exported) == 2
 
-    # replay batch 0 directly (driver-retry simulation): flags identical,
-    # no second first-order per user
-    sink = IdempotentBatchWriter(out)
-    replay_df = spark.createDataFrame(batch0, ORDER_INFO_SCHEMA)
-    order_info_batch(spark, state, sink, dims)(replay_df, 0)
-    got = IdempotentBatchWriter(out).read(spark)
-    per_user_firsts = (
-        got.filter(F.col("if_first_order") == "1")
-        .groupBy("user_id")
-        .count()
-        .collect()
-    )
-    assert all(r["count"] == 1 for r in per_user_firsts), per_user_firsts
-    assert {r["user_id"] for r in per_user_firsts} == {1, 2, 3}
+    # crash between the sink write and the export: the last batch's sink
+    # dir and state version landed, its export and commit entry did not.
+    # The restart replays it from the state version it started from.
+    commits = os.path.join(ckpt, "commits")
+    os.remove(os.path.join(commits, str(last)))
+    os.remove(os.path.join(commits, f".{last}.crc"))
+    os.remove(os.path.join(state, f"{last:010d}.parquet"))
+    q = drain([])
+    replayed = [p["batchId"] for p in q.recentProgress if p["numInputRows"]]
+    assert replayed == [last], q.recentProgress
+    assert sink_rows() == before
+    assert export() == exported
+    per_user = {}
+    for r in IdempotentBatchWriter(out).read(spark).collect():
+        if r["if_first_order"] == "1":
+            per_user[r["user_id"]] = per_user.get(r["user_id"], 0) + 1
+    assert per_user == {1: 1, 2: 1, 3: 1}, per_user
 
 
 def test_order_info_null_user_is_never_first_order(spark, tmp_path):
     """An order with a NULL user_id cannot be anyone's first order: it is
-    flagged '0' in every batch and writes no claim row, while a real
-    user's first order in the same batches is flagged as before."""
+    flagged '0' in every batch and claims nothing, while a real user's
+    first order in the same batches is flagged as before."""
     from sparkstreaming_gmall_scala_spark.streaming.pipelines import (
         ORDER_INFO_SCHEMA,
-        order_info_batch,
+        order_info_pipeline,
     )
 
-    state, out = _dirs(tmp_path, "state", "out")
-    process = order_info_batch(spark, state, IdempotentBatchWriter(out))
-    batches = [
+    src, state, out, ckpt = _dirs(tmp_path, "src", "state", "out", "ckpt")
+    _drop_each(spark, ORDER_INFO_SCHEMA, [
         [(10, None, 1, TS.format(1), 1.0), (11, 5, 1, TS.format(2), 2.0)],
         [(20, None, 1, TS.format(3), 3.0), (21, None, 1, TS.format(4), 4.0)],
         [(30, None, 1, TS.format(5), 5.0), (31, 6, 1, TS.format(6), 6.0)],
-    ]
-    for batch_id, rows in enumerate(batches):
-        process(spark.createDataFrame(rows, ORDER_INFO_SCHEMA), batch_id)
+    ], src)
+    q = order_info_pipeline(spark, src, state, out, ckpt, available_now=True)
+    assert q.awaitTermination(120), "drain did not terminate"
     flags = {
         r["order_id"]: r["if_first_order"]
         for r in IdempotentBatchWriter(out).read(spark).collect()
@@ -533,6 +558,123 @@ def test_order_info_null_user_is_never_first_order(spark, tmp_path):
         for r in spark.read.parquet(state).collect()
     )
     assert claims == [(5, 0), (6, 2)], claims
+
+
+def _per_order_first_flags(batches):
+    """order_info's first-order rule, stated per order: within a batch,
+    repeats of an order_id collapse to their earliest copy; an order is
+    first iff its user is not NULL, no earlier batch claimed the user,
+    and no other order of the user in the batch sorts before it by
+    ``(ts, order_id)``. Rows are ``(order_id, user_id, province_id, ts,
+    total)``; returns ``{order_id: (user_id, flag)}`` and ``{user_id:
+    first_batch_id}``."""
+    flags: dict[int, tuple] = {}
+    claimed: dict[int, int] = {}
+    for batch_id, rows in enumerate(batches):
+        kept: dict[int, tuple] = {}
+        for r in rows:
+            if r[0] not in kept or r[3] < kept[r[0]][3]:
+                kept[r[0]] = r
+        for order_id, user, _, ts, _ in kept.values():
+            first = (
+                user is not None
+                and user not in claimed
+                and not any(
+                    u == user and (t, o) < (ts, order_id)
+                    for o, u, _, t, _ in kept.values()
+                )
+            )
+            flags[order_id] = (user, "1" if first else "0")
+        for order_id in kept:
+            user, flag = flags[order_id]
+            if flag == "1":
+                claimed[user] = batch_id
+    return flags, claimed
+
+
+def test_bucketed_first_order_matches_per_order_rule(spark, tmp_path):
+    """The hash-bucketed first-order state flags every order exactly as
+    the per-order statement of the rule does: five batches touching all
+    16 buckets, users repeated within a batch, duplicate order_id rows,
+    ts ties broken by order_id, NULL users sharing a bucket and a batch
+    with user ids above 2**53, and a restart from the checkpoint midway.
+    The USER_STATUS export equals the claims in the state store."""
+    import random
+
+    from sparkstreaming_gmall_scala_spark.streaming.pipelines import (
+        FIRST_ORDER_BUCKETS,
+        ORDER_INFO_SCHEMA,
+        order_info_pipeline,
+    )
+
+    bucket = F.pmod(F.xxhash64("u"), F.lit(FIRST_ORDER_BUCKETS))
+    null_bucket = (
+        spark.sql("SELECT CAST(NULL AS BIGINT) AS u").select(bucket).first()[0]
+    )
+    # odd ids above 2**53: a float64 round trip would change them
+    big = [
+        r["u"]
+        for r in spark.range(400)
+        .selectExpr(f"{2**53 + 1} + 2 * id AS u")
+        .where(bucket == null_bucket)
+        .limit(2)
+        .collect()
+    ]
+    rng = random.Random(11)
+    order_id = 0
+    batches: list[list[tuple]] = []
+    for k in range(5):
+        rows = []
+        for _ in range(40):
+            order_id += 1
+            rows.append((order_id, rng.randint(1, 100), rng.randint(1, 3),
+                         TS.format(rng.randrange(8)), float(order_id)))
+        rows += rng.sample(rows, 3)  # duplicate order_id rows
+        batches.append(rows)
+    o = order_id
+    # user 1000: a ts tie within a batch, decided by order_id
+    batches[1] += [(o + 2, 1000, 1, TS.format(3), 1.0),
+                   (o + 1, 1000, 1, TS.format(3), 1.0)]
+    # NULL users with the big ids in their bucket and batch; one big user
+    # orders again after the restart
+    batches[2] += [(o + 3, None, 1, TS.format(0), 1.0),
+                   (o + 4, big[0], 1, TS.format(1), 1.0),
+                   (o + 5, big[1], 1, TS.format(2), 1.0),
+                   (o + 6, None, 1, TS.format(1), 1.0)]
+    batches[3] += [(o + 7, big[0], 1, TS.format(0), 1.0),
+                   (o + 8, None, 1, TS.format(0), 1.0)]
+    want, claimed = _per_order_first_flags(batches)
+    assert want[o + 1] == (1000, "1") and want[o + 2] == (1000, "0")
+    assert want[o + 4] == (big[0], "1") and want[o + 7] == (big[0], "0")
+
+    users = [(u,) for u in {r[1] for b in batches for r in b}]
+    touched = (
+        spark.createDataFrame(users, "u long").select(bucket).distinct().count()
+    )
+    assert touched == FIRST_ORDER_BUCKETS
+
+    src, state, out, ckpt = _dirs(tmp_path, "src", "state", "out", "ckpt")
+    for run in (batches[:3], batches[3:]):
+        _drop_each(spark, ORDER_INFO_SCHEMA, run, src)
+        q = order_info_pipeline(spark, src, state, out, ckpt, available_now=True)
+        assert q.awaitTermination(120), "drain did not terminate"
+    sink = IdempotentBatchWriter(out).read(spark).collect()
+    got = {r["order_id"]: (r["user_id"], r["if_first_order"]) for r in sink}
+    assert len(sink) == len(got) == len(want)
+    assert got == want
+
+    exported = {
+        (r["user_id"], r["first_batch_id"])
+        for r in spark.read.parquet(state).collect()
+    }
+    assert exported == set(claimed.items())
+    in_store = (
+        spark.read.format("statestore")
+        .load(ckpt)
+        .selectExpr("explode(value.groupState.user_id) AS user_id")
+        .collect()
+    )
+    assert sorted(r["user_id"] for r in in_store) == sorted(claimed)
 
 
 def test_sku_dim_pipeline_denorm_and_late_dim_update(spark, tmp_path):
