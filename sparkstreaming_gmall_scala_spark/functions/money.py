@@ -20,11 +20,6 @@ def money(col: Column | str) -> Column:
     return c.cast("decimal(18,2)")
 
 
-def round2(col: Column) -> Column:
-    """2-dp HALF_UP rounding, the reference's Math.round(x*100)/100."""
-    return F.round(col, 2)
-
-
 def revenue(extendedprice: Column, discount: Column) -> Column:
     """extendedprice * (1 - discount), the standard line-revenue term."""
     return extendedprice * (F.lit(1.0) - discount)

@@ -25,18 +25,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 
 
-def bpe_ish_token_count(text: Column) -> Column:
-    """Sub-word-ish token count: splits on whitespace AND on
-    letter/digit/punct boundaries, the usual cheap proxy for BPE token
-    counts when no tokenizer model is available."""
-    return F.size(
-        F.filter(
-            F.split(text, r"(\s+|(?<=[a-zA-Z])(?=\d)|(?<=\d)(?=[a-zA-Z])|(?=[^\w\s]))"),
-            lambda t: t != F.lit(""),
-        )
-    )
-
-
 def stopword_ratio(text: Column, stopwords: tuple[str, ...] = STOPWORDS_EN) -> Column:
     """Fraction of whitespace tokens that are in the stopword list."""
     toks = tokens(F.lower(text))

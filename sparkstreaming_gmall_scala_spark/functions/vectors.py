@@ -108,9 +108,3 @@ def norm_fixed(a: Column | str, dim: int) -> Column:
     """sqrt(dot_fixed(a, a)) — same fold order as ``norm``. String
     arguments take the single-parse F.expr fast path (see dot_fixed)."""
     return F.sqrt(dot_fixed(a, a, dim))
-
-
-def cosine_fixed(a: Column | str, b: Column | str, dim: int) -> Column:
-    """Codegen-friendly cosine for a known dimension; arithmetic-order
-    identical to ``cosine`` (and the DuckDB oracle's list_reduce)."""
-    return dot_fixed(a, b, dim) / (norm_fixed(a, dim) * norm_fixed(b, dim))

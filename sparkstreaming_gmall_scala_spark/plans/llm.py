@@ -34,6 +34,7 @@ from ..operators.similarity import (
 )
 from ..operators.textstats import LANG_MARKERS, lang_id, quality_score
 from ..sources import load_table, read_parquet_memo
+from ..sources.tables import _data_fingerprint, _params_key, build_once
 from .catalog import register
 
 # Shared DuckDB fragments -----------------------------------------------------
@@ -420,34 +421,27 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bm25_index_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Ensure the 3-batch BM25 postings ingest exists under /tmp for
-    this corpus (keyed by params + data fingerprint — the knn persisted
-    discipline) and return the index dir."""
+    """Ensure the 3-batch BM25 postings ingest exists for this corpus
+    (``sources.tables.build_once``) and return the index dir."""
     import os
-    import shutil
-    import tempfile
 
     from ..streaming.search import bm25_ingest_batch
 
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_bm25idx_{os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{_params_key('bm25q3', _data_fingerprint(sf_dir, 'documents'))}",
-    )
-    index_dir = os.path.join(work, "postings")
-    marker = os.path.join(work, "_INGESTED")
-    if not os.path.exists(marker):
-        # a partial ingest (crash mid-batch) must rebuild, never serve
-        shutil.rmtree(work, ignore_errors=True)
+    def build(work: str) -> None:
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "text"
         )
-        body = bm25_ingest_batch(spark, index_dir, _BM25_QUERY)
+        body = bm25_ingest_batch(
+            spark, os.path.join(work, "postings"), _BM25_QUERY
+        )
         for i in range(3):
             body(docs.filter(F.pmod(F.hash("doc_id"), F.lit(3)) == i), i)
-        with open(marker, "w") as fh:
-            fh.write("3")
-    return index_dir
+
+    work = build_once(
+        "bm25idx", sf_dir,
+        _params_key("bm25q3", _data_fingerprint(sf_dir, "documents")), build,
+    )
+    return os.path.join(work, "postings")
 
 
 @register(
@@ -1212,41 +1206,6 @@ import math
 _PLANES = [[math.sin(1 + i * 64 + d) for d in range(64)] for i in range(8)]
 
 
-def _params_key(*parts) -> str:
-    """Short stable fingerprint of index parameters for /tmp cache keys."""
-    import hashlib
-    import json
-
-    return hashlib.md5(json.dumps(parts, sort_keys=True).encode()).hexdigest()[:10]
-
-
-def _data_fingerprint(sf_dir: str, table: str) -> list:
-    """Cheap corpus fingerprint for persisted-index cache keys: the
-    (relpath, size, mtime_ns) of every parquet file backing ``table``.
-
-    Pure filesystem metadata — zero Spark jobs per probe. Regenerated
-    testdata at the SAME path (new seed, same name) changes mtime/size, so
-    a stale index MISSES instead of silently serving vectors from the old
-    corpus; a spurious mtime change merely costs one rebuild (safe
-    direction). At lake scale the analog is the table snapshot/commit id
-    (Delta/Iceberg), which is exactly this: identity of the data files."""
-    import glob
-    import os
-
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    if os.path.isdir(path):
-        files = sorted(
-            glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        )
-    else:
-        files = [path] if os.path.exists(path) else []
-    out = []
-    for f in files:
-        st = os.stat(f)
-        out.append((os.path.relpath(f, sf_dir), st.st_size, st.st_mtime_ns))
-    return out
-
-
 def _plane_dot_sql(vec: str, plane: list[float]) -> str:
     arr = "[" + ", ".join(repr(float(x)) for x in plane) + "]"
     return (
@@ -1321,30 +1280,19 @@ def knn_lsh_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     query buckets so dynamic partition pruning skips every non-colliding
     bucket directory — the executable 100 TB path next to the in-memory
     knn_lsh (which re-buckets the corpus every run)."""
-    import os as _os
-    import tempfile
-
     from ..operators.similarity import bucketize_corpus, probe_topk
 
-    bucket_dir = _os.path.join(
-        tempfile.gettempdir(),
-        # params AND data fingerprint in the key: a stale index from an
-        # older plane set OR a regenerated corpus at the same path must
-        # miss, not silently serve wrong buckets
-        f"spark_graft_lshbuckets_{_os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{_params_key(_PLANES, 4, _data_fingerprint(sf_dir, 'embeddings'))}",
-    )
-    if not _os.path.exists(_os.path.join(bucket_dir, "_SUCCESS")):
-        bucketize_corpus(
-            load_table(spark, sf_dir, "embeddings"),
-            "vec_id",
-            "embedding",
-            _PLANES,
-            bucket_dir,
-            bands=4,
-            dim=64,
-        )
     e = load_table(spark, sf_dir, "embeddings")
+    # params AND data fingerprint in the key: a stale index from an
+    # older plane set OR a regenerated corpus at the same path must
+    # miss, not silently serve wrong buckets
+    bucket_dir = build_once(
+        "lshbuckets", sf_dir,
+        _params_key(_PLANES, 4, _data_fingerprint(sf_dir, "embeddings")),
+        lambda work: bucketize_corpus(
+            e, "vec_id", "embedding", _PLANES, work, bands=4, dim=64
+        ),
+    )
     return probe_topk(
         e.filter(F.col("vec_id") < 10),
         bucket_dir,
@@ -1446,30 +1394,30 @@ def _ivf_persisted_index(spark: SparkSession, sf_dir: str):
     Returns (cell_dir, centroids, embeddings)."""
     import json as _json
     import os as _os
-    import tempfile
 
     from ..operators.similarity import ivf_build, kmeans_centroids
 
     e = load_table(spark, sf_dir, "embeddings")
-    cell_dir = _os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_ivfcells_{_os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{_params_key('ivf-k8-i2-seedhash-idtie', 64, _data_fingerprint(sf_dir, 'embeddings'))}",
-    )
+
     # The quantizer is PART of the index: persist the centroids next to
     # the inverted lists so warm probes skip the Lloyd iterations (which
     # dominate otherwise — the k-means passes cost more than the probe).
-    sidecar = _os.path.join(cell_dir, "_centroids.json")
-    if _os.path.exists(_os.path.join(cell_dir, "_SUCCESS")) and _os.path.exists(
-        sidecar
-    ):
-        with open(sidecar) as f:
-            centroids = _json.load(f)
-    else:
+    def build(cell_dir: str) -> None:
         centroids = kmeans_centroids(e, "embedding", k=8, iters=2, id_col="vec_id")
         ivf_build(e, "vec_id", "embedding", centroids, cell_dir, dim=64)
-        with open(sidecar, "w") as f:
+        with open(_os.path.join(cell_dir, "_centroids.json"), "w") as f:
             _json.dump(centroids, f)
+
+    cell_dir = build_once(
+        "ivfcells", sf_dir,
+        _params_key(
+            "ivf-k8-i2-seedhash-idtie", 64,
+            _data_fingerprint(sf_dir, "embeddings"),
+        ),
+        build,
+    )
+    with open(_os.path.join(cell_dir, "_centroids.json")) as f:
+        centroids = _json.load(f)
     return cell_dir, centroids, e
 
 
@@ -1875,35 +1823,27 @@ def _cells_index_dir(spark: SparkSession, sf_dir: str) -> tuple[str, list]:
     exercises."""
     import json as _json
     import os
-    import shutil
-    import tempfile
 
     from ..operators.kmeans_exact import exact_kmeans
     from ..streaming.cells import cells_ingest_batch
 
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_cellidx_{os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{_params_key('cells4x2', _data_fingerprint(sf_dir, 'embeddings'))}",
-    )
-    index_dir = os.path.join(work, "cells")
-    cents_path = os.path.join(work, "cents.json")
-    marker = os.path.join(work, "_INGESTED")
-    if not os.path.exists(marker):
-        shutil.rmtree(work, ignore_errors=True)
+    def build(work: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
         _, cents = exact_kmeans(emb, "vec_id", "embedding", k=4, iters=2)
-        os.makedirs(work, exist_ok=True)
-        with open(cents_path, "w") as fh:
+        with open(os.path.join(work, "cents.json"), "w") as fh:
             _json.dump(cents, fh)
-        body = cells_ingest_batch(spark, index_dir, cents)
+        body = cells_ingest_batch(spark, os.path.join(work, "cells"), cents)
         for i in range(3):
             body(emb.filter(F.pmod(F.hash("vec_id"), F.lit(3)) == i), i)
-        with open(marker, "w") as fh:
-            fh.write("3")
-    with open(cents_path) as fh:
+
+    work = build_once(
+        "cellidx", sf_dir,
+        _params_key("cells4x2", _data_fingerprint(sf_dir, "embeddings")),
+        build,
+    )
+    with open(os.path.join(work, "cents.json")) as fh:
         cents = _json.load(fh)
-    return index_dir, cents
+    return os.path.join(work, "cells"), cents
 
 
 @register(
@@ -2165,36 +2105,27 @@ def knn_sq8_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     this entry's bench number is the steady-state query cost."""
     import json as _json
     import os as _os
-    import tempfile
 
-    from ..operators.sq import sq8_bounds, sq8_encode, sq8_topk
+    from ..operators.sq import sq8_bounds, sq8_encode, sq8_topk, sq8_with_norm
 
     e = load_table(spark, sf_dir, "embeddings")
-    sq_dir = _os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_sq8_{_os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{_params_key('sq8', 255, _data_fingerprint(sf_dir, 'embeddings'))}",
-    )
-    bounds_path = _os.path.join(sq_dir, "bounds.json")
-    codes_dir = _os.path.join(sq_dir, "codes")
-    if not (
-        _os.path.exists(bounds_path)
-        and _os.path.exists(_os.path.join(codes_dir, "_SUCCESS"))
-    ):
-        from ..operators.sq import sq8_with_norm
 
+    def build(sq_dir: str) -> None:
         bounds = sq8_bounds(e, "embedding")
         sq8_with_norm(
             sq8_encode(e, "vec_id", "embedding", bounds), bounds
-        ).write.mode("overwrite").parquet(codes_dir)
-        _os.makedirs(sq_dir, exist_ok=True)
-        tmp = bounds_path + ".tmp"
-        with open(tmp, "w") as f:
+        ).write.parquet(_os.path.join(sq_dir, "codes"))
+        with open(_os.path.join(sq_dir, "bounds.json"), "w") as f:
             _json.dump(bounds, f)
-        _os.replace(tmp, bounds_path)  # atomic: readers never see partial
-    with open(bounds_path) as f:
+
+    sq_dir = build_once(
+        "sq8", sf_dir,
+        _params_key("sq8", 255, _data_fingerprint(sf_dir, "embeddings")),
+        build,
+    )
+    with open(_os.path.join(sq_dir, "bounds.json")) as f:
         bounds = [tuple(b) for b in _json.load(f)]
-    codes = read_parquet_memo(spark, codes_dir)
+    codes = read_parquet_memo(spark, _os.path.join(sq_dir, "codes"))
     queries = e.filter(F.col("vec_id") < 10)
     return sq8_topk(
         codes, queries, "vec_id", "embedding", bounds,
@@ -2228,25 +2159,18 @@ def knn_ivf_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     compression, nprobe/k_cells of the scan."""
     import json as _json
     import os as _os
-    import tempfile
 
     from ..operators.similarity import kmeans_centroids
-    from ..operators.sq import ivf_sq8_encode, ivf_sq8_topk, sq8_bounds
+    from ..operators.sq import (
+        _ivf_residual_frame,
+        ivf_sq8_encode,
+        ivf_sq8_topk,
+        sq8_bounds,
+    )
 
     e = load_table(spark, sf_dir, "embeddings")
-    ix_dir = _os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_ivfsq8_{_os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{_params_key('ivfsq8-res', 8, 255, _data_fingerprint(sf_dir, 'embeddings'))}",
-    )
-    quant_path = _os.path.join(ix_dir, "quantizers.json")
-    index_dir = _os.path.join(ix_dir, "index")
-    if not (
-        _os.path.exists(quant_path)
-        and _os.path.exists(_os.path.join(index_dir, "_SUCCESS"))
-    ):
-        from ..operators.sq import _ivf_residual_frame
 
+    def build(ix_dir: str) -> None:
         # the ivf_pq_persisted discipline: one collected hash-ordered
         # sample trains the coarse quantizer
         sample_rows = (
@@ -2270,15 +2194,20 @@ def knn_ivf_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         ivf_sq8_encode(
             e, "vec_id", "embedding", cents, bounds
-        ).write.partitionBy("cell").mode("overwrite").parquet(index_dir)
-        _os.makedirs(ix_dir, exist_ok=True)
-        tmp = quant_path + ".tmp"
-        with open(tmp, "w") as f:
+        ).write.partitionBy("cell").parquet(_os.path.join(ix_dir, "index"))
+        with open(_os.path.join(ix_dir, "quantizers.json"), "w") as f:
             _json.dump({"centroids": cents, "bounds": bounds}, f)
-        _os.replace(tmp, quant_path)  # atomic: readers never see partial
-    with open(quant_path) as f:
+
+    ix_dir = build_once(
+        "ivfsq8", sf_dir,
+        _params_key(
+            "ivfsq8-res", 8, 255, _data_fingerprint(sf_dir, "embeddings")
+        ),
+        build,
+    )
+    with open(_os.path.join(ix_dir, "quantizers.json")) as f:
         quant = _json.load(f)
-    index = read_parquet_memo(spark, index_dir)
+    index = read_parquet_memo(spark, _os.path.join(ix_dir, "index"))
     queries = e.filter(F.col("vec_id") < 10)
     return ivf_sq8_topk(
         index, queries, "vec_id", "embedding",
@@ -2331,34 +2260,29 @@ def knn_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-trains per run by design."""
     import json as _json
     import os as _os
-    import tempfile
 
     from ..operators.pq import pq_encode, pq_topk, pq_train
 
     e = load_table(spark, sf_dir, "embeddings")
-    pq_dir = _os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_pqcodes_{_os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{_params_key('pq-idtie', 8, 256, _data_fingerprint(sf_dir, 'embeddings'))}",
-    )
-    books_path = _os.path.join(pq_dir, "codebooks.json")
-    codes_dir = _os.path.join(pq_dir, "codes")
-    if not (
-        _os.path.exists(books_path)
-        and _os.path.exists(_os.path.join(codes_dir, "_SUCCESS"))
-    ):
+
+    def build(pq_dir: str) -> None:
         books = pq_train(e, "embedding", m=8, ksub=256, id_col="vec_id")
-        pq_encode(e, "vec_id", "embedding", books).write.mode(
-            "overwrite"
-        ).parquet(codes_dir)
-        _os.makedirs(pq_dir, exist_ok=True)
-        tmp = books_path + ".tmp"
-        with open(tmp, "w") as f:
+        pq_encode(e, "vec_id", "embedding", books).write.parquet(
+            _os.path.join(pq_dir, "codes")
+        )
+        with open(_os.path.join(pq_dir, "codebooks.json"), "w") as f:
             _json.dump(books, f)
-        _os.replace(tmp, books_path)  # atomic: readers never see partial
-    with open(books_path) as f:
+
+    pq_dir = build_once(
+        "pqcodes", sf_dir,
+        _params_key(
+            "pq-idtie", 8, 256, _data_fingerprint(sf_dir, "embeddings")
+        ),
+        build,
+    )
+    with open(_os.path.join(pq_dir, "codebooks.json")) as f:
         books = _json.load(f)
-    codes = read_parquet_memo(spark, codes_dir)
+    codes = read_parquet_memo(spark, _os.path.join(pq_dir, "codes"))
     queries = e.filter(F.col("vec_id") < 10)
     return pq_topk(
         codes, queries, "vec_id", "embedding", books, k=5,
@@ -2432,23 +2356,13 @@ def knn_ivf_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     this entry's bench number is the per-query steady state."""
     import json as _json
     import os as _os
-    import tempfile
 
     from ..operators.pq import ivf_pq_encode, ivf_pq_topk, pq_train
     from ..operators.similarity import kmeans_centroids
 
     e = load_table(spark, sf_dir, "embeddings")
-    pq_dir = _os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_ivfpq_{_os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{_params_key('ivfpq-res', 8, 8, 256, _data_fingerprint(sf_dir, 'embeddings'))}",
-    )
-    quant_path = _os.path.join(pq_dir, "quantizers.json")
-    index_dir = _os.path.join(pq_dir, "index")
-    if not (
-        _os.path.exists(quant_path)
-        and _os.path.exists(_os.path.join(index_dir, "_SUCCESS"))
-    ):
+
+    def build(pq_dir: str) -> None:
         # one collected hash-ordered sample trains BOTH quantizers (the
         # knn_ivf_pq argument: pq_train re-derives the same rows)
         sample_rows = (
@@ -2473,15 +2387,20 @@ def knn_ivf_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         ivf_pq_encode(
             e, "vec_id", "embedding", cents, books
-        ).write.partitionBy("cell").mode("overwrite").parquet(index_dir)
-        _os.makedirs(pq_dir, exist_ok=True)
-        tmp = quant_path + ".tmp"
-        with open(tmp, "w") as f:
+        ).write.partitionBy("cell").parquet(_os.path.join(pq_dir, "index"))
+        with open(_os.path.join(pq_dir, "quantizers.json"), "w") as f:
             _json.dump({"centroids": cents, "codebooks": books}, f)
-        _os.replace(tmp, quant_path)  # atomic: readers never see partial
-    with open(quant_path) as f:
+
+    pq_dir = build_once(
+        "ivfpq", sf_dir,
+        _params_key(
+            "ivfpq-res", 8, 8, 256, _data_fingerprint(sf_dir, "embeddings")
+        ),
+        build,
+    )
+    with open(_os.path.join(pq_dir, "quantizers.json")) as f:
         quant = _json.load(f)
-    index = read_parquet_memo(spark, index_dir)
+    index = read_parquet_memo(spark, _os.path.join(pq_dir, "index"))
     queries = e.filter(F.col("vec_id") < 10)
     return ivf_pq_topk(
         index, queries, "vec_id", "embedding",
@@ -2754,8 +2673,8 @@ def _lsh_scored_cte() -> str:
 
 def lsh_pairs_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The banded-LSH near-dup pair set (cosine_near_dup_pairs with the
-    closed-form _PLANES, τ=0.4) persisted once per corpus under /tmp —
-    the knn persisted-index discipline (r14 verdict #4). The pair set is
+    closed-form _PLANES, τ=0.4) persisted once per corpus through
+    ``sources.tables.build_once`` (r14 verdict #4). The pair set is
     the SHARED upstream of the whole LSH dup-graph family; deriving it
     is ~90% of any one entry's cost, so the graph entries read it here
     and their probe measures the iterations, not the derivation. At
@@ -2765,32 +2684,25 @@ def lsh_pairs_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted rows equal the inline derivation exactly, so the FULL
     unrolled-CTE oracles are unchanged."""
     import os
-    import shutil
-    import tempfile
 
     from ..operators.similarity import cosine_near_dup_pairs
 
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_lshpairs_{os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{_params_key('lshp4x2t04', _data_fingerprint(sf_dir, 'embeddings'))}",
-    )
-    pair_dir = os.path.join(work, "pairs")
-    marker = os.path.join(work, "_WRITTEN")
-    if not os.path.exists(marker):
-        # a partial write (crash mid-job) must rebuild, never serve
-        shutil.rmtree(work, ignore_errors=True)
+    def build(work: str) -> None:
         e = load_table(spark, sf_dir, "embeddings")
         (
             cosine_near_dup_pairs(
                 e, "vec_id", "embedding", threshold=0.4, planes=_PLANES, dim=64
             )
             .select("id_a", "id_b")
-            .write.parquet(pair_dir)
+            .write.parquet(os.path.join(work, "pairs"))
         )
-        with open(marker, "w") as fh:
-            fh.write("1")
-    return read_parquet_memo(spark, pair_dir)
+
+    work = build_once(
+        "lshpairs", sf_dir,
+        _params_key("lshp4x2t04", _data_fingerprint(sf_dir, "embeddings")),
+        build,
+    )
+    return read_parquet_memo(spark, os.path.join(work, "pairs"))
 
 
 @register(
@@ -6023,44 +5935,31 @@ def _calibrate_per_fp(per_fp: DataFrame) -> DataFrame:
     )
 
 
-def _calib_work_dir(sf_dir: str) -> str:
-    """The /tmp cache root for this corpus's calibration mart (keyed by
-    params + data fingerprint — the knn persisted discipline)."""
-    import os
-    import tempfile
-
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_calibidx_{os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{_params_key('calib3', _data_fingerprint(sf_dir, 'documents'))}",
-    )
+def _calib_key(sf_dir: str) -> str:
+    """Build-cache key of this corpus's calibration mart."""
+    return _params_key("calib3", _data_fingerprint(sf_dir, "documents"))
 
 
 def _calib_index_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Ensure the 3-batch calibration-mart ingest exists under /tmp for
-    this corpus and return the index dir. Batches split by a hash of the
-    doc id, so fingerprint groups SPAN batches — the label monoid, not
-    batch-local luck, is what the live pin exercises."""
+    """Ensure the 3-batch calibration-mart ingest exists for this corpus
+    (``sources.tables.build_once``) and return the index dir. Batches
+    split by a hash of the doc id, so fingerprint groups SPAN batches —
+    the label monoid, not batch-local luck, is what the live pin
+    exercises."""
     import os
-    import shutil
 
     from ..streaming.calibration import calib_ingest_batch
 
-    work = _calib_work_dir(sf_dir)
-    index_dir = os.path.join(work, "perdoc")
-    marker = os.path.join(work, "_INGESTED")
-    if not os.path.exists(marker):
-        # a partial ingest (crash mid-batch) must rebuild, never serve
-        shutil.rmtree(work, ignore_errors=True)
+    def build(work: str) -> None:
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "text"
         )
-        body = calib_ingest_batch(spark, index_dir)
+        body = calib_ingest_batch(spark, os.path.join(work, "perdoc"))
         for i in range(3):
             body(docs.filter(F.pmod(F.hash("doc_id"), F.lit(3)) == i), i)
-        with open(marker, "w") as fh:
-            fh.write("3")
-    return index_dir
+
+    work = build_once("calibidx", sf_dir, _calib_key(sf_dir), build)
+    return os.path.join(work, "perdoc")
 
 
 @register(
@@ -6155,8 +6054,8 @@ def corpus_curate_calibrated(spark: SparkSession, sf_dir: str) -> DataFrame:
     # twin's own equality pin).
     import os as _os
 
-    _work = _calib_work_dir(sf_dir)
-    if _os.path.exists(_os.path.join(_work, "_INGESTED")):
+    _work = build_once("calibidx", sf_dir, _calib_key(sf_dir))
+    if _work is not None:
         from ..streaming.calibration import fold_calib
 
         per_fp = fold_calib(spark, _os.path.join(_work, "perdoc"))
@@ -6382,34 +6281,26 @@ def embed_spectral_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _gram_index_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Ensure the 3-batch Gram-mart ingest exists under /tmp for this
-    corpus (keyed by params + data fingerprint — the knn persisted
-    discipline) and return the index dir. Batches split by a hash of
-    the vector id, so every batch contributes to every Gram cell — the
-    additive fold, not batch-local luck, is what the live pin
-    exercises."""
+    """Ensure the 3-batch Gram-mart ingest exists for this corpus
+    (``sources.tables.build_once``) and return the index dir. Batches
+    split by a hash of the vector id, so every batch contributes to every
+    Gram cell — the additive fold, not batch-local luck, is what the live
+    pin exercises."""
     import os
-    import shutil
-    import tempfile
 
     from ..streaming.spectral import gram_ingest_batch
 
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_gramidx_{os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{_params_key('gram3', _data_fingerprint(sf_dir, 'embeddings'))}",
-    )
-    index_dir = os.path.join(work, "gram")
-    marker = os.path.join(work, "_INGESTED")
-    if not os.path.exists(marker):
-        shutil.rmtree(work, ignore_errors=True)
+    def build(work: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
-        body = gram_ingest_batch(spark, index_dir)
+        body = gram_ingest_batch(spark, os.path.join(work, "gram"))
         for i in range(3):
             body(emb.filter(F.pmod(F.hash("vec_id"), F.lit(3)) == i), i)
-        with open(marker, "w") as fh:
-            fh.write("3")
-    return index_dir
+
+    work = build_once(
+        "gramidx", sf_dir,
+        _params_key("gram3", _data_fingerprint(sf_dir, "embeddings")), build,
+    )
+    return os.path.join(work, "gram")
 
 
 @register(

@@ -256,27 +256,19 @@ def price_quantiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Ensure bucketed external copies of orders/customer (8 buckets on
-    the customer key, bucket-sorted) exist under /tmp for this corpus
-    (keyed by params + data fingerprint — the knn persisted discipline)
-    and are registered in THIS session's catalog (the default in-memory
-    catalog is session-scoped, so a reusing session re-registers the
-    existing files via CREATE TABLE ... CLUSTERED BY ... LOCATION)."""
+    the customer key, bucket-sorted) exist for this corpus
+    (``sources.tables.build_once``) and are registered in THIS session's
+    catalog (the default in-memory catalog is session-scoped, so a
+    reusing session re-registers the existing files via CREATE TABLE ...
+    CLUSTERED BY ... LOCATION; after a build they already are)."""
     import os
-    import shutil
-    import tempfile
 
-    from .llm import _data_fingerprint, _params_key
+    from ..sources.tables import _data_fingerprint, _params_key, build_once
 
     key = _params_key("bkt8", _data_fingerprint(sf_dir, "orders"))
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_bktidx_{os.path.basename(sf_dir.rstrip('/'))}_{key}",
-    )
     tbl_o, tbl_c = f"bkt_orders_{key}", f"bkt_customer_{key}"
-    marker = os.path.join(work, "_WRITTEN")
-    if not os.path.exists(marker):
-        # a partial write (crash mid-table) must rebuild, never serve
-        shutil.rmtree(work, ignore_errors=True)
+
+    def build(work: str) -> None:
         spark.sql(f"DROP TABLE IF EXISTS {tbl_o}")
         spark.sql(f"DROP TABLE IF EXISTS {tbl_c}")
         load_table(spark, sf_dir, "orders").select(
@@ -289,21 +281,20 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         ).write.bucketBy(8, "c_custkey").sortBy("c_custkey").option(
             "path", os.path.join(work, "customer")
         ).saveAsTable(tbl_c)
-        with open(marker, "w") as fh:
-            fh.write("1")
-    else:
-        spark.sql(
-            f"CREATE TABLE IF NOT EXISTS {tbl_o} "
-            "(o_orderkey BIGINT, o_custkey BIGINT, o_totalprice DOUBLE) "
-            "USING parquet CLUSTERED BY (o_custkey) SORTED BY (o_custkey) "
-            f"INTO 8 BUCKETS LOCATION '{work}/orders'"
-        )
-        spark.sql(
-            f"CREATE TABLE IF NOT EXISTS {tbl_c} "
-            "(c_custkey BIGINT, c_nationkey BIGINT) "
-            "USING parquet CLUSTERED BY (c_custkey) SORTED BY (c_custkey) "
-            f"INTO 8 BUCKETS LOCATION '{work}/customer'"
-        )
+
+    work = build_once("bktidx", sf_dir, key, build)
+    spark.sql(
+        f"CREATE TABLE IF NOT EXISTS {tbl_o} "
+        "(o_orderkey BIGINT, o_custkey BIGINT, o_totalprice DOUBLE) "
+        "USING parquet CLUSTERED BY (o_custkey) SORTED BY (o_custkey) "
+        f"INTO 8 BUCKETS LOCATION '{work}/orders'"
+    )
+    spark.sql(
+        f"CREATE TABLE IF NOT EXISTS {tbl_c} "
+        "(c_custkey BIGINT, c_nationkey BIGINT) "
+        "USING parquet CLUSTERED BY (c_custkey) SORTED BY (c_custkey) "
+        f"INTO 8 BUCKETS LOCATION '{work}/customer'"
+    )
     return tbl_o, tbl_c
 
 
@@ -405,24 +396,16 @@ def _bucketed_ol_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     the ORDER key (8 buckets, bucket-sorted) exist under /tmp for this
     corpus — the reference's own J1 join shape (order header × order
     detail, dws/OrderWideApp.scala:98-111) served by the storage layout
-    instead of a per-batch shuffle. Same fingerprint/marker discipline
+    instead of a per-batch shuffle. Same build cache and registration
     as :func:`_bucketed_tables`."""
     import os
-    import shutil
-    import tempfile
 
-    from .llm import _data_fingerprint, _params_key
+    from ..sources.tables import _data_fingerprint, _params_key, build_once
 
     key = _params_key("bktol8", _data_fingerprint(sf_dir, "lineitem"))
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_bktolidx_{os.path.basename(sf_dir.rstrip('/'))}_{key}",
-    )
     tbl_o, tbl_l = f"bktol_orders_{key}", f"bktol_lineitem_{key}"
-    marker = os.path.join(work, "_WRITTEN")
-    if not os.path.exists(marker):
-        # a partial write (crash mid-table) must rebuild, never serve
-        shutil.rmtree(work, ignore_errors=True)
+
+    def build(work: str) -> None:
         spark.sql(f"DROP TABLE IF EXISTS {tbl_o}")
         spark.sql(f"DROP TABLE IF EXISTS {tbl_l}")
         load_table(spark, sf_dir, "orders").select(
@@ -435,21 +418,20 @@ def _bucketed_ol_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         ).write.bucketBy(8, "l_orderkey").sortBy("l_orderkey").option(
             "path", os.path.join(work, "lineitem")
         ).saveAsTable(tbl_l)
-        with open(marker, "w") as fh:
-            fh.write("1")
-    else:
-        spark.sql(
-            f"CREATE TABLE IF NOT EXISTS {tbl_o} "
-            "(o_orderkey BIGINT, o_orderpriority STRING) "
-            "USING parquet CLUSTERED BY (o_orderkey) SORTED BY (o_orderkey) "
-            f"INTO 8 BUCKETS LOCATION '{work}/orders'"
-        )
-        spark.sql(
-            f"CREATE TABLE IF NOT EXISTS {tbl_l} "
-            "(l_orderkey BIGINT, l_extendedprice DOUBLE, l_discount DOUBLE) "
-            "USING parquet CLUSTERED BY (l_orderkey) SORTED BY (l_orderkey) "
-            f"INTO 8 BUCKETS LOCATION '{work}/lineitem'"
-        )
+
+    work = build_once("bktolidx", sf_dir, key, build)
+    spark.sql(
+        f"CREATE TABLE IF NOT EXISTS {tbl_o} "
+        "(o_orderkey BIGINT, o_orderpriority STRING) "
+        "USING parquet CLUSTERED BY (o_orderkey) SORTED BY (o_orderkey) "
+        f"INTO 8 BUCKETS LOCATION '{work}/orders'"
+    )
+    spark.sql(
+        f"CREATE TABLE IF NOT EXISTS {tbl_l} "
+        "(l_orderkey BIGINT, l_extendedprice DOUBLE, l_discount DOUBLE) "
+        "USING parquet CLUSTERED BY (l_orderkey) SORTED BY (l_orderkey) "
+        f"INTO 8 BUCKETS LOCATION '{work}/lineitem'"
+    )
     return tbl_o, tbl_l
 
 

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..functions.dates import dt_of, hr_of
 from ..sources import load_table
+from ..sources.tables import _data_fingerprint, _params_key, build_once
 from .catalog import register
 from .scale import _ISOTONIC_ORACLE
 
@@ -149,32 +150,21 @@ def kmv_distinct_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kmv_index_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Ensure the 3-batch KMV ingest exists under /tmp for this corpus
-    (keyed by params + data fingerprint — the knn persisted discipline)
-    and return the index dir."""
-    import shutil
-    import tempfile
-
+    """Ensure the 3-batch KMV ingest exists for this corpus
+    (``sources.tables.build_once``) and return the index dir."""
     from ..streaming.kmv import kmv_ingest_batch
-    from .llm import _data_fingerprint, _params_key
 
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_kmvidx_{os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{_params_key('kmv3', _data_fingerprint(sf_dir, 'events'))}",
-    )
-    index_dir = os.path.join(work, "kmins")
-    marker = os.path.join(work, "_INGESTED")
-    if not os.path.exists(marker):
-        # a partial ingest (crash mid-batch) must rebuild, never serve
-        shutil.rmtree(work, ignore_errors=True)
+    def build(work: str) -> None:
         ev = load_table(spark, sf_dir, "events").select("ts", "user_id")
-        body = kmv_ingest_batch(spark, index_dir)
+        body = kmv_ingest_batch(spark, os.path.join(work, "kmins"))
         for i in range(3):
             body(ev.filter(F.pmod(F.hash("user_id"), F.lit(3)) == i), i)
-        with open(marker, "w") as fh:
-            fh.write("3")
-    return index_dir
+
+    work = build_once(
+        "kmvidx", sf_dir,
+        _params_key("kmv3", _data_fingerprint(sf_dir, "events")), build,
+    )
+    return os.path.join(work, "kmins")
 
 
 @register(
@@ -385,26 +375,13 @@ def kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _nation_daily_index_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Ensure the 3-batch nation-daily ingest exists under /tmp for this
-    corpus (keyed by params + data fingerprint — the knn persisted
-    discipline) and return the daily index dir. ONE ingest serves every
-    read-side smoothing monitor (revenue_ewma_live, holt_forecast_live)."""
-    import shutil
-    import tempfile
-
+    """Ensure the 3-batch nation-daily ingest exists for this corpus
+    (``sources.tables.build_once``) and return the daily index dir. ONE
+    ingest serves every read-side smoothing monitor (revenue_ewma_live,
+    holt_forecast_live)."""
     from ..streaming.nationdaily import nation_daily_ingest_batch
-    from .llm import _data_fingerprint, _params_key
 
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_natdayidx_{os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{_params_key('natday3', _data_fingerprint(sf_dir, 'orders'))}",
-    )
-    daily_dir = os.path.join(work, "daily")
-    marker = os.path.join(work, "_INGESTED")
-    if not os.path.exists(marker):
-        # a partial ingest (crash mid-batch) must rebuild, never serve
-        shutil.rmtree(work, ignore_errors=True)
+    def build(work: str) -> None:
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey",
             "o_custkey",
@@ -422,7 +399,7 @@ def _nation_daily_index_dir(spark: SparkSession, sf_dir: str) -> str:
         enriched = o.join(cu, o["o_custkey"] == cu["c_custkey"]).join(
             F.broadcast(na), cu["c_nationkey"] == na["n_nationkey"]
         )
-        body = nation_daily_ingest_batch(spark, daily_dir)
+        body = nation_daily_ingest_batch(spark, os.path.join(work, "daily"))
         for i in range(3):
             body(
                 enriched.filter(
@@ -430,9 +407,12 @@ def _nation_daily_index_dir(spark: SparkSession, sf_dir: str) -> str:
                 ),
                 i,
             )
-        with open(marker, "w") as fh:
-            fh.write("3")
-    return daily_dir
+
+    work = build_once(
+        "natdayidx", sf_dir,
+        _params_key("natday3", _data_fingerprint(sf_dir, "orders")), build,
+    )
+    return os.path.join(work, "daily")
 
 
 _EWMA_ORACLE = """
@@ -1052,12 +1032,11 @@ def brand_affinity_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch is the whole claim (also pinned over random splits + replays
     in tests/test_streaming_basket.py).
 
-    The counter indexes persist under /tmp keyed by params + data
-    fingerprint (the knn_*_persisted discipline, r11 verdict #3): the
-    FIRST call per corpus pays the 3-batch ingest (bench build_sec);
-    steady-state calls are the read-side fold only — the number that
-    predicts live serving, where ingest is a continuous background
-    cost, not part of every read."""
+    The counter indexes persist through ``sources.tables.build_once``
+    (r11 verdict #3): the FIRST call per corpus pays the 3-batch ingest
+    (bench build_sec); steady-state calls are the read-side fold only —
+    the number that predicts live serving, where ingest is a continuous
+    background cost, not part of every read."""
     from ..streaming.basket import brand_affinity_live
 
     counters_dir, _carry = _basket_index_dirs(spark, sf_dir)
@@ -1067,30 +1046,13 @@ def brand_affinity_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _basket_index_dirs(spark: SparkSession, sf_dir: str) -> list[str]:
-    """Ensure the 3-batch basket counter ingest exists under /tmp for
-    this corpus (keyed by params + data fingerprint — the knn persisted
-    discipline) and return [counters, carry] dirs. ONE ingest
-    serves every read-side query over the counters (brand_affinity_
-    stream, assoc_rules_live)."""
-    import shutil
-    import tempfile
-
+    """Ensure the 3-batch basket counter ingest exists for this corpus
+    (``sources.tables.build_once``) and return [counters, carry] dirs.
+    ONE ingest serves every read-side query over the counters
+    (brand_affinity_stream, assoc_rules_live)."""
     from ..streaming.basket import basket_ingest_batch
-    from .llm import _data_fingerprint, _params_key
 
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_basketidx_{os.path.basename(sf_dir.rstrip('/'))}_"
-        # basket4: the r16 unified single-write counter layout — a new
-        # params key so a leftover three-index basket3 dir can never be
-        # read as (or collide with) the unified layout
-        f"{_params_key('basket4', _data_fingerprint(sf_dir, 'lineitem'), _data_fingerprint(sf_dir, 'part'))}",
-    )
-    dirs = [os.path.join(work, d) for d in ("counters", "carry")]
-    marker = os.path.join(work, "_INGESTED")
-    if not os.path.exists(marker):
-        # a partial ingest (crash mid-batch) must rebuild, never serve
-        shutil.rmtree(work, ignore_errors=True)
+    def build(work: str) -> None:
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey"
         )
@@ -1104,13 +1066,26 @@ def _basket_index_dirs(spark: SparkSession, sf_dir: str) -> list[str]:
             .select(F.col("l_orderkey").alias("o"), F.col("p_brand").alias("b"))
             .persist()
         )
-        body = basket_ingest_batch(spark, *dirs)
+        body = basket_ingest_batch(
+            spark, os.path.join(work, "counters"), os.path.join(work, "carry")
+        )
         for i in range(3):
             body(ob.filter(F.pmod(F.hash("o", "b"), F.lit(3)) == i), i)
         ob.unpersist()
-        with open(marker, "w") as fh:
-            fh.write("3")
-    return dirs
+
+    work = build_once(
+        "basketidx", sf_dir,
+        # basket4: the r16 unified single-write counter layout — a new
+        # params key so a leftover three-index basket3 dir can never be
+        # read as (or collide with) the unified layout
+        _params_key(
+            "basket4",
+            _data_fingerprint(sf_dir, "lineitem"),
+            _data_fingerprint(sf_dir, "part"),
+        ),
+        build,
+    )
+    return [os.path.join(work, d) for d in ("counters", "carry")]
 
 
 @register(
@@ -1213,8 +1188,8 @@ def spc_violations_live_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule engine the batch query uses (operators/spc.py). Oracle:
     identical SQL to spc_violations — streamed == batch is the whole
     claim (pinned over random splits + replays in
-    tests/test_streaming_spc.py). The index persists under /tmp keyed
-    by data fingerprint (knn persisted discipline): first call ingests
+    tests/test_streaming_spc.py). The index persists through
+    ``sources.tables.build_once``: first call ingests
     (bench build_sec), steady-state calls fold + evaluate."""
     from ..streaming.spc import spc_violations_live
 
@@ -1223,27 +1198,13 @@ def spc_violations_live_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _spc_index_dirs(spark: SparkSession, sf_dir: str) -> str:
-    """Ensure the 3-batch daily-revenue ingest exists under /tmp for
-    this corpus (keyed by params + data fingerprint — the knn persisted
-    discipline) and return the daily index dir. ONE ingest serves every
-    read-side monitor over the daily partials (spc_violations_live,
-    dow_seasonal_factors_live)."""
-    import shutil
-    import tempfile
-
+    """Ensure the 3-batch daily-revenue ingest exists for this corpus
+    (``sources.tables.build_once``) and return the daily index dir. ONE
+    ingest serves every read-side monitor over the daily partials
+    (spc_violations_live, dow_seasonal_factors_live)."""
     from ..streaming.spc import spc_ingest_batch
-    from .llm import _data_fingerprint, _params_key
 
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_spcidx_{os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{_params_key('spc3', _data_fingerprint(sf_dir, 'orders'))}",
-    )
-    daily_dir = os.path.join(work, "daily")
-    marker = os.path.join(work, "_INGESTED")
-    if not os.path.exists(marker):
-        # a partial ingest (crash mid-batch) must rebuild, never serve
-        shutil.rmtree(work, ignore_errors=True)
+    def build(work: str) -> None:
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey",
             F.to_date("o_orderdate").alias("d"),
@@ -1251,12 +1212,15 @@ def _spc_index_dirs(spark: SparkSession, sf_dir: str) -> str:
             .cast("long")
             .alias("cents"),
         )
-        body = spc_ingest_batch(spark, daily_dir)
+        body = spc_ingest_batch(spark, os.path.join(work, "daily"))
         for i in range(3):
             body(o.filter(F.pmod(F.hash("o_orderkey"), F.lit(3)) == i), i)
-        with open(marker, "w") as fh:
-            fh.write("3")
-    return daily_dir
+
+    work = build_once(
+        "spcidx", sf_dir,
+        _params_key("spc3", _data_fingerprint(sf_dir, "orders")), build,
+    )
+    return os.path.join(work, "daily")
 
 
 @register(

@@ -11,10 +11,12 @@ that commits aggregates + Kafka offsets atomically
 Spark-first, all of these reduce to TWO patterns:
 
 1. **Idempotent-by-key writes** (ES doc-id, Phoenix upsert, dim MERGE):
-   ``upsert_parquet`` — last-write-wins per business key. In production
-   this is a Delta/Iceberg ``MERGE INTO``; the parquet read-union-overwrite
-   here has identical semantics for the dimension sizes involved (dims are
-   small by definition; facts never go through this path).
+   one merge, ``apply_cdc_parquet`` — per key the last change wins and a
+   ``'delete'`` change removes the key. ``upsert_parquet`` is that merge
+   with no delete rows. In production this is a Delta/Iceberg
+   ``MERGE INTO``; the parquet read-union-overwrite here has identical
+   semantics for the dimension sizes involved (dims are small by
+   definition; facts never go through this path).
 
 2. **Idempotent-by-batch writes** (the exactly-once aggregate sink):
    ``IdempotentBatchWriter`` — each micro-batch lands in its own
@@ -24,10 +26,12 @@ Spark-first, all of these reduce to TWO patterns:
    the same input rows, which is exactly the invariant the reference buys
    with its results+offsets MySQL transaction — no distributed transaction
    needed (same argument as the reference's driver-side local tx, without
-   the collect()).
+   the collect()). ``AppendOnlyIndex`` builds a persisted probe index on
+   the same writer and schedules its own compaction.
 
-At 100 TB: both patterns shard by key/partition dir and never collect to
-the driver; the ledger is filesystem-atomic (directory rename) per batch.
+Every rewrite of a whole directory — the dim merge and the index
+compaction — commits through one swap, ``swap_dir``, whose crash matrix
+``recover_dir`` resolves.
 """
 
 from __future__ import annotations
@@ -112,17 +116,17 @@ def has_parquet(path: str) -> bool:
 
 
 def recover_dir(path: str) -> None:
-    """Roll a ``upsert_parquet`` target forward/back after a crash.
+    """Roll a ``swap_dir`` target forward/back after a crash.
 
-    Crash matrix of the swap below (tmp = newest complete merge once its
+    Crash matrix of the swap (tmp = newest complete generation once its
     ``_SUCCESS`` exists, old = previous generation):
     - crash before tmp/_SUCCESS: target untouched → drop the partial tmp;
     - crash after tmp/_SUCCESS, before/while swapping: roll FORWARD to tmp
       (it already contains the merge of old + updates);
     - crash after the swap, before old cleanup: target is current → drop
       old.
-    Idempotent; called on entry by ``upsert_parquet`` and by readers
-    (``AppendOnlyIndex``, streaming/scd2.py) so a crashed upsert can
+    Idempotent; called on entry by the dim merge and by readers
+    (``AppendOnlyIndex``, streaming/scd2.py) so a crashed swap can
     never present as an empty table.
     """
     import shutil
@@ -147,6 +151,30 @@ def recover_dir(path: str) -> None:
         os.rename(old, path)  # swap lost both renames' target — roll back
 
 
+def swap_dir(path: str, write) -> None:
+    """Replace the directory ``path`` with a new generation: ``write(tmp)``
+    materializes it beside the target (a Spark write, whose ``_SUCCESS``
+    marks it complete), then two renames swap it in and the previous
+    generation is dropped. The caller may be replacing the directory it
+    read from, so nothing touches ``path`` until tmp is complete.
+    Directory renames are atomic on a local FS; the window between them
+    is covered by ``recover_dir``'s crash matrix, so no crash point loses
+    the table."""
+    import shutil
+
+    tmp = path.rstrip("/") + ".tmp"
+    old = path.rstrip("/") + ".old"
+    write(tmp)
+    if os.path.isdir(path):
+        os.rename(path, old)
+    os.rename(tmp, path)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+# the op column upsert_parquet adds for the merge; its value never deletes
+_UPSERT_OP = "_upsert_op"
+
+
 def upsert_parquet(
     spark: SparkSession,
     updates: DataFrame,
@@ -155,53 +183,21 @@ def upsert_parquet(
     order_col: str | None = None,
 ) -> None:
     """Dim-table upsert (Phoenix saveToPhoenix / Delta MERGE analog):
-    last-write-wins per ``key_cols``.
+    last-write-wins per ``key_cols`` — ``apply_cdc_parquet`` with no
+    delete rows.
 
     New rows win over existing rows for the same key; among duplicates
     within ``updates`` the max ``order_col`` wins (ties broken arbitrarily
     but deterministically by a payload hash, so replays pick the same
-    winner). Production: Delta
-    ``MERGE INTO``; this read-union-overwrite is for small dims only.
-    """
-    import shutil
-
-    from pyspark.sql import Window
-
-    recover_dir(path)
-    if has_parquet(path):
-        current = spark.read.parquet(path).withColumn("_gen", F.lit(0))
-    else:
-        current = None
-    fresh = updates.withColumn("_gen", F.lit(1))
-    allrows = fresh if current is None else current.unionByName(fresh)
-    order = [F.col("_gen").desc()]
-    if order_col is not None:
-        order.append(F.col(order_col).desc())
-    # Equal-order duplicates must not leave the winner to shuffle order
-    # (row_number over a tie is otherwise run-dependent, breaking the
-    # byte-idempotent-replay contract): a payload hash makes the pick
-    # arbitrary but replay-stable.
-    order.append(
-        F.xxhash64(*[F.col(c) for c in updates.columns]).desc()
+    winner)."""
+    apply_cdc_parquet(
+        spark,
+        updates.withColumn(_UPSERT_OP, F.lit("upsert")),
+        path,
+        key_cols,
+        op_col=_UPSERT_OP,
+        order_col=order_col,
     )
-    w = Window.partitionBy(*key_cols).orderBy(*order)
-    merged = (
-        allrows.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_gen")
-    )
-    # Materialize to tmp (we're replacing the directory we read from),
-    # then swap via two renames. Directory renames are atomic on a local
-    # FS; the window between them is covered by recover_dir's crash
-    # matrix — tmp's _SUCCESS marks it authoritative, so no crash point
-    # loses the table (the round-trip-overwrite this replaces could).
-    tmp = path.rstrip("/") + ".tmp"
-    old = path.rstrip("/") + ".old"
-    merged.write.mode("overwrite").parquet(tmp)
-    if os.path.isdir(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
 
 
 def apply_cdc_parquet(
@@ -212,7 +208,7 @@ def apply_cdc_parquet(
     op_col: str = "op",
     order_col: str | None = None,
 ) -> None:
-    """Full CDC apply — ``upsert_parquet`` plus DELETE semantics (the
+    """The dim merge — full CDC apply with DELETE semantics (the
     Maxwell/Canal 'delete' rows the insert-only router drops for facts
     but a mirrored DIM table must honor): per key, the LAST change in
     the batch wins (``order_col`` desc; batch rows beat the stored row);
@@ -223,17 +219,15 @@ def apply_cdc_parquet(
     the same winning row per key (a re-applied delete finds the key
     already absent and keeps it absent; a re-applied upsert overwrites
     byte-identically), so a foreachBatch retry is harmless. Crash-safe
-    via the same two-rename swap as upsert_parquet. ``op_col`` values:
-    anything equal to ``'delete'`` removes; every other value upserts
-    (Maxwell's insert/update/bootstrap-insert all carry the full row).
+    via ``swap_dir``. ``op_col`` values: anything equal to ``'delete'``
+    removes; every other value upserts (Maxwell's
+    insert/update/bootstrap-insert all carry the full row).
 
     ``order_col`` should totally order each key's changes (a binlog
     offset / Maxwell xid, not a second-resolution timestamp); when it
     does not, ties resolve deterministically — delete first, then payload
     hash — so a replay can never flip the outcome (see the window sort
     below)."""
-    import shutil
-
     from pyspark.sql import Window
 
     recover_dir(path)
@@ -271,13 +265,7 @@ def apply_cdc_parquet(
         .filter((F.col("_rn") == 1) & (F.col(op_col) != "delete"))
         .drop("_rn", "_gen", op_col)
     )
-    tmp = path.rstrip("/") + ".tmp"
-    old = path.rstrip("/") + ".old"
-    merged.write.mode("overwrite").parquet(tmp)
-    if os.path.isdir(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
+    swap_dir(path, merged.write.mode("overwrite").parquet)
 
 
 def kafka_fanout(
@@ -309,7 +297,9 @@ class AppendOnlyIndex:
     accumulate one directory of small files per micro-batch forever.
 
     ``compact(upto)`` folds base ∪ batch dirs ≤ upto into a new base via
-    the ``recover_dir`` two-rename swap, then deletes the folded dirs.
+    ``swap_dir``, then deletes the folded dirs. With ``compact_every=N``
+    the index schedules that itself: ``append(df, N·k)`` folds every
+    batch below N·k once its own dir is written.
     Crash matrix: a crash before the swap leaves the old base + dirs
     authoritative; a crash after the swap but mid-delete leaves batch
     dirs whose rows are ALSO in base — readers must therefore tolerate
@@ -317,6 +307,11 @@ class AppendOnlyIndex:
     duplicate fingerprint hits collapse in the per-fp aggregate). Only
     compact batches strictly below the stream's in-flight batch id:
     a replay can rewrite the in-flight directory, never committed ones.
+
+    A body that appends must be done reading the index lazily: the fold
+    inside ``append`` deletes the folded dirs. The bodies write their
+    outputs first and their indexes last (streaming/dedup.py), which
+    keeps that true.
     """
 
     def __init__(
@@ -325,7 +320,11 @@ class AppendOnlyIndex:
         identity_rows: bool = True,
         partition_by: tuple[str, ...] = (),
         schema: str | None = None,
+        compact_every: int | None = None,
     ):
+        if compact_every is not None and compact_every < 1:
+            raise ValueError("compact_every must be >= 1")
+        self.compact_every = compact_every
         self.index_dir = index_dir
         # partition_by threads an inner layout through every generation
         # (batch dirs AND the compacted base): the streaming IVF index
@@ -349,7 +348,20 @@ class AppendOnlyIndex:
         self.identity_rows = identity_rows
 
     def append(self, df: DataFrame, batch_id: int) -> None:
+        """Write ``df`` as the ``batch_id=N`` dir; every ``compact_every``
+        batches, then fold the committed dirs (ids < ``batch_id``) into
+        the base. The in-flight dir is never folded: a post-crash replay
+        may rewrite it. A crash inside the fold replays the batch, which
+        re-appends and re-folds — ``compact`` is idempotent and dedups.
+        Cost is O(index) every N batches, amortized O(index/N) per batch;
+        reads get faster after each fold (one base beats N small dirs)."""
         self._writer(df, batch_id)
+        if (
+            self.compact_every
+            and batch_id > 0
+            and batch_id % self.compact_every == 0
+        ):
+            self.compact(df.sparkSession, upto_batch_id=batch_id - 1)
 
     def _batch_ids(self) -> list[int]:
         if not os.path.isdir(self.index_dir):
@@ -493,25 +505,23 @@ class AppendOnlyIndex:
                 "index) instead of compacting in place."
             )
         merged = merged.dropDuplicates()
-        tmp = self._base + ".tmp"
-        old = self._base + ".old"
-        writer = merged.write.mode("overwrite")
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(tmp)
-        # stamp the fold horizon INSIDE the new generation before the
-        # swap (underscore-prefixed: parquet readers skip it) — read()'s
-        # time-travel contract needs to know which ids are gone
         try:
             prior = self._horizon()
         except ValueError:  # legacy base without a marker
             prior = -1
-        with open(os.path.join(tmp, "_horizon"), "w") as f:
-            f.write(str(max([prior] + todo)))
-        if os.path.isdir(self._base):
-            os.rename(self._base, old)
-        os.rename(tmp, self._base)
-        shutil.rmtree(old, ignore_errors=True)
+
+        def write(tmp: str) -> None:
+            writer = merged.write.mode("overwrite")
+            if self.partition_by:
+                writer = writer.partitionBy(*self.partition_by)
+            writer.parquet(tmp)
+            # stamp the fold horizon INSIDE the new generation before the
+            # swap (underscore-prefixed: parquet readers skip it) — read()'s
+            # time-travel contract needs to know which ids are gone
+            with open(os.path.join(tmp, "_horizon"), "w") as f:
+                f.write(str(max([prior] + todo)))
+
+        swap_dir(self._base, write)
         for b in todo:
             shutil.rmtree(
                 os.path.join(self.index_dir, f"batch_id={b}"),

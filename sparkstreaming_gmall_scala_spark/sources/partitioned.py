@@ -18,19 +18,19 @@ reads 0.1% of the files and a five-day DPP join 0.5%, independent of
 cluster size. The reference has no analog — its events live in Kafka
 topics and every consumer replays the full retention window.
 
-The one-time partitioned write follows the knn persisted-index
-discipline: cached under /tmp keyed by params + data fingerprint, with a
-_WRITTEN marker so a partial (crashed) write rebuilds instead of
-serving. No catalog table is needed — ``spark.read.parquet`` discovers
-``dt=...`` directories and exposes ``dt`` as a DATE partition column,
-which is exactly what both pruning forms key on.
+The one-time partitioned write goes through the engine's build cache
+(``sources.tables.build_once``): keyed by params + data fingerprint, and
+marked complete only after the write, so a partial (crashed) write
+rebuilds instead of serving. No catalog table is needed —
+``spark.read.parquet`` discovers ``dt=...`` directories and exposes
+``dt`` as a DATE partition column, which is exactly what both pruning
+forms key on.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -57,30 +57,23 @@ def partitioned_events_path(spark: SparkSession, sf_dir: str) -> str:
     """Ensure a dt-partitioned copy of the events table exists under
     /tmp for this corpus and return its root path. ``dt`` is the event
     date (UTC); everything else is carried as-is."""
-    from ..plans.llm import _data_fingerprint, _params_key
-    from . import load_table
+    from .tables import _data_fingerprint, _params_key, build_once, load_table
 
-    key = _params_key("dtpart", _data_fingerprint(sf_dir, "events"))
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_dtpart_{os.path.basename(sf_dir.rstrip('/'))}_{key}",
-    )
-    marker = os.path.join(work, "_WRITTEN")
-    if not os.path.exists(marker):
-        # a partial write (crash mid-job) must rebuild, never serve
-        shutil.rmtree(work, ignore_errors=True)
-        ev = load_table(spark, sf_dir, "events")
+    def build(work: str) -> None:
         (
-            ev.withColumn("dt", F.to_date("ts"))
+            load_table(spark, sf_dir, "events")
+            .withColumn("dt", F.to_date("ts"))
             .repartition("dt")  # one shuffle at ingest -> one file per
             # day instead of |input partitions| × |days| small files
             .write.mode("overwrite")
             .partitionBy("dt")
             .parquet(work)
         )
-        with open(marker, "w") as fh:
-            fh.write("1")
-    return work
+
+    return build_once(
+        "dtpart", sf_dir,
+        _params_key("dtpart", _data_fingerprint(sf_dir, "events")), build,
+    )
 
 
 def read_partitioned_events(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -93,6 +93,71 @@ def read_parquet_memo(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(schema).parquet(path)
 
 
+def _params_key(*parts) -> str:
+    """Short stable fingerprint of build parameters for cache keys."""
+    import hashlib
+    import json
+
+    return hashlib.md5(json.dumps(parts, sort_keys=True).encode()).hexdigest()[:10]
+
+
+def _data_fingerprint(sf_dir: str, table: str) -> list:
+    """Cheap corpus fingerprint for build-cache keys: the
+    (relpath, size, mtime_ns) of every parquet file backing ``table``.
+
+    Pure filesystem metadata — zero Spark jobs per probe. Regenerated
+    testdata at the SAME path (new seed, same name) changes mtime/size, so
+    a stale build MISSES instead of silently serving rows from the old
+    corpus; a spurious mtime change merely costs one rebuild (safe
+    direction). At lake scale the analog is the table snapshot/commit id
+    (Delta/Iceberg), which is exactly this: identity of the data files."""
+    import glob
+
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    if os.path.isdir(path):
+        files = sorted(
+            glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
+        )
+    else:
+        files = [path] if os.path.exists(path) else []
+    out = []
+    for f in files:
+        st = os.stat(f)
+        out.append((os.path.relpath(f, sf_dir), st.st_size, st.st_mtime_ns))
+    return out
+
+
+def build_once(tag: str, sf_dir: str, key: str, build=None) -> str | None:
+    """The engine's one build cache: return the directory
+    ``<tmp>/spark_graft_<tag>_<corpus>_<key>``, building it first unless
+    a complete build is already there. ``key`` should fold the build's
+    parameters and a ``_data_fingerprint`` of every table it reads
+    (``_params_key``), so a changed corpus or parameter set misses.
+
+    A miss removes whatever a crashed build left, creates the empty
+    directory, runs ``build(dir)`` and only then stamps the ``_BUILT``
+    marker, so a partial build is never served. Parquet readers skip
+    the underscore-prefixed marker. With ``build=None`` it only looks:
+    the directory if a complete build is there, else None."""
+    import shutil
+    import tempfile
+
+    work = os.path.join(
+        tempfile.gettempdir(),
+        f"spark_graft_{tag}_{os.path.basename(sf_dir.rstrip('/'))}_{key}",
+    )
+    marker = os.path.join(work, "_BUILT")
+    if not os.path.exists(marker):
+        if build is None:
+            return None
+        shutil.rmtree(work, ignore_errors=True)
+        os.makedirs(work)
+        build(work)
+        with open(marker, "w"):
+            pass
+    return work
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one test table. Plain parquet read — no .cache(), no schema
     munging — so filters/projections in downstream operators push into the
@@ -119,18 +184,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     except Exception:
         pass
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    # non-local/vanished path gives key=None: infer every time
-    key = _memo_key(path)
-    schema = _SCHEMA_MEMO.get(key) if key is not None else None
-    if schema is None:
-        df = spark.read.parquet(path)
-        if key is not None:
-            _memo_put(key, df.schema)
-    else:
-        # supplying the memoized schema skips the footer-read job; the
-        # scan itself (pushdown, pruning) is identical
-        df = spark.read.schema(schema).parquet(path)
+    df = read_parquet_memo(spark, os.path.join(sf_dir, f"{name}.parquet"))
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 

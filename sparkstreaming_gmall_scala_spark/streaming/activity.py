@@ -34,17 +34,13 @@ def activity_ingest_batch(
     compact_every: int | None = None,
 ):
     """Per-batch body: append this batch's distinct (u, d) pairs."""
-    index = AppendOnlyIndex(index_dir)
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1")
+    index = AppendOnlyIndex(index_dir, compact_every=compact_every)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         pairs = batch_df.select(
             F.col(user_col).alias("u"), F.to_date(ts_col).alias("d")
         ).distinct()
         index.append(pairs, batch_id)
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            index.compact(spark, upto_batch_id=batch_id - 1)
 
     return process
 

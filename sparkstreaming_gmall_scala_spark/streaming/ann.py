@@ -87,15 +87,13 @@ def ivf_ingest_batch(
     directly): dedup the batch on id, assign cells, append the batch's
     own cell-partitioned directory. O(batch) — the index is never read
     at ingest time."""
-    index = AppendOnlyIndex(index_dir, partition_by=("cell",))
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1")
+    index = AppendOnlyIndex(
+        index_dir, partition_by=("cell",), compact_every=compact_every
+    )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         new = batch_df.dropDuplicates([id_col])
         index.append(ivf_assign(new, id_col, vec_col, centroids, dim), batch_id)
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            index.compact(spark, upto_batch_id=batch_id - 1)
 
     return process
 
@@ -194,9 +192,9 @@ def ivfpq_ingest_batch(
     pruning, codes bound bytes via the ADC scan."""
     from ..operators.pq import ivf_pq_encode
 
-    index = AppendOnlyIndex(index_dir, partition_by=("cell",))
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1")
+    index = AppendOnlyIndex(
+        index_dir, partition_by=("cell",), compact_every=compact_every
+    )
     _stamp_code_scheme(index_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -205,8 +203,6 @@ def ivfpq_ingest_batch(
             ivf_pq_encode(new, id_col, vec_col, centroids, codebooks),
             batch_id,
         )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            index.compact(spark, upto_batch_id=batch_id - 1)
 
     return process
 
@@ -282,33 +278,6 @@ def ivfpq_index_topk(
     )
 
 
-def ivfpq_ingest_pipeline(
-    spark: SparkSession,
-    src_dir: str,
-    index_dir: str,
-    checkpoint: str,
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    id_col: str = "doc_id",
-    vec_col: str = "embedding",
-    compact_every: int | None = None,
-):
-    """Embedding file-drop stream → incrementally grown IVF-PQ codes
-    index."""
-    embs = file_stream(spark, src_dir, EMB_SCHEMA)
-    return (
-        embs.writeStream.foreachBatch(
-            ivfpq_ingest_batch(
-                spark, index_dir, centroids, codebooks, id_col, vec_col,
-                compact_every,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
-    )
-
-
 def sq8_ingest_batch(
     spark: SparkSession,
     index_dir: str,
@@ -331,9 +300,7 @@ def sq8_ingest_batch(
     per-row decode fold."""
     from ..operators.sq import sq8_encode, sq8_with_norm
 
-    index = AppendOnlyIndex(index_dir)
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1")
+    index = AppendOnlyIndex(index_dir, compact_every=compact_every)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         new = batch_df.dropDuplicates([id_col])
@@ -341,8 +308,6 @@ def sq8_ingest_batch(
             sq8_with_norm(sq8_encode(new, id_col, vec_col, bounds), bounds),
             batch_id,
         )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            index.compact(spark, upto_batch_id=batch_id - 1)
 
     return process
 
@@ -369,29 +334,4 @@ def sq8_index_topk(
     return sq8_topk(
         idx, queries, id_col, vec_col, bounds,
         k=k, rerank=rerank, shortlist=shortlist, dim=dim,
-    )
-
-
-def sq8_ingest_pipeline(
-    spark: SparkSession,
-    src_dir: str,
-    index_dir: str,
-    checkpoint: str,
-    bounds: list[tuple[float, float]],
-    id_col: str = "doc_id",
-    vec_col: str = "embedding",
-    compact_every: int | None = None,
-):
-    """Embedding file-drop stream → incrementally grown SQ8 codes
-    index."""
-    embs = file_stream(spark, src_dir, EMB_SCHEMA)
-    return (
-        embs.writeStream.foreachBatch(
-            sq8_ingest_batch(
-                spark, index_dir, bounds, id_col, vec_col, compact_every
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
     )

@@ -75,10 +75,10 @@ def basket_ingest_batch(
     each batch still owns exactly its ``batch_id=N`` directory, rows
     still carry ``src_batch`` (the identity-semantic discipline), and
     the three logical counters are disjoint by ``kind``."""
-    counters = AppendOnlyIndex(counters_dir, schema=_COUNTER_SCHEMA)
+    counters = AppendOnlyIndex(
+        counters_dir, schema=_COUNTER_SCHEMA, compact_every=compact_every
+    )
     carry = IdempotentBatchWriter(carry_dir)
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1")
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         ob = batch_df.select(
@@ -159,8 +159,6 @@ def basket_ingest_batch(
         # the watermark filter here: orders past basket lateness leave)
         carry(prev.unionByName(new.select("o", "b")), batch_id)
         new.unpersist()
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            counters.compact(spark, upto_batch_id=batch_id - 1)
 
     return process
 

@@ -59,9 +59,7 @@ def calib_ingest_batch(
 ):
     """Per-batch body (foreachBatch-shaped): score + fingerprint THIS
     batch's docs once and append their constant rows."""
-    idx = AppendOnlyIndex(index_dir)
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1")
+    idx = AppendOnlyIndex(index_dir, compact_every=compact_every)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         idx.append(
@@ -70,8 +68,6 @@ def calib_ingest_batch(
             ),
             batch_id,
         )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            idx.compact(spark, upto_batch_id=batch_id - 1)
 
     return process
 

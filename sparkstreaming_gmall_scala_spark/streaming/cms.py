@@ -36,9 +36,7 @@ def cms_ingest_batch(
     work, map-side combined to <= depth*width rows) and append it. The
     index is never read at ingest. ``id_col`` dedups at-least-once
     input inside a batch; pass None when rows have no identity."""
-    index = AppendOnlyIndex(index_dir)
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1")
+    index = AppendOnlyIndex(index_dir, compact_every=compact_every)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         rows = (
@@ -48,8 +46,6 @@ def cms_ingest_batch(
             "src_batch", F.lit(batch_id)
         )
         index.append(partial, batch_id)
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            index.compact(spark, upto_batch_id=batch_id - 1)
 
     return process
 

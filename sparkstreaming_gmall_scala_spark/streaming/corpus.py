@@ -109,9 +109,7 @@ def corpus_ingest_batch(
     generation every N batches (ids ≤ current − 1 only — the current dir
     is the replay-rewritable one); see banded_candidates_batch for the
     amortization argument."""
-    index = AppendOnlyIndex(index_dir)
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1")
+    index = AppendOnlyIndex(index_dir, compact_every=compact_every)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         b = batch_df.dropDuplicates(["doc_id"])
@@ -146,8 +144,6 @@ def corpus_ingest_batch(
         )
         kept.unpersist()
         fps.unpersist()
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            index.compact(spark, upto_batch_id=batch_id - 1)
 
     return process
 

@@ -136,17 +136,16 @@ def curate_ingest_batch(
     inside the hook replays the whole batch and every sink rewrites its
     own ``batch_id=N`` dir."""
     bander = bander or minhash_bander()
-    fp_index = AppendOnlyIndex(fp_index_dir)
-    band_index = AppendOnlyIndex(band_index_dir)
+    fp_index = AppendOnlyIndex(fp_index_dir, compact_every=compact_every)
+    band_index = AppendOnlyIndex(band_index_dir, compact_every=compact_every)
     if (win_index_dir is None) != (wins_sink is None):
         raise ValueError(
             "win_index_dir and wins_sink must be provided together"
         )
     win_index = (
-        AppendOnlyIndex(win_index_dir) if win_index_dir is not None else None
+        AppendOnlyIndex(win_index_dir, compact_every=compact_every)
+        if win_index_dir is not None else None
     )
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1")
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         b = batch_df.dropDuplicates(["doc_id"])
@@ -199,22 +198,19 @@ def curate_ingest_batch(
         pairs_sink(pairs, batch_id)
         if win_index is not None:
             wins_sink(win_pairs, batch_id)
-        fp_index.append(
-            kept.select("fp", F.col("doc_id").alias("keeper")), batch_id
-        )
+        # The band and window rows descend from a lazy read of fp_index,
+        # so fp_index appends (and may fold its dirs) last.
         band_index.append(banded_new, batch_id)
         if win_index is not None:
             win_index.append(wins_new, batch_id)
             wins_new.unpersist()
+        fp_index.append(
+            kept.select("fp", F.col("doc_id").alias("keeper")), batch_id
+        )
         banded_new.unpersist()
         out.unpersist()
         kept.unpersist()
         fps.unpersist()
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            fp_index.compact(spark, upto_batch_id=batch_id - 1)
-            band_index.compact(spark, upto_batch_id=batch_id - 1)
-            if win_index is not None:
-                win_index.compact(spark, upto_batch_id=batch_id - 1)
 
     return process
 

@@ -197,9 +197,9 @@ def banded_candidates_batch(
     # contract schema: every read of the just-grown index would
     # otherwise pay a one-task footer-inference job per micro-batch
     # (the stat memo can never hit — appending changes the key)
-    index = AppendOnlyIndex(index_dir, schema=_BAND_SCHEMA)
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1")
+    index = AppendOnlyIndex(
+        index_dir, schema=_BAND_SCHEMA, compact_every=compact_every
+    )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         new = batch_df.dropDuplicates(["doc_id"])
@@ -215,11 +215,6 @@ def banded_candidates_batch(
         sink(pairs, batch_id)
         index.append(banded_new, batch_id)
         banded_new.unpersist()
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            # A crash in here replays the batch: it re-probes against
-            # base ∪ its own dir (identical universe) and re-compacts —
-            # compact() is idempotent and dedups, so no harm either way.
-            index.compact(spark, upto_batch_id=batch_id - 1)
 
     return process
 

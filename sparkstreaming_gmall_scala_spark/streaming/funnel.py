@@ -38,17 +38,13 @@ def funnel_ingest_batch(
     """Per-batch body: project the funnel-relevant events and append.
     The event_id key makes rows identity-semantic (duplicate deliveries
     and compaction-crash duplicates collapse in the report's dedup)."""
-    index = AppendOnlyIndex(index_dir)
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1")
+    index = AppendOnlyIndex(index_dir, compact_every=compact_every)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         ev = batch_df.filter(
             F.col("event_type").isin(*FUNNEL_STAGES)
         ).select("event_id", "user_id", "event_type", "ts")
         index.append(ev.dropDuplicates(["event_id"]), batch_id)
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            index.compact(spark, upto_batch_id=batch_id - 1)
 
     return process
 
@@ -65,26 +61,6 @@ def funnel_report(spark: SparkSession, index_dir: str) -> DataFrame:
     return funnel_frame(ev)
 
 
-def funnel_pipeline(
-    spark: SparkSession,
-    src_dir: str,
-    index_dir: str,
-    checkpoint: str,
-    schema,
-    compact_every: int | None = None,
-):
-    """Event file-drop stream → incrementally grown funnel event index."""
-    ev = file_stream(spark, src_dir, schema)
-    return (
-        ev.writeStream.foreachBatch(
-            funnel_ingest_batch(spark, index_dir, compact_every)
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
-    )
-
-
 def events_ingest_batch(
     spark: SparkSession,
     index_dir: str,
@@ -94,15 +70,11 @@ def events_ingest_batch(
     event's (event_id, user_id, event_type, ts) projection — the shared
     analytics index ``retention_report`` (all event types count as
     activity) and ``funnel_report``-style readers draw from."""
-    index = AppendOnlyIndex(index_dir)
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1")
+    index = AppendOnlyIndex(index_dir, compact_every=compact_every)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         ev = batch_df.select("event_id", "user_id", "event_type", "ts")
         index.append(ev.dropDuplicates(["event_id"]), batch_id)
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            index.compact(spark, upto_batch_id=batch_id - 1)
 
     return process
 

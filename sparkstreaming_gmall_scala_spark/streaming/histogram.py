@@ -34,9 +34,7 @@ def histogram_ingest_batch(
     ``keys`` makes the partials per-key (<= n_keys * n_bins rows per
     batch) — same frozen bounds for every key, so the keyed report
     stays additively mergeable."""
-    index = AppendOnlyIndex(index_dir)
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1")
+    index = AppendOnlyIndex(index_dir, compact_every=compact_every)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         rows = (
@@ -46,8 +44,6 @@ def histogram_ingest_batch(
             rows, value_col, n_bins=n_bins, lo=lo, hi=hi, keys=keys
         ).withColumn("src_batch", F.lit(batch_id))
         index.append(partial, batch_id)
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            index.compact(spark, upto_batch_id=batch_id - 1)
 
     return process
 

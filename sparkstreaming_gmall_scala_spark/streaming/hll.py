@@ -26,9 +26,7 @@ def hll_ingest_batch(
     compact_every: int | None = None,
 ):
     """Per-batch body: the batch's own per-day sketches, appended."""
-    index = AppendOnlyIndex(index_dir)
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1")
+    index = AppendOnlyIndex(index_dir, compact_every=compact_every)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         rows = (
@@ -38,8 +36,6 @@ def hll_ingest_batch(
             "src_batch", F.lit(batch_id)
         )
         index.append(partial, batch_id)
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            index.compact(spark, upto_batch_id=batch_id - 1)
 
     return process
 

@@ -63,9 +63,7 @@ def kmv_ingest_batch(
     """Per-batch body (foreachBatch-shaped): append this batch's k-min
     partial. (dt, h) rows are identity-semantic, so the AppendOnlyIndex
     crash/compaction contract holds without a carry."""
-    idx = AppendOnlyIndex(index_dir)
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1")
+    idx = AppendOnlyIndex(index_dir, compact_every=compact_every)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         idx.append(
@@ -74,8 +72,6 @@ def kmv_ingest_batch(
             ),
             batch_id,
         )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            idx.compact(spark, upto_batch_id=batch_id - 1)
 
     return process
 

@@ -45,9 +45,7 @@ def moment_ingest_batch(
 ):
     """Per-batch body (foreachBatch-shaped): append this batch's exact
     per-stratum moment partial. No carry — moments are additive."""
-    idx = AppendOnlyIndex(moments_dir)
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1")
+    idx = AppendOnlyIndex(moments_dir, compact_every=compact_every)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         idx.append(
@@ -56,8 +54,6 @@ def moment_ingest_batch(
             ),
             batch_id,
         )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            idx.compact(spark, upto_batch_id=batch_id - 1)
 
     return process
 

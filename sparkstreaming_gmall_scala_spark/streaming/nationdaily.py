@@ -30,9 +30,7 @@ def nation_daily_ingest_batch(
     """Per-batch body (foreachBatch-shaped) over enriched order rows
     carrying (n_name, day, v cents): append the exact per-(nation, day)
     cents partial. No carry — keyed day sums are additive."""
-    idx = AppendOnlyIndex(daily_dir)
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1")
+    idx = AppendOnlyIndex(daily_dir, compact_every=compact_every)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         idx.append(
@@ -41,8 +39,6 @@ def nation_daily_ingest_batch(
             .withColumn("src_batch", F.lit(batch_id)),
             batch_id,
         )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            idx.compact(spark, upto_batch_id=batch_id - 1)
 
     return process
 

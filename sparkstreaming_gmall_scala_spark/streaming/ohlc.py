@@ -48,10 +48,12 @@ def ohlc_ingest_batch(
     reproduces its original kept set exactly) and appends its own.
     Cost: one O(index) scan per batch with the batch side broadcast —
     the exact-dedup ledger shape streaming/corpus.py already pays."""
-    index = AppendOnlyIndex(index_dir)
-    ledger = AppendOnlyIndex(ledger_dir) if ledger_dir else None
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1")
+    index = AppendOnlyIndex(index_dir, compact_every=compact_every)
+    ledger = (
+        AppendOnlyIndex(ledger_dir, compact_every=compact_every)
+        if ledger_dir
+        else None
+    )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         rows = batch_df.filter(
@@ -77,12 +79,6 @@ def ohlc_ingest_batch(
                 ),
                 batch_id,
             )
-            if (
-                compact_every
-                and batch_id > 0
-                and batch_id % compact_every == 0
-            ):
-                ledger.compact(spark, upto_batch_id=batch_id - 1)
         partial = (
             rows
             .select(
@@ -105,8 +101,6 @@ def ohlc_ingest_batch(
         index.append(partial, batch_id)
         if ledger is not None:
             rows.unpersist()
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            index.compact(spark, upto_batch_id=batch_id - 1)
 
     return process
 

@@ -29,12 +29,11 @@ overwrite handles.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..sources.tables import _data_fingerprint, _params_key, build_once
+
 
 def _batch_bounds(ev: DataFrame, n_batches: int = 3) -> list[tuple]:
     """Time-ordered batch boundaries derived from the DATA (r13 advice:
@@ -78,19 +77,11 @@ def _write_batch(df: DataFrame, path: str) -> None:
 def ingest_events_partitioned(spark: SparkSession, sf_dir: str) -> str:
     """Run the 3-batch time-ordered ingest of the events table into a
     dt-partitioned /tmp table, then replay batch 2 (duplicate delivery).
-    Returns the table path. Cached by corpus fingerprint + marker (the
-    knn persisted-index discipline); a partial write rebuilds."""
-    from ..plans.llm import _data_fingerprint, _params_key
+    Returns the table path. Built once per corpus
+    (``sources.tables.build_once``); a partial write rebuilds."""
     from ..sources import load_table
 
-    key = _params_key("dtingest", _data_fingerprint(sf_dir, "events"))
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_dtingest_{os.path.basename(sf_dir.rstrip('/'))}_{key}",
-    )
-    marker = os.path.join(work, "_WRITTEN")
-    if not os.path.exists(marker):
-        shutil.rmtree(work, ignore_errors=True)
+    def build(work: str) -> None:
         ev = load_table(spark, sf_dir, "events").withColumn(
             "dt", F.to_date("ts")
         ).persist()
@@ -118,9 +109,11 @@ def ingest_events_partitioned(spark: SparkSession, sf_dir: str) -> str:
                 f"partition ingest dropped rows: raw={n_raw} "
                 f"ingested={n_ingested} at {work}"
             )
-        with open(marker, "w") as fh:
-            fh.write("1")
-    return work
+
+    return build_once(
+        "dtingest", sf_dir,
+        _params_key("dtingest", _data_fingerprint(sf_dir, "events")), build,
+    )
 
 
 def ingest_events_compacted(spark: SparkSession, sf_dir: str) -> str:
@@ -131,14 +124,13 @@ def ingest_events_compacted(spark: SparkSession, sf_dir: str) -> str:
     (idempotence under fragmentation), then ``compact_partitions`` down
     to one file per partition. Returns the compacted table path.
 
-    Both post-conditions are asserted LOUDLY before the cache marker
-    lands: (a) the ingest really fragmented (else the entry would prove
-    nothing), and (b) after compaction every partition holds exactly one
-    file. Content invisibility is what the catalog entry's oracle
+    Both post-conditions are asserted LOUDLY before the build cache
+    stamps its marker: (a) the ingest really fragmented (else the entry
+    would prove nothing), and (b) after compaction every partition holds
+    exactly one file. Content invisibility is what the catalog entry's oracle
     checks: ``events_compacted_rollup`` answers a rollup off this table
     against the RAW events oracle — one row lost or duplicated anywhere
     in ingest→replay→compact and the value hash diverges."""
-    from ..plans.llm import _data_fingerprint, _params_key
     from ..sources import load_table
     from ..sources.partitioned import (
         compact_partitions,
@@ -146,14 +138,7 @@ def ingest_events_compacted(spark: SparkSession, sf_dir: str) -> str:
         resolve_table_root,
     )
 
-    key = _params_key("dtcompact", _data_fingerprint(sf_dir, "events"))
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_dtcompact_{os.path.basename(sf_dir.rstrip('/'))}_{key}",
-    )
-    marker = os.path.join(work, "_WRITTEN")
-    if not os.path.exists(marker):
-        shutil.rmtree(work, ignore_errors=True)
+    def build(work: str) -> None:
         ev = load_table(spark, sf_dir, "events").withColumn(
             "dt", F.to_date("ts")
         ).persist()
@@ -203,8 +188,11 @@ def ingest_events_compacted(spark: SparkSession, sf_dir: str) -> str:
                 f"ingest+compact changed row count: raw={n_raw} "
                 f"final={n_final} at {work}"
             )
-        with open(marker, "w") as fh:
-            fh.write("1")
+
+    work = build_once(
+        "dtcompact", sf_dir,
+        _params_key("dtcompact", _data_fingerprint(sf_dir, "events")), build,
+    )
     return resolve_table_root(work)
 
 
@@ -215,17 +203,9 @@ def ingest_events_evolving(spark: SparkSession, sf_dir: str) -> str:
     dt partitions (dynamic overwrite, the ingest discipline); the table
     ends with two physical schemas side by side, which is the normal
     state of any long-lived lake table. Returns the table path."""
-    from ..plans.llm import _data_fingerprint, _params_key
     from ..sources import load_table
 
-    key = _params_key("dtevol", _data_fingerprint(sf_dir, "events"))
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_dtevol_{os.path.basename(sf_dir.rstrip('/'))}_{key}",
-    )
-    marker = os.path.join(work, "_WRITTEN")
-    if not os.path.exists(marker):
-        shutil.rmtree(work, ignore_errors=True)
+    def build(work: str) -> None:
         ev = load_table(spark, sf_dir, "events").withColumn(
             "dt", F.to_date("ts")
         ).persist()
@@ -260,9 +240,11 @@ def ingest_events_evolving(spark: SparkSession, sf_dir: str) -> str:
                 f"evolving ingest dropped rows: raw={n_raw} "
                 f"ingested={n_ingested} at {work}"
             )
-        with open(marker, "w") as fh:
-            fh.write("2")
-    return work
+
+    return build_once(
+        "dtevol", sf_dir,
+        _params_key("dtevol", _data_fingerprint(sf_dir, "events")), build,
+    )
 
 
 def read_evolving_events(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -55,10 +55,8 @@ def path_ingest_batch(
     partial; then rewrite carry(N) = each user's latest steps−1 events."""
     if steps < 2:
         raise ValueError("steps must be >= 2")
-    counts = AppendOnlyIndex(counts_dir)
+    counts = AppendOnlyIndex(counts_dir, compact_every=compact_every)
     carry = IdempotentBatchWriter(carry_dir)
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1")
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         ev = batch_df.dropDuplicates(["event_id"]).select(*_COLS)
@@ -86,8 +84,6 @@ def path_ingest_batch(
             batch_id,
         )
         ev_all.unpersist()
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            counts.compact(spark, upto_batch_id=batch_id - 1)
 
     return process
 

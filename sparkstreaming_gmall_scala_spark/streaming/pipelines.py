@@ -367,29 +367,26 @@ def sku_dim_pipeline(
 
     The parent dims are re-read per batch (the reference re-queries
     Phoenix inside transform{}), so a parent-dim update lands in the NEXT
-    batch's denormalization; the upsert is last-write-wins per sku_id by
-    ``ts``, matching Phoenix UPSERT semantics, also when one batch holds
-    several changes of a sku."""
-    sku = file_stream(spark, src_dir, SKU_SCHEMA)
+    batch's denormalization; the schema memo skips footer inference
+    while a parent is unchanged. The upsert is ``dim_pipeline``'s:
+    last-write-wins per sku_id by ``ts``, matching Phoenix UPSERT
+    semantics, also when one batch holds several changes of a sku."""
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        tm = spark.read.parquet(tm_dir).select("tm_id", "tm_name")
-        c3 = spark.read.parquet(category3_dir).select(
+    def denormalize(df: DataFrame) -> DataFrame:
+        tm = read_parquet_memo(spark, tm_dir).select("tm_id", "tm_name")
+        c3 = read_parquet_memo(spark, category3_dir).select(
             "category3_id", "category3_name"
         )
-        spu = spark.read.parquet(spu_dir).select("spu_id", "spu_name")
-        denorm = (
-            batch_df.join(F.broadcast(tm), "tm_id", "left")
+        spu = read_parquet_memo(spark, spu_dir).select("spu_id", "spu_name")
+        return (
+            df.join(F.broadcast(tm), "tm_id", "left")
             .join(F.broadcast(c3), "category3_id", "left")
             .join(F.broadcast(spu), "spu_id", "left")
         )
-        upsert_parquet(spark, denorm, out_dir, ["sku_id"], order_col="ts")
 
-    return (
-        sku.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
+    return dim_pipeline(
+        spark, src_dir, out_dir, checkpoint, SKU_SCHEMA, "sku_id",
+        transform=denormalize,
     )
 
 
@@ -622,13 +619,14 @@ def order_detail_pipeline(
     The reference's per-partition Phoenix IN-list fetch becomes a
     broadcast left join against the (already denormalized — that's
     SkuInfoApp's job) sku dim, re-read per batch so a dim update is
-    visible to the next micro-batch; the per-record Kafka producer loop
+    visible to the next micro-batch (the schema memo skips footer
+    inference while it is unchanged); the per-record Kafka producer loop
     becomes the batch-id-keyed sink (on a broker: sinks.kafka_fanout)."""
     details = file_stream(spark, src_dir, ORDER_DETAIL_SCHEMA)
     sink = IdempotentBatchWriter(out_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        sku = spark.read.parquet(sku_dim_dir).select(
+        sku = read_parquet_memo(spark, sku_dim_dir).select(
             "sku_id", "sku_name", "spu_id", "spu_name", "tm_id", "tm_name",
             "category3_id", "category3_name",
         )

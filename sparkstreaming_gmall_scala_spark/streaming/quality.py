@@ -41,9 +41,7 @@ def quality_gate_batch(
     measured), split rows to the two sinks, append the audit partial.
     Everything is O(batch); the index grows one ≤ n_rules-row directory
     per micro-batch until compaction folds them."""
-    index = AppendOnlyIndex(index_dir)
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1")
+    index = AppendOnlyIndex(index_dir, compact_every=compact_every)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         rows = (
@@ -62,8 +60,6 @@ def quality_gate_batch(
                 "src_batch", F.lit(batch_id)
             )
             index.append(partial, batch_id)
-            if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-                index.compact(spark, upto_batch_id=batch_id - 1)
         finally:
             rows.unpersist()
 

@@ -34,17 +34,13 @@ def sample_ingest_batch(
     per-stratum top-k (no global state read — the candidate set is a
     superset of the global winners by the monoid property) and append.
     O(batch) work, ≤ k×|strata| rows written per micro-batch."""
-    index = AppendOnlyIndex(index_dir)
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1")
+    index = AppendOnlyIndex(index_dir, compact_every=compact_every)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         cand = group_sample_k(
             batch_df.dropDuplicates([key_col]), key_col, strata_col, k
         ).withColumn("src_batch", F.lit(batch_id))
         index.append(cand, batch_id)
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            index.compact(spark, upto_batch_id=batch_id - 1)
 
     return process
 
@@ -82,9 +78,7 @@ def weighted_sample_ingest_batch(
     and re-trim at read."""
     from ..operators.sampling import weighted_sample_k
 
-    index = AppendOnlyIndex(index_dir)
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1")
+    index = AppendOnlyIndex(index_dir, compact_every=compact_every)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         cand = weighted_sample_k(
@@ -95,8 +89,6 @@ def weighted_sample_ingest_batch(
             strata_col=strata_col,
         ).withColumn("src_batch", F.lit(batch_id))
         index.append(cand, batch_id)
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            index.compact(spark, upto_batch_id=batch_id - 1)
 
     return process
 

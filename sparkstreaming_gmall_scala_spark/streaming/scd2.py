@@ -53,17 +53,13 @@ def scd2_ingest_batch(
     """foreachBatch body maintaining the SCD2 dim at ``dim_dir`` from
     the observation log at ``log_dir``."""
     attrs = list(attrs)
-    index = AppendOnlyIndex(log_dir)
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1")
+    index = AppendOnlyIndex(log_dir, compact_every=compact_every)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         obs = batch_df.select(key, ts, tiebreak, *attrs).withColumn(
             "src_batch", F.lit(batch_id)
         )
         index.append(obs, batch_id)
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            index.compact(spark, upto_batch_id=batch_id - 1)
 
         touched = batch_df.select(key).distinct()
         log = (

@@ -37,9 +37,7 @@ def bm25_ingest_batch(
 ):
     """Per-batch body (foreachBatch-shaped): tokenize THIS batch's docs
     once and append their per-doc (dl, tf…) rows."""
-    idx = AppendOnlyIndex(index_dir)
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1")
+    idx = AppendOnlyIndex(index_dir, compact_every=compact_every)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         idx.append(
@@ -47,8 +45,6 @@ def bm25_ingest_batch(
             .withColumn("src_batch", F.lit(batch_id)),
             batch_id,
         )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            idx.compact(spark, upto_batch_id=batch_id - 1)
 
     return process
 

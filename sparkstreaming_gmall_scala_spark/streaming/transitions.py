@@ -56,10 +56,8 @@ def transition_ingest_batch(
 ):
     """Per-batch body: carry(N−1) ∪ batch → one lead() → additive
     partial; then rewrite carry(N) = latest event per user."""
-    counts = AppendOnlyIndex(counts_dir)
+    counts = AppendOnlyIndex(counts_dir, compact_every=compact_every)
     carry = IdempotentBatchWriter(carry_dir)
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1")
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         ev = batch_df.dropDuplicates(["event_id"]).select(*_COLS)
@@ -87,8 +85,6 @@ def transition_ingest_batch(
             batch_id,
         )
         ev_all.unpersist()
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            counts.compact(spark, upto_batch_id=batch_id - 1)
 
     return process
 

@@ -31,8 +31,6 @@ from pyspark.sql import functions as F
 
 from ..operators.bpe import adjacent_pairs, tokens_col
 from ..sinks.batch import AppendOnlyIndex
-from .dedup import DOC_SCHEMA
-from .sources import file_stream
 
 
 def _counting_batch(
@@ -42,9 +40,7 @@ def _counting_batch(
     id_col: str,
     compact_every: int | None,
 ):
-    index = AppendOnlyIndex(index_dir)
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1")
+    index = AppendOnlyIndex(index_dir, compact_every=compact_every)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         new = batch_df.dropDuplicates([id_col])
@@ -52,8 +48,6 @@ def _counting_batch(
             partial_fn(new).withColumn("src_batch", F.lit(batch_id)),
             batch_id,
         )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            index.compact(spark, upto_batch_id=batch_id - 1)
 
     return process
 
@@ -138,23 +132,4 @@ def vocab_top(
     w = Window.orderBy(F.col("cnt").desc(), "tok")
     return top.withColumn("rank", F.row_number().over(w)).select(
         "rank", "tok", "cnt"
-    )
-
-
-def vocab_ingest_pipeline(
-    spark: SparkSession,
-    src_dir: str,
-    index_dir: str,
-    checkpoint: str,
-    compact_every: int | None = None,
-):
-    """Document file-drop stream → incrementally grown vocab counts."""
-    docs = file_stream(spark, src_dir, DOC_SCHEMA)
-    return (
-        docs.writeStream.foreachBatch(
-            vocab_ingest_batch(spark, index_dir, compact_every=compact_every)
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
     )

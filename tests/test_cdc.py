@@ -188,3 +188,47 @@ def test_apply_cdc_parquet_tied_order_is_deterministic(spark, tmp_path):
         else []
     )
     assert all(r["id"] != 5 for r in rows)
+
+
+def test_upsert_parquet_is_an_all_upsert_cdc_apply(spark, tmp_path):
+    """``upsert_parquet`` writes exactly the rows of ``apply_cdc_parquet``
+    fed the same batches with every op an upsert, batch after batch: a
+    tie on ``order_col`` goes to the same payload-hash winner, a replayed
+    batch changes nothing, and a stored row loses to a fresh one even
+    when its ``order_col`` is higher."""
+    from pyspark.sql import functions as F
+
+    from sparkstreaming_gmall_scala_spark.sinks.batch import (
+        apply_cdc_parquet,
+        upsert_parquet,
+    )
+
+    up, cdc = str(tmp_path / "up"), str(tmp_path / "cdc")
+    schema = "id long, name string, ts long"
+
+    def rows(path):
+        df = spark.read.parquet(path)
+        return df.columns, sorted(tuple(r) for r in df.collect())
+
+    batches = [
+        # key 1 ties on ts within the batch: the payload hash decides
+        [(1, "a", 5), (1, "b", 5), (2, "c", 1), (2, "d", 3)],
+        # replay of the batch above
+        [(1, "a", 5), (1, "b", 5), (2, "c", 1), (2, "d", 3)],
+        # key 1's stored ts 5 is higher, but the fresh row still wins
+        [(1, "e", 2), (3, "f", 7)],
+    ]
+    seen = []
+    for batch in batches:
+        df = spark.createDataFrame(batch, schema)
+        upsert_parquet(spark, df, up, ["id"], order_col="ts")
+        apply_cdc_parquet(
+            spark, df.withColumn("op", F.lit("upsert")), cdc, ["id"],
+            op_col="op", order_col="ts",
+        )
+        assert rows(up) == rows(cdc)
+        seen.append(rows(up)[1])
+    assert seen[1] == seen[0]  # the replay rewrote the same rows
+    got = {r[0]: r[1:] for r in seen[2]}
+    assert got[1] == ("e", 2) and got[2] == ("d", 3) and got[3] == ("f", 7)
+    assert rows(up)[0] == ["id", "name", "ts"]

@@ -317,3 +317,56 @@ def test_compaction_legacy_staged_swap_rolls_forward(spark, sf_dir, tmp_path):
     assert {tuple(r) for r in spark.read.parquet(path).collect()} == rows
     assert not os.path.isdir(stage) and not os.path.isdir(trash)
     shutil.rmtree(path, ignore_errors=True)
+
+
+def test_build_once_never_serves_a_partial_build(tmp_path, monkeypatch):
+    """The one build cache behind every derived /tmp table (this module's
+    partitioned copy among them): a build that dies leaves no marker, so
+    nothing is served and the next call removes its leftovers and builds
+    again; a finished build is served without rebuilding; a changed
+    corpus misses. No Spark needed."""
+    import os
+    import tempfile
+
+    import pytest
+
+    from sparkstreaming_gmall_scala_spark.sources.tables import (
+        _data_fingerprint,
+        _params_key,
+        build_once,
+    )
+
+    cache = tmp_path / "cache"
+    cache.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(cache))
+    sf = tmp_path / "sfT"
+    sf.mkdir()
+    (sf / "orders.parquet").write_bytes(b"v1")
+
+    def key():
+        return _params_key("t1", _data_fingerprint(str(sf), "orders"))
+
+    def crash(work):
+        open(os.path.join(work, "part-0"), "w").close()
+        raise RuntimeError("killed mid-build")
+
+    with pytest.raises(RuntimeError):
+        build_once("unit", str(sf), key(), crash)
+    assert build_once("unit", str(sf), key()) is None
+
+    builds = []
+
+    def build(work):
+        assert os.listdir(work) == []  # the crashed build's leftovers went
+        builds.append(work)
+        open(os.path.join(work, "part-0"), "w").close()
+
+    work = build_once("unit", str(sf), key(), build)
+    assert os.path.basename(work) == f"spark_graft_unit_sfT_{key()}"
+    assert build_once("unit", str(sf), key(), build) == work
+    assert build_once("unit", str(sf), key()) == work
+    assert builds == [work]
+
+    (sf / "orders.parquet").write_bytes(b"v2, a new corpus")
+    assert build_once("unit", str(sf), key(), build) != work
+    assert len(builds) == 2

@@ -279,7 +279,7 @@ def test_persisted_index_rebuilds_when_corpus_changes(spark, tmp_path):
     import shutil
 
     from sparkstreaming_gmall_scala_spark.plans.catalog import load_all
-    from sparkstreaming_gmall_scala_spark.plans.llm import _data_fingerprint
+    from sparkstreaming_gmall_scala_spark.sources.tables import _data_fingerprint
 
     src = "/root/testdata/sf0.001"
     sf_dir = str(tmp_path / "sfX")

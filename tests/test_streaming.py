@@ -2071,6 +2071,56 @@ def test_stream_restart_after_index_compaction(spark, tmp_path):
     assert {(1, 2), (1, 3), (2, 3)} <= got
 
 
+def test_index_compact_every_folds_committed_batches_on_append(
+    spark, tmp_path
+):
+    """``AppendOnlyIndex(dir, compact_every=2)`` schedules its own folds:
+    appending batch 2 folds {0, 1} and appending batch 4 folds {2, 3}.
+    The in-flight dir is never folded, not even when it replays, and a
+    ``compact_every`` below 1 fails at construction."""
+    from sparkstreaming_gmall_scala_spark.sinks.batch import AppendOnlyIndex
+
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="compact_every"):
+            AppendOnlyIndex(str(tmp_path / "bad"), compact_every=bad)
+
+    idx = str(tmp_path / "idx")
+    index = AppendOnlyIndex(idx, compact_every=2)
+
+    def batch(b):
+        return spark.createDataFrame([(b, f"h{b}")], "doc_id long, h string")
+
+    def layout():
+        horizon = None
+        marker = os.path.join(idx, "base", "_horizon")
+        if os.path.exists(marker):
+            with open(marker) as f:
+                horizon = int(f.read())
+        dirs = sorted(
+            int(n.split("=", 1)[1])
+            for n in os.listdir(idx)
+            if n.startswith("batch_id=")
+        )
+        return dirs, horizon
+
+    expect = {
+        0: ([0], None),
+        1: ([0, 1], None),
+        2: ([2], 1),
+        3: ([2, 3], 1),
+        4: ([4], 3),
+    }
+    for b in range(5):
+        index.append(batch(b), b)
+        assert layout() == expect[b], b
+    # a replay of the in-flight batch rewrites its dir; nothing folds
+    index.append(batch(4), 4)
+    assert layout() == ([4], 3)
+    assert sorted(r["doc_id"] for r in index.read(spark).collect()) == [
+        0, 1, 2, 3, 4,
+    ]
+
+
 def test_index_compaction_crash_before_swap_rolls_forward(spark, tmp_path):
     """Compaction crash matrix: a crash after writing base.tmp/_SUCCESS
     but before the rename swap must roll FORWARD on the next read (the
