@@ -18,7 +18,7 @@ CENTS so the arithmetic is exact and engine-portable:
     share_last = cents(total) - Σ_{i<last} share_i
 
 The streaming exact-parity variant (per-arrival running state) lives in
-``streaming/allocation_state.py``.
+``streaming/allocation.py``.
 """
 
 from __future__ import annotations

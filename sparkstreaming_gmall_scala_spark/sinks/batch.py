@@ -36,6 +36,7 @@ compaction — commits through one swap, ``swap_dir``, whose crash matrix
 
 from __future__ import annotations
 
+import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -82,23 +83,26 @@ class IdempotentBatchWriter:
         batch_id subdirs and their stats (r15 ADVICE — the parent dir's
         own stat does not change when files are replaced INSIDE an
         existing batch_id=N subdir), so any new/rewritten batch
-        re-infers while steady-state reads skip the footer job."""
+        re-infers while steady-state reads skip the footer job.
+
+        The ``batch_id=N`` dirs are listed here and passed by name: a
+        glob makes Spark's sink-metadata probe fail (and log a WARN with
+        a stack trace) on every read. Raises ``FileNotFoundError`` when
+        no batch is committed."""
         from ..sources.tables import _SCHEMA_MEMO, _memo_key, _memo_put
 
-        if self.schema is not None:
-            return (
-                spark.read.option("basePath", self.out_dir)
-                .schema(f"{self.schema}, batch_id int")
-                .parquet(self.out_dir + "/batch_id=*")
-            )
-        key = _memo_key(self.out_dir)
+        pattern = os.path.join(glob.escape(self.out_dir), "batch_id=*")
+        dirs = sorted(glob.glob(pattern))
+        if not dirs:
+            raise FileNotFoundError(f"no batch committed under {self.out_dir}")
         reader = spark.read.option("basePath", self.out_dir)
+        if self.schema is not None:
+            return reader.schema(f"{self.schema}, batch_id int").parquet(*dirs)
+        key = _memo_key(self.out_dir)
         schema = _SCHEMA_MEMO.get(key) if key is not None else None
         if schema is not None:
-            return reader.schema(schema).parquet(
-                self.out_dir + "/batch_id=*"
-            )
-        df = reader.parquet(self.out_dir + "/batch_id=*")
+            return reader.schema(schema).parquet(*dirs)
+        df = reader.parquet(*dirs)
         if key is not None:
             _memo_put(key, df.schema)
         return df
@@ -317,7 +321,6 @@ class AppendOnlyIndex:
     def __init__(
         self,
         index_dir: str,
-        identity_rows: bool = True,
         partition_by: tuple[str, ...] = (),
         schema: str | None = None,
         compact_every: int | None = None,
@@ -338,14 +341,6 @@ class AppendOnlyIndex:
             index_dir, partition_by=self.partition_by, schema=schema
         )
         self._base = os.path.join(index_dir, "base")
-        # compact() dedups the merged base to survive interrupted
-        # compactions (see below) — which silently LOSES rows if an index
-        # ever carries counter/payload rows where duplicates are data.
-        # Every current index shape ((doc_id, band_idx, band_hash),
-        # (fp, keeper), (doc_id, start, win_hash)) is identity-semantic;
-        # a future non-identity index must opt out consciously and supply
-        # its own fold (e.g. a groupBy-sum) before compaction is safe.
-        self.identity_rows = identity_rows
 
     def append(self, df: DataFrame, batch_id: int) -> None:
         """Write ``df`` as the ``batch_id=N`` dir; every ``compact_every``
@@ -493,17 +488,8 @@ class AppendOnlyIndex:
         # leave the folded batch dirs on disk; without this, the NEXT
         # compact would bake those rows into base a second time — readers
         # tolerate duplicates, but base would inflate per crash cycle.
-        # Only identity-semantic row shapes may be deduped (the
-        # constructor flag); a counter/payload index must opt out and
-        # fold duplicates itself before this is safe.
-        if not self.identity_rows:
-            raise ValueError(
-                f"compact() on {self.index_dir}: identity_rows=False — "
-                "this index's rows are not identity-semantic, so the "
-                "crash-consistency dropDuplicates() would lose data. "
-                "Fold duplicates explicitly (e.g. groupBy-sum into a new "
-                "index) instead of compacting in place."
-            )
+        # Index rows must therefore be identity-semantic: a counter index
+        # tags each row with its batch (streaming/basket.py's src_batch).
         merged = merged.dropDuplicates()
         try:
             prior = self._horizon()

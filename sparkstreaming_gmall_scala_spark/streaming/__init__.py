@@ -9,7 +9,7 @@ Modules:
   sources.py          - streaming sources (file for tests, kafka gated)
   dau.py              - A2 streaming distinct (watermark + dropDuplicates)
   join.py             - J1 watermarked stream-stream join
-  allocation.py       - A4 exact-parity stateful allocation
+  allocation.py       - A4 stateful allocation; the bucketed pandas-state step
   running.py          - W2 running sums (transformWithStateInPandas)
   pipelines.py        - the nine reference apps as wired pipelines
   dedup.py            - incremental LSH dedup over a persisted band index

@@ -12,12 +12,12 @@ open order. Sums are integer cents — the reference's
 ``detailAmount == originalTotal - originSum`` equality test on doubles is
 a float-equality landmine; cents make it exact and deterministic.
 
-State layout. The state is keyed by a fixed hash bucket,
-``pmod(xxhash64(order_id), BUCKETS)``, not by order. Each bucket holds
-its open orders as four parallel arrays: ``order_id``,
-``origin_sum_cents``, ``split_sum_cents`` and ``expire_ms``. ``BUCKETS``
-is part of that layout: changing it (or restoring a checkpoint written
-when the state was keyed by order id) needs a fresh checkpoint.
+State layout. ``_bucketed_pandas_state`` (also under order_info's
+``probe_first_order``) keys the state by ``pmod(xxhash64(order_id),
+BUCKETS)``. Each bucket holds its open orders as four parallel arrays:
+``order_id``, ``origin_sum_cents``, ``split_sum_cents`` and
+``expire_ms``. Changing ``BUCKETS`` (or restoring a checkpoint keyed by
+order id) needs a fresh checkpoint.
 
 Why buckets: ``applyInPandasWithState`` pays ~4-5 ms of Python overhead
 per group, and an order-keyed state has one group per order (~1,000 per
@@ -42,24 +42,24 @@ same data, as it would with one state row per order timing out.
 
 The batch formulation (operators/allocation.py, oracle-checked) is the
 order-insensitive spec; this streaming variant reproduces the reference's
-arrival-order behavior for details split across micro-batches. An
-order's rows WITHIN a batch are processed in (detail_id) order for
-determinism.
+arrival-order behavior for details split across micro-batches.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
+from collections.abc import Callable
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-# Hash buckets of the allocation state; part of the checkpoint layout.
+# Hash buckets of the pandas-state steps; part of their checkpoint layout.
 BUCKETS = 16
+# The reference's Redis TTL: the watermark delay and an order's expiry.
+_TTL_S = 600
 
 _OUT_SCHEMA = T.StructType(
     [
@@ -76,105 +76,135 @@ _STATE_SCHEMA = T.StructType(
 )
 
 
+def _bucketed_pandas_state(
+    df: DataFrame,
+    key: str,
+    step: Callable[[pd.DataFrame, GroupState], pd.DataFrame | None],
+    out_schema: T.StructType,
+    state_schema: T.StructType | str,
+    timeout: str,
+) -> DataFrame:
+    """``step(pdf, state)`` once per batch for every
+    ``pmod(xxhash64(key), BUCKETS)`` bucket with data or a due timeout:
+    ``pdf`` holds the bucket's rows in ``df``'s columns (none on a
+    timeout), and a frame ``step`` returns is emitted. A long column
+    holding a NULL would reach pandas as float64, which rounds ids
+    >= 2**53, so each one crosses NULL-free plus a null mask and arrives
+    as a nullable ``Int64`` column."""
+    columns = df.columns
+    longs = [f.name for f in df.schema if f.dataType == T.LongType()]
+
+    def run(_key, pdf_iter, state: GroupState):
+        pdf = pd.concat(list(pdf_iter), ignore_index=True)
+        for c in longs:
+            pdf[c] = pd.arrays.IntegerArray(
+                pdf[c].to_numpy(np.int64), pdf[f"_null_{c}"].to_numpy(bool)
+            )
+        out = step(pdf[columns], state)
+        if out is not None:
+            yield out
+
+    return (
+        df.select(
+            *(F.coalesce(c, F.lit(0)).alias(c) if c in longs else c for c in columns),
+            *(F.col(c).isNull().alias(f"_null_{c}") for c in longs),
+            F.pmod(F.xxhash64(key), F.lit(BUCKETS)).alias("_bucket"),
+        )
+        .groupBy("_bucket")
+        .applyInPandasWithState(run, out_schema, state_schema, "append", timeout)
+    )
+
+
 def _cents(x: float) -> int:
     # Half-up to cents, the reference's Math.round(x*100) semantics.
     return int(x * 100 + 0.5)
 
 
-def _make_allocator(ttl_ms: int):
-    def _allocate_bucket(
-        key: tuple[Any, ...],
-        pdf_iter: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        # open order id -> [origin_sum_cents, split_sum_cents, expire_ms]
-        orders = (
-            {o: [a, s, e] for o, a, s, e in zip(*state.get)}
-            if state.exists
-            else {}
+def _allocate_bucket(pdf: pd.DataFrame, state: GroupState) -> pd.DataFrame | None:
+    # open order id -> [origin_sum_cents, split_sum_cents, expire_ms]
+    orders = (
+        {o: [a, s, e] for o, a, s, e in zip(*state.get)} if state.exists else {}
+    )
+    watermark = state.getCurrentWatermarkMs()
+    out = None
+    if not state.hasTimedOut:
+        pdf = pdf.sort_values(["order_id", "detail_id"], kind="stable")
+        # a detail missing its order or a measure cannot be placed: it
+        # goes out with a NULL share and leaves the state alone
+        needed = ["order_id", "amount", "original_total", "final_total"]
+        placed = pdf[needed].notna().all(axis=1)
+        shares: list[float | None] = []
+        for ok, order_id, amount, original, final in zip(
+            placed.tolist(),
+            pdf["order_id"].tolist(),
+            pdf["amount"].tolist(),
+            pdf["original_total"].tolist(),
+            pdf["final_total"].tolist(),
+        ):
+            if not ok:
+                shares.append(None)
+                continue
+            sums = orders.setdefault(order_id, [0, 0, 0])
+            origin_sum, split_sum = sums[0], sums[1]
+            amount_c = _cents(amount)
+            final_c = _cents(final)
+            if amount_c == _cents(original) - origin_sum:
+                share_c = final_c - split_sum  # last detail: residual
+            else:
+                # round(final_total * amount / original_total, 2), in cents
+                share_c = int(final_c * amount / original + 0.5)
+            sums[0] = origin_sum + amount_c
+            sums[1] = split_sum + share_c
+            shares.append(share_c / 100.0)
+        # Expire once event time passes the order's last activity by TTL.
+        # Anchor on the order's max event time, NOT the current watermark:
+        # in the first batch the watermark is still 0, and a 0-anchored
+        # expiry passes the instant a restarted query loads the real
+        # watermark from the checkpoint (state would silently vanish
+        # across restarts). An order whose details all lack a ts anchors
+        # on watermark + 1.
+        last_ts = pdf[placed].groupby("order_id", sort=False)["ts"].max()
+        for order_id, ts in last_ts.items():
+            ts_ms = -1 if pd.isna(ts) else int(ts.timestamp() * 1000)
+            orders[order_id][2] = max(ts_ms, watermark + 1) + _TTL_S * 1000
+        out = pd.DataFrame(
+            {
+                "order_id": pdf["order_id"].array,
+                "detail_id": pdf["detail_id"].array,
+                "final_detail_amount": np.array(shares, dtype=float),
+            }
         )
-        watermark = state.getCurrentWatermarkMs()
-        out = None
-        if not state.hasTimedOut:
-            pdf = pd.concat(list(pdf_iter), ignore_index=True).sort_values(
-                ["order_id", "detail_id"], kind="stable"
-            )
-            shares: list[float] = []
-            for order_id, amount, original, final in zip(
-                pdf["order_id"].tolist(),
-                pdf["amount"].tolist(),
-                pdf["original_total"].tolist(),
-                pdf["final_total"].tolist(),
-            ):
-                sums = orders.setdefault(order_id, [0, 0, 0])
-                origin_sum, split_sum = sums[0], sums[1]
-                amount_c = _cents(amount)
-                final_c = _cents(final)
-                if amount_c == _cents(original) - origin_sum:
-                    share_c = final_c - split_sum  # last detail: residual
-                else:
-                    # round(final_total * amount / original_total, 2), in cents
-                    share_c = int(final_c * amount / original + 0.5)
-                sums[0] = origin_sum + amount_c
-                sums[1] = split_sum + share_c
-                shares.append(share_c / 100.0)
-            # Expire once event time passes the order's last activity by
-            # TTL. Anchor on the order's max event time, NOT the current
-            # watermark: in the first batch the watermark is still 0, and
-            # a 0-anchored expiry passes the instant a restarted query
-            # loads the real watermark from the checkpoint (state would
-            # silently vanish across restarts).
-            last_ts = pdf.groupby("order_id", sort=False)["ts"].max()
-            for order_id, ts in last_ts.items():
-                orders[order_id][2] = (
-                    max(int(ts.timestamp() * 1000), watermark + 1) + ttl_ms
-                )
-            out = pd.DataFrame(
-                {
-                    "order_id": pdf["order_id"].to_numpy(),
-                    "detail_id": pdf["detail_id"].to_numpy(),
-                    "final_detail_amount": shares,
-                }
-            )
-        # Evict exactly what a per-order state would time out this batch:
-        # expiry before the watermark (orders with data were just renewed).
-        orders = {o: v for o, v in orders.items() if v[2] >= watermark}
-        if orders:
-            state.update(
-                (list(orders), *(list(col) for col in zip(*orders.values())))
-            )
-            state.setTimeoutTimestamp(min(v[2] for v in orders.values()))
-        else:
-            state.remove()
-        if out is not None:
-            yield out
-
-    return _allocate_bucket
+    # Evict exactly what a per-order state would time out this batch:
+    # expiry before the watermark (orders with data were just renewed).
+    orders = {o: v for o, v in orders.items() if v[2] >= watermark}
+    if orders:
+        state.update((list(orders), *(list(col) for col in zip(*orders.values()))))
+        state.setTimeoutTimestamp(min(v[2] for v in orders.values()))
+    else:
+        state.remove()
+    return out
 
 
-def allocate_stateful(
-    details: DataFrame,
-    ts_col: str = "ts",
-    ttl: str = "600 seconds",
-    ttl_ms: int = 600_000,
-) -> DataFrame:
+def allocate_stateful(details: DataFrame) -> DataFrame:
     """Streaming allocation over a detail stream with columns
     ``order_id, detail_id, ts, amount, original_total, final_total``.
 
     Emits one row per detail as it arrives, with cross-batch running sums
     in the state store; an order's sums evict once the watermark passes
-    its last activity + TTL (the reference's 600 s Redis expiry, in event
-    time). Invariant (tested): once all of an order's details have
-    arrived, Σ final_detail_amount == final_total exactly.
-    """
+    its last activity + 600 s (the reference's Redis TTL, in event time;
+    the watermark trails by the same 600 s). Invariant (tested): once all
+    of an order's details have arrived, Σ final_detail_amount ==
+    final_total exactly.
+
+    Bad input: a detail with a NULL ``order_id``, ``amount``,
+    ``original_total`` or ``final_total`` cannot be placed; it is emitted
+    once with a NULL ``final_detail_amount`` and touches no state. A
+    detail with a NULL ``ts`` is never late and allocates normally; when
+    none of its order's details in the batch has a ts, the order's expiry
+    anchors on watermark + 1."""
     if details.isStreaming:
-        details = details.withWatermark(ts_col, ttl)
-    bucket = F.pmod(F.xxhash64("order_id"), F.lit(BUCKETS))
-    grouped = details.withColumn("_bucket", bucket).groupBy("_bucket")
-    return grouped.applyInPandasWithState(
-        _make_allocator(ttl_ms),
-        outputStructType=_OUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        details = details.withWatermark("ts", f"{_TTL_S} seconds")
+    return _bucketed_pandas_state(
+        details, "order_id", _allocate_bucket, _OUT_SCHEMA, _STATE_SCHEMA,
+        GroupStateTimeout.EventTimeTimeout,
     )

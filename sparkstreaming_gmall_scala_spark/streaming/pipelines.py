@@ -26,7 +26,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..sinks.batch import IdempotentBatchWriter, upsert_parquet
 from ..sources.tables import read_parquet_memo
-from .allocation import allocate_stateful
+from .allocation import _bucketed_pandas_state, allocate_stateful
 from .dau import dau_distinct
 from .join import windowed_equi_join
 from .sources import file_stream
@@ -230,40 +230,26 @@ SKU_SCHEMA = T.StructType(
 )
 
 
-# Hash buckets of the first-order state; part of its checkpoint layout.
-FIRST_ORDER_BUCKETS = 16
-
-
-def _flag_bucket(columns: list[str], longs: list[str]):
-    def flag(key, pdf_iter, state: GroupState):
-        claimed = list(state.get[0]) if state.exists else []
-        pdf = pd.concat(list(pdf_iter), ignore_index=True)
-        # int64 with NULLs would reach pandas as float64, which rounds ids
-        # >= 2**53: each long column comes NULL-free plus a null mask
-        for c in longs:
-            pdf[c] = pd.arrays.IntegerArray(
-                pdf[c].to_numpy(np.int64), pdf[f"_null_{c}"].to_numpy(bool)
-            )
-        pdf = pdf.sort_values(["ts", "order_id"], na_position="first")
-        pdf = pdf.drop_duplicates("order_id")
-        user = pdf["user_id"]
-        first = user.notna() & ~user.duplicated() & ~user.isin(set(claimed))
-        first = first.to_numpy(bool)
-        if first.any():
-            state.update((claimed + user[first].tolist(),))
-        yield pdf[columns].assign(if_first_order=np.where(first, "1", "0"))
-
-    return flag
+def _flag_bucket(pdf: pd.DataFrame, state: GroupState) -> pd.DataFrame:
+    claimed = list(state.get[0]) if state.exists else []
+    pdf = pdf.sort_values(["ts", "order_id"], na_position="first")
+    pdf = pdf.drop_duplicates("order_id")
+    user = pdf["user_id"]
+    first = user.notna() & ~user.duplicated() & ~user.isin(set(claimed))
+    first = first.to_numpy(bool)
+    if first.any():
+        state.update((claimed + user[first].tolist(),))
+    return pdf.assign(if_first_order=np.where(first, "1", "0"))
 
 
 def probe_first_order(orders: DataFrame) -> DataFrame:
     """Every order once, with ``if_first_order``; the users already
     claimed live in the state store (the reference's Phoenix
     ``USER_STATUS``, dwd/OrderInfoApp.scala:92-117,262-279), keyed by
-    ``pmod(xxhash64(user_id), FIRST_ORDER_BUCKETS)`` like
-    streaming/allocation.py: one pandas call per bucket, each holding its
-    claimed ids as one array, updated only when it claims a new user and
-    never expiring. Per batch:
+    ``pmod(xxhash64(user_id), BUCKETS)`` through streaming/allocation.py's
+    bucketed pandas-state step: one pandas call per bucket, each holding
+    its claimed ids as one array, updated only when it claims a new user
+    and never expiring. Per batch:
 
     - rows repeating an ``order_id`` collapse to the earliest by ``ts``
       (copies that disagree on ``user_id`` hash apart and stay apart);
@@ -273,24 +259,10 @@ def probe_first_order(orders: DataFrame) -> DataFrame:
       nothing (the reference's ``Long`` has no NULL, bean/OrderInfo.scala:7-8).
 
     The state is never joined or broadcast (tests/test_plan_properties.py)."""
-    columns = orders.columns
-    longs = [f.name for f in orders.schema if f.dataType == T.LongType()]
-    return (
-        orders.select(
-            *(F.coalesce(c, F.lit(0)).alias(c) if c in longs else c for c in columns),
-            *(F.col(c).isNull().alias(f"_null_{c}") for c in longs),
-            F.pmod(F.xxhash64("user_id"), F.lit(FIRST_ORDER_BUCKETS)).alias("_bucket"),
-        )
-        .groupBy("_bucket")
-        .applyInPandasWithState(
-            _flag_bucket(columns, longs),
-            outputStructType=T.StructType(
-                [*orders.schema, T.StructField("if_first_order", T.StringType())]
-            ),
-            stateStructType="user_id array<bigint>",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    flagged = T.StructField("if_first_order", T.StringType())
+    return _bucketed_pandas_state(
+        orders, "user_id", _flag_bucket, T.StructType([*orders.schema, flagged]),
+        "user_id array<bigint>", GroupStateTimeout.NoTimeout,
     )
 
 

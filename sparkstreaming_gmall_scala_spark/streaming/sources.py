@@ -10,7 +10,6 @@ util/OffsetManagerUtil.scala). Here:
 - ``file_stream`` is the test-harness source: parquet/json files dropped
   into a directory become micro-batches, which is how the pytest streaming
   tests feed controlled batches without a broker.
-- ``rate_stream`` generates load for soak tests.
 """
 
 from __future__ import annotations
@@ -57,11 +56,3 @@ def file_stream(
         .load(path)
     )
 
-
-def rate_stream(spark: SparkSession, rows_per_second: int = 1000) -> DataFrame:
-    """Synthetic load source (timestamp, value) for soak benchmarks."""
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-    )

@@ -223,19 +223,26 @@ def _per_order_allocation(batches, ttl_ms=600_000):
     below the watermark drop as late, an order's data runs before
     timeouts fire, an order times out once its timeout falls below the
     watermark, and the next watermark is the max event time so far minus
-    the TTL. Rows are ``(order_id, detail_id, ts_ms, amount,
-    original_total, final_total)``; returns ``{detail_id: share}``."""
+    the TTL. Bad input: a NULL ts is never late and moves no watermark;
+    a row missing its order_id or a measure gets a None share and no
+    state; an order with no ts in the batch expires from watermark + 1.
+    Rows are ``(order_id, detail_id, ts_ms, amount, original_total,
+    final_total)``; returns ``{detail_id: share}``."""
 
     def cents(x):
         return int(x * 100 + 0.5)
 
     state: dict[int, tuple[int, int, int]] = {}
-    shares: dict[int, float] = {}
+    shares: dict[int, float | None] = {}
     watermark = max_seen = 0
     for rows in batches:
         groups: dict[int, list] = {}
         for r in rows:
-            if r[2] > watermark:
+            if r[2] is not None and r[2] <= watermark:
+                continue
+            if None in (r[0], r[3], r[4], r[5]):
+                shares[r[1]] = None
+            else:
                 groups.setdefault(r[0], []).append(r)
         for order_id, group in groups.items():
             origin_sum, split_sum, _ = state.get(order_id, (0, 0, 0))
@@ -250,12 +257,12 @@ def _per_order_allocation(batches, ttl_ms=600_000):
                 origin_sum += amount_c
                 split_sum += share_c
                 shares[detail_id] = share_c / 100.0
-            last = max(r[2] for r in group)
+            last = max((r[2] for r in group if r[2] is not None), default=0)
             state[order_id] = (
                 origin_sum, split_sum, max(last, watermark + 1) + ttl_ms
             )
         state = {o: v for o, v in state.items() if v[2] >= watermark}
-        max_seen = max([max_seen] + [r[2] for r in rows])
+        max_seen = max([max_seen] + [r[2] for r in rows if r[2] is not None])
         watermark = max(watermark, max_seen - ttl_ms)
     return shares
 
@@ -264,7 +271,9 @@ def test_bucketed_allocation_matches_per_order_loop(spark, tmp_path):
     """The hash-bucketed allocation state gives every detail exactly the
     share the order-keyed loop gives it: orders split across batches,
     several orders per bucket, a detail landing after its order's 600 s
-    TTL, a late detail, and two restarts from the checkpoint."""
+    TTL, a late detail, NULL order_id / amount / ts details, order ids
+    above 2**53 in the NULL order_id's bucket, and two restarts from the
+    checkpoint."""
     import datetime as dt
     import glob
     import random
@@ -301,11 +310,39 @@ def test_bucketed_allocation_matches_per_order_loop(spark, tmp_path):
     batches[5] += [(300, 904, at(1310), 2.0, 2.0, 1.5)]
     batches[6] += [(100, 905, at(800), 1.0, 3.0, 10.0),
                    (200, 906, at(100), 4.0, 9.0, 8.0)]  # late: dropped
+    # Bad input. A NULL amount or order_id gets a NULL share and leaves
+    # the state alone (order 500's second detail still takes the
+    # residual). Odd ids above 2**53 share the NULL order_id's bucket
+    # and batch: a float64 round trip would change them. Order 400's
+    # only detail has a NULL ts, so its expiry anchors on the watermark
+    # + 1 and it is gone by batch 6: 908 takes a fresh 0.51, not the
+    # residual 0.50.
+    bucket = F.pmod(F.xxhash64("o"), F.lit(BUCKETS))
+    null_bucket = (
+        spark.sql("SELECT CAST(NULL AS BIGINT) AS o").select(bucket).first()[0]
+    )
+    big = [
+        r["o"]
+        for r in spark.range(400)
+        .selectExpr(f"{2**53 + 1} + 2 * id AS o")
+        .where(bucket == null_bucket)
+        .limit(2)
+        .collect()
+    ]
+    batches[1] += [(500, 910, at(40), None, 3.0, 2.0),
+                   (500, 911, at(40), 3.0, 3.0, 2.0)]
+    batches[2] += [(None, 912, at(65), 1.0, 1.0, 1.0),
+                   (big[0], 913, at(66), 1.0, 3.0, 2.0),
+                   (big[1], 914, at(66), 2.0, 3.0, 3.0)]
+    batches[4] += [(400, 907, None, 1.0, 2.0, 1.01)]
+    batches[6] += [(400, 908, at(800), 1.0, 2.0, 1.01)]
 
     want = _per_order_allocation(batches)
     assert want[905] == 3.33 and 906 not in want
+    assert want[910] is None and want[911] == 2.0 and want[912] is None
+    assert want[907] == 0.51 and want[908] == 0.51
 
-    order_ids = sorted({r[0] for b in batches for r in b})
+    order_ids = sorted({r[0] for b in batches for r in b} - {None})
     per_bucket = (
         spark.createDataFrame([(o,) for o in order_ids], "order_id long")
         .groupBy(F.pmod(F.xxhash64("order_id"), F.lit(BUCKETS)))
@@ -320,7 +357,8 @@ def test_bucketed_allocation_matches_per_order_loop(spark, tmp_path):
         for k in run:
             before = set(glob.glob(os.path.join(src, "*.parquet")))
             rows = [
-                (o, d, dt.datetime.fromtimestamp(ts / 1000, dt.timezone.utc),
+                (o, d, None if ts is None else
+                 dt.datetime.fromtimestamp(ts / 1000, dt.timezone.utc),
                  a, orig, fin)
                 for o, d, ts, a, orig, fin in batches[k]
             ]
@@ -329,11 +367,14 @@ def test_bucketed_allocation_matches_per_order_loop(spark, tmp_path):
             os.utime(new, (stamp + k, stamp + k))  # one file per batch, in order
         q = allocation_pipeline(spark, src, out, ckpt, available_now=True)
         assert q.awaitTermination(120), f"drain of batches {run} did not end"
-    got = {
-        r["detail_id"]: r["final_detail_amount"]
-        for r in IdempotentBatchWriter(out).read(spark).collect()
-    }
+    sink = IdempotentBatchWriter(out).read(spark).collect()
+    got = {r["detail_id"]: r["final_detail_amount"] for r in sink}
+    assert len(sink) == len(got)
     assert got == want
+    sent = {r[1]: r[0] for b in batches for r in b}
+    assert {r["detail_id"]: r["order_id"] for r in sink} == {
+        d: sent[d] for d in want
+    }
 
 
 def test_trademark_stat_per_batch_scope(spark, tmp_path):
@@ -601,8 +642,10 @@ def test_bucketed_first_order_matches_per_order_rule(spark, tmp_path):
     The USER_STATUS export equals the claims in the state store."""
     import random
 
+    from sparkstreaming_gmall_scala_spark.streaming.allocation import (
+        BUCKETS as FIRST_ORDER_BUCKETS,
+    )
     from sparkstreaming_gmall_scala_spark.streaming.pipelines import (
-        FIRST_ORDER_BUCKETS,
         ORDER_INFO_SCHEMA,
         order_info_pipeline,
     )
