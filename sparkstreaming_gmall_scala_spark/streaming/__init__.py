@@ -7,7 +7,8 @@ state recovery atomically; watermarks own TTL eviction.
 
 Modules:
   sources.py          - streaming sources (file for tests, kafka gated)
-  dau.py              - A2 streaming distinct (watermark + dropDuplicates)
+  dau.py              - A2 streaming distinct (watermark +
+                        dropDuplicatesWithinWatermark)
   join.py             - J1 watermarked stream-stream join
   allocation.py       - A4 stateful allocation; the bucketed pandas-state step
   running.py          - W2 running sums (transformWithStateInPandas)

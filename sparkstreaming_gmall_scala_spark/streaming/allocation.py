@@ -39,6 +39,10 @@ time in its latest batch plus the TTL; the bucket evicts the order once
 the watermark passes it, and the bucket's own timeout is its earliest
 ``expire_ms``. Eviction thus happens in the same batch, and after the
 same data, as it would with one state row per order timing out.
+``allocation_pipeline`` runs no batch without data, so that batch is the
+next one a file lands in: an expired order's detail in it still finds
+the order's sums, under ``availableNow`` and a one-file-at-a-time drain
+alike.
 
 The batch formulation (operators/allocation.py, oracle-checked) is the
 order-insensitive spec; this streaming variant reproduces the reference's
@@ -128,6 +132,10 @@ def _allocate_bucket(pdf: pd.DataFrame, state: GroupState) -> pd.DataFrame | Non
     watermark = state.getCurrentWatermarkMs()
     out = None
     if not state.hasTimedOut:
+        # repeats of a detail_id collapse to the earliest by ts, NULL
+        # first, as order_info collapses an order_id; NULL ids never repeat
+        pdf = pdf.sort_values("ts", na_position="first", kind="stable")
+        pdf = pdf[pdf["detail_id"].isna() | ~pdf["detail_id"].duplicated()]
         pdf = pdf.sort_values(["order_id", "detail_id"], kind="stable")
         # a detail missing its order or a measure cannot be placed: it
         # goes out with a NULL share and leaves the state alone
@@ -190,18 +198,23 @@ def allocate_stateful(details: DataFrame) -> DataFrame:
     ``order_id, detail_id, ts, amount, original_total, final_total``.
 
     Emits one row per detail as it arrives, with cross-batch running sums
-    in the state store; an order's sums evict once the watermark passes
-    its last activity + 600 s (the reference's Redis TTL, in event time;
-    the watermark trails by the same 600 s). Invariant (tested): once all
-    of an order's details have arrived, Σ final_detail_amount ==
-    final_total exactly.
+    in the state store; an order's sums evict at the first batch whose
+    watermark has passed its last activity + 600 s (the reference's Redis
+    TTL, in event time; the watermark trails by the same 600 s), after
+    that batch's details are allocated. ``allocation_pipeline`` runs a
+    batch only when data lands, so that is the next data batch.
+    Invariant (tested): once all of an order's details have arrived,
+    Σ final_detail_amount == final_total exactly.
 
     Bad input: a detail with a NULL ``order_id``, ``amount``,
     ``original_total`` or ``final_total`` cannot be placed; it is emitted
     once with a NULL ``final_detail_amount`` and touches no state. A
     detail with a NULL ``ts`` is never late and allocates normally; when
     none of its order's details in the batch has a ts, the order's expiry
-    anchors on watermark + 1."""
+    anchors on watermark + 1. Repeats of a ``detail_id`` within a batch
+    collapse to the copy earliest by ``ts``, NULL first, and are emitted
+    once; a NULL ``detail_id`` is never a repeat. Repeats across batches
+    are allocated again (no rule yet)."""
     if details.isStreaming:
         details = details.withWatermark("ts", f"{_TTL_S} seconds")
     return _bucketed_pandas_state(

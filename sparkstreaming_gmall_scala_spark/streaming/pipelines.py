@@ -14,6 +14,7 @@ the SS analog of the reference's 5-second Kafka batches.
 from __future__ import annotations
 
 import os
+import threading
 
 import numpy as np
 import pandas as pd
@@ -70,22 +71,47 @@ ALLOC_SCHEMA = T.StructType(
     ]
 )
 
+_NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
+_NO_DATA_LOCK = threading.Lock()
+
+
+def _start_on_data_only(spark: SparkSession, writer):
+    """``writer.start()`` for a query that runs a micro-batch only when
+    input lands. A query whose state eviction emits no rows needs no
+    batch of its own to advance the watermark: its state evicts at the
+    next data batch, so skipping the empty batch changes no output and
+    takes its cost off the next tick's path. The query clones the session
+    conf inside ``start()``, so the flag is set only around that call and
+    the session keeps its own value; a restart goes through here again."""
+    with _NO_DATA_LOCK:
+        before = spark.conf.get(_NO_DATA_BATCHES, None)
+        spark.conf.set(_NO_DATA_BATCHES, "false")
+        try:
+            return writer.start()
+        finally:
+            if before is None:
+                spark.conf.unset(_NO_DATA_BATCHES)
+            else:
+                spark.conf.set(_NO_DATA_BATCHES, before)
+
 
 def dau_pipeline(
     spark: SparkSession, src_dir: str, out_dir: str, checkpoint: str
 ):
     """DauApp (app/DauApp.scala:22-139): streaming distinct per (day,
     user) → idempotent batch-keyed sink. Watermark 24 h = the Redis set
-    TTL; dropDuplicates state = the Redis set; the batch-id-keyed sink =
-    the ES doc-id idempotence."""
+    TTL; the dedup state = the Redis set; the batch-id-keyed sink = the
+    ES doc-id idempotence. A batch runs only when events land, so a
+    day's keys evict at the first data batch after the watermark passes
+    them."""
     events = file_stream(spark, src_dir, EVENT_SCHEMA)
     dau = dau_distinct(events, ts_col="ts", user_col="user_id")
     sink = IdempotentBatchWriter(out_dir)
-    return (
+    return _start_on_data_only(
+        spark,
         dau.writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .start()
+        .outputMode("update"),
     )
 
 
@@ -100,10 +126,15 @@ def order_wide_pipeline(
     """OrderWideApp join stage (dws/OrderWideApp.scala:91-131): watermarked
     stream-stream equi-join on order_id within ±20 s event time; SS emits
     each pair exactly once, so the reference's Redis join-dedup layer (J2)
-    does not exist here. ``how="left_outer"`` keeps detail-less order
-    headers: they emit null-padded once the watermark proves no detail
-    can still arrive — the report the reference's per-batch inner join
-    silently under-counts."""
+    does not exist here. ``how="inner"`` runs a batch only when a file
+    lands: rows that age out of the join buffers evict at the next data
+    batch, and no row that passes the late filter can match them, so
+    skipping the empty batch changes no output. ``how="left_outer"``
+    keeps detail-less order headers: they emit null-padded once the
+    watermark proves no detail can still arrive — the report the
+    reference's per-batch inner join silently under-counts. Their
+    eviction emits rows, so this mode keeps the empty batch that
+    advances the watermark."""
     orders = file_stream(spark, order_dir, ORDER_SCHEMA)
     details = file_stream(spark, detail_dir, DETAIL_SCHEMA)
     wide = windowed_equi_join(
@@ -122,12 +153,14 @@ def order_wide_pipeline(
         F.col("r.amount").alias("amount"),
     )
     sink = IdempotentBatchWriter(out_dir)
-    return (
+    writer = (
         wide.writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
-        .start()
     )
+    if how == "inner":
+        return _start_on_data_only(spark, writer)
+    return writer.start()
 
 
 def allocation_pipeline(
@@ -147,7 +180,9 @@ def allocation_pipeline(
     reference's external-Redis design gets wrong: lost Redis state ⇒
     broken allocation, SURVEY.md §2.9). State TTL is event-time
     (watermark-driven) — see streaming/allocation.py for why
-    processing-time timeouts don't mix with micro-batch drains."""
+    processing-time timeouts don't mix with micro-batch drains. Under
+    either trigger a batch runs only when a file lands, so an expired
+    order evicts at the next data batch, after that batch's details."""
     details = file_stream(spark, src_dir, ALLOC_SCHEMA)
     allocated = allocate_stateful(details)
     sink = IdempotentBatchWriter(out_dir)
@@ -158,7 +193,7 @@ def allocation_pipeline(
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_on_data_only(spark, writer)
 
 
 def ods_router_pipeline(

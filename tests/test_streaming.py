@@ -224,10 +224,11 @@ def _per_order_allocation(batches, ttl_ms=600_000):
     timeouts fire, an order times out once its timeout falls below the
     watermark, and the next watermark is the max event time so far minus
     the TTL. Bad input: a NULL ts is never late and moves no watermark;
-    a row missing its order_id or a measure gets a None share and no
-    state; an order with no ts in the batch expires from watermark + 1.
-    Rows are ``(order_id, detail_id, ts_ms, amount, original_total,
-    final_total)``; returns ``{detail_id: share}``."""
+    repeats of a detail_id in a batch collapse to the earliest by ts,
+    NULL first; a row missing its order_id or a measure gets a None
+    share and no state; an order with no ts in the batch expires from
+    watermark + 1. Rows are ``(order_id, detail_id, ts_ms, amount,
+    original_total, final_total)``; returns ``{detail_id: share}``."""
 
     def cents(x):
         return int(x * 100 + 0.5)
@@ -237,9 +238,12 @@ def _per_order_allocation(batches, ttl_ms=600_000):
     watermark = max_seen = 0
     for rows in batches:
         groups: dict[int, list] = {}
-        for r in rows:
-            if r[2] is not None and r[2] <= watermark:
+        seen: set[int] = set()
+        for r in sorted(rows, key=lambda r: (r[2] is not None, r[2] or 0)):
+            if r[2] is not None and r[2] <= watermark or r[1] in seen:
                 continue
+            if r[1] is not None:
+                seen.add(r[1])
             if None in (r[0], r[3], r[4], r[5]):
                 shares[r[1]] = None
             else:
@@ -267,21 +271,31 @@ def _per_order_allocation(batches, ttl_ms=600_000):
     return shares
 
 
+_T0_MS = 1_704_103_200_000  # 2024-01-01 10:00 UTC
+
+
+def _alloc_rows(rows):
+    """``_per_order_allocation`` rows (ts in epoch ms) as ALLOC_SCHEMA rows."""
+    import datetime as dt
+
+    return [
+        (o, d, None if ts is None else
+         dt.datetime.fromtimestamp(ts / 1000, dt.timezone.utc), a, orig, fin)
+        for o, d, ts, a, orig, fin in rows
+    ]
+
+
 def test_bucketed_allocation_matches_per_order_loop(spark, tmp_path):
     """The hash-bucketed allocation state gives every detail exactly the
     share the order-keyed loop gives it: orders split across batches,
     several orders per bucket, a detail landing after its order's 600 s
     TTL, a late detail, NULL order_id / amount / ts details, order ids
-    above 2**53 in the NULL order_id's bucket, and two restarts from the
-    checkpoint."""
-    import datetime as dt
-    import glob
+    above 2**53 in the NULL order_id's bucket, a detail repeated within
+    a batch, and two restarts from the checkpoint."""
     import random
 
     from sparkstreaming_gmall_scala_spark.streaming.allocation import BUCKETS
 
-    t0 = dt.datetime(2024, 1, 1, 10, 0, tzinfo=dt.timezone.utc)
-    t0_ms = int(t0.timestamp() * 1000)
     rng = random.Random(7)
     batches: list[list[tuple]] = [[] for _ in range(7)]
     detail_id = 0
@@ -295,11 +309,11 @@ def test_bucketed_allocation_matches_per_order_loop(spark, tmp_path):
         for a in amounts:
             detail_id += 1
             k = min(3, first + rng.randrange(3))
-            ts_ms = t0_ms + (30 * k + rng.randrange(10)) * 1000
+            ts_ms = _T0_MS + (30 * k + rng.randrange(10)) * 1000
             batches[k].append(
                 (order_id, detail_id, ts_ms, a / 100, original / 100, final / 100)
             )
-    at = lambda s: t0_ms + s * 1000  # noqa: E731
+    at = lambda s: _T0_MS + s * 1000  # noqa: E731
     # order 100: three details of 1.00 of 3.00, final 10.00. Two at 0 s;
     # the third lands at 800 s, after 1,300 s and 1,310 s pushed the
     # watermark past 600 s: its state is gone, so it takes a fresh
@@ -336,11 +350,19 @@ def test_bucketed_allocation_matches_per_order_loop(spark, tmp_path):
                    (big[1], 914, at(66), 2.0, 3.0, 3.0)]
     batches[4] += [(400, 907, None, 1.0, 2.0, 1.01)]
     batches[6] += [(400, 908, at(800), 1.0, 2.0, 1.01)]
+    # Order 600: detail 920 twice in one batch, the later copy with a
+    # wrong amount. Only the earliest copy counts, once, so the shares
+    # still sum to 2.00 (keeping both would write four rows summing to 3.34).
+    batches[2] += [(600, 920, at(67), 2.0, 3.0, 2.0),
+                   (600, 920, at(61), 1.0, 3.0, 2.0),
+                   (600, 921, at(62), 1.0, 3.0, 2.0)]
+    batches[3] += [(600, 922, at(95), 1.0, 3.0, 2.0)]
 
     want = _per_order_allocation(batches)
     assert want[905] == 3.33 and 906 not in want
     assert want[910] is None and want[911] == 2.0 and want[912] is None
     assert want[907] == 0.51 and want[908] == 0.51
+    assert (want[920], want[921], want[922]) == (0.67, 0.67, 0.66)
 
     order_ids = sorted({r[0] for b in batches for r in b} - {None})
     per_bucket = (
@@ -352,21 +374,10 @@ def test_bucketed_allocation_matches_per_order_loop(spark, tmp_path):
     assert max(r["count"] for r in per_bucket) >= 2
 
     src, out, ckpt = _dirs(tmp_path, "src", "out", "ckpt")
-    stamp = time.time() - 100
-    for run in ([0, 1, 2], [3, 4], [5, 6]):
-        for k in run:
-            before = set(glob.glob(os.path.join(src, "*.parquet")))
-            rows = [
-                (o, d, None if ts is None else
-                 dt.datetime.fromtimestamp(ts / 1000, dt.timezone.utc),
-                 a, orig, fin)
-                for o, d, ts, a, orig, fin in batches[k]
-            ]
-            _drop(spark, ALLOC_SCHEMA, rows, src)
-            (new,) = set(glob.glob(os.path.join(src, "*.parquet"))) - before
-            os.utime(new, (stamp + k, stamp + k))  # one file per batch, in order
+    for run in (batches[:3], batches[3:5], batches[5:]):
+        _drop_each(spark, ALLOC_SCHEMA, [_alloc_rows(b) for b in run], src)
         q = allocation_pipeline(spark, src, out, ckpt, available_now=True)
-        assert q.awaitTermination(120), f"drain of batches {run} did not end"
+        assert q.awaitTermination(120), "drain did not terminate"
     sink = IdempotentBatchWriter(out).read(spark).collect()
     got = {r["detail_id"]: r["final_detail_amount"] for r in sink}
     assert len(sink) == len(got)
@@ -375,6 +386,131 @@ def test_bucketed_allocation_matches_per_order_loop(spark, tmp_path):
     assert {r["detail_id"]: r["order_id"] for r in sink} == {
         d: sent[d] for d in want
     }
+
+
+def test_allocation_same_shares_under_every_trigger(spark, tmp_path):
+    """An order past its expiry gets a detail in the very next batch:
+    order 100's details 901/902 at 0 s, detail 903 of order 200 at
+    1,300 s (the watermark moves to 700 s, past order 100's 600 s
+    expiry), then 905 of order 100 at 800 s. The order's data runs
+    before its timeout, so 905 takes the residual 3.34, whether one
+    availableNow run drains the three files or a running query reads
+    them one at a time; a batch that only advanced the watermark would
+    evict the order first and give 3.33."""
+    at = lambda s: _T0_MS + s * 1000  # noqa: E731
+    batches = [
+        [(100, 901, at(0), 1.0, 3.0, 10.0), (100, 902, at(0), 1.0, 3.0, 10.0)],
+        [(200, 903, at(1300), 5.0, 9.0, 8.0)],
+        [(100, 905, at(800), 1.0, 3.0, 10.0)],
+    ]
+    want = _per_order_allocation(batches)
+    assert want[905] == 3.34, want
+
+    def shares(out):
+        return {
+            r["detail_id"]: r["final_detail_amount"]
+            for r in IdempotentBatchWriter(out).read(spark).collect()
+        }
+
+    src, out, ckpt = _dirs(tmp_path, "drain/src", "drain/out", "drain/ckpt")
+    _drop_each(spark, ALLOC_SCHEMA, [_alloc_rows(b) for b in batches], src)
+    q = allocation_pipeline(spark, src, out, ckpt, available_now=True)
+    assert q.awaitTermination(120), "drain did not terminate"
+    assert shares(out) == want
+
+    src, out, ckpt = _dirs(tmp_path, "each/src", "each/out", "each/ckpt")
+    q = allocation_pipeline(spark, src, out, ckpt)
+    try:
+        for rows in batches:
+            _drop(spark, ALLOC_SCHEMA, _alloc_rows(rows), src)
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    assert shares(out) == want
+
+
+def test_stateful_pipelines_run_no_empty_batches(spark, tmp_path):
+    """dau, the inner order_wide join and allocation run a micro-batch
+    only when a file lands, although each file moves the watermark past
+    state the previous ones left: every batch that ran read input. The
+    session's own noDataMicroBatches setting is the same after each
+    start()."""
+    from datetime import datetime, timedelta
+
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    day = [datetime(2024, 1, 1, 10) + timedelta(days=k) for k in range(3)]
+    odir, ddir, events, alloc = _dirs(
+        tmp_path, "in/orders", "in/details", "in/events", "in/alloc"
+    )
+
+    def start(name, make):
+        before = spark.conf.get(key, None)
+        q = make(*_dirs(tmp_path, f"{name}/out", f"{name}/ckpt"))
+        assert spark.conf.get(key, None) == before
+        return q
+
+    queries = [
+        start("dau", lambda out, ckpt: dau_pipeline(spark, events, out, ckpt)),
+        start("wide", lambda out, ckpt: order_wide_pipeline(
+            spark, odir, ddir, out, ckpt)),
+        start("alloc", lambda out, ckpt: allocation_pipeline(
+            spark, alloc, out, ckpt)),
+    ]
+    assert spark.conf.get(key) == "true"
+    try:
+        for k, ts in enumerate(day):
+            _drop(spark, EVENT_SCHEMA, [(k, ts, k, "start", 1.0, "{}")], events)
+            _drop(spark, ORDER_SCHEMA, [(k, ts, 5.0)], odir)
+            _drop(spark, DETAIL_SCHEMA, [(k, k, ts, 5.0)], ddir)
+            _drop(spark, ALLOC_SCHEMA, [(k, k, ts, 5.0, 5.0, 4.0)], alloc)
+            for q in queries:
+                q.processAllAvailable()
+        for q in queries:
+            ran = [p for p in q.recentProgress if "addBatch" in p["durationMs"]]
+            assert len(ran) >= len(day)
+            assert all(p["numInputRows"] for p in ran), [
+                (p["batchId"], p["numInputRows"]) for p in ran
+            ]
+    finally:
+        for q in queries:
+            q.stop()
+
+
+def test_dau_state_evicts_and_keeps_day_user_set(spark, tmp_path):
+    """The DAU dedup state is bounded: keys of a day evict once the 24 h
+    watermark passes them, so over five daily batches of 50 users the
+    state stops growing, where a dedup keyed apart from its watermark
+    column would keep all 250. The emitted (dt, user) set stays the
+    distinct set of the input: a repeat within a day emits nothing, and
+    a same-day event landing after its key evicted is dropped as late."""
+    from datetime import datetime, timedelta
+
+    src, out, ckpt = _dirs(tmp_path, "src", "out", "ckpt")
+    start = datetime(2024, 1, 1, 12)
+    sent = []
+    q = dau_pipeline(spark, src, out, ckpt)
+    try:
+        for k in range(5):
+            ts = start + timedelta(days=k)
+            rows = [(k * 100 + u, ts, u, "start", 1.0, "{}") for u in range(50)]
+            rows.append((k * 100 + 99, ts + timedelta(hours=1), 0, "start", 1.0, "{}"))
+            if k == 4:  # day 0's user 7 again, after day 0's keys evicted
+                rows.append((999, start + timedelta(hours=2), 7, "start", 1.0, "{}"))
+            sent += rows
+            _drop(spark, EVENT_SCHEMA, rows, src)
+            q.processAllAvailable()
+        state = [
+            p["stateOperators"][0]
+            for p in q.recentProgress
+            if "addBatch" in p["durationMs"]
+        ]
+    finally:
+        q.stop()
+    assert [s["numRowsTotal"] for s in state] == [50, 100, 150, 150, 150], state
+    assert [s["numRowsRemoved"] for s in state] == [0, 0, 0, 50, 50], state
+    got = IdempotentBatchWriter(out).read(spark).select("dt", "user_id").collect()
+    want = {(ts.strftime("%Y-%m-%d"), u) for _, ts, u, *_ in sent}
+    assert sorted(map(tuple, got)) == sorted(want)
 
 
 def test_trademark_stat_per_batch_scope(spark, tmp_path):
@@ -606,22 +742,28 @@ def _per_order_first_flags(batches):
     repeats of an order_id collapse to their earliest copy; an order is
     first iff its user is not NULL, no earlier batch claimed the user,
     and no other order of the user in the batch sorts before it by
-    ``(ts, order_id)``. Rows are ``(order_id, user_id, province_id, ts,
-    total)``; returns ``{order_id: (user_id, flag)}`` and ``{user_id:
-    first_batch_id}``."""
+    ``(ts, order_id)``, NULL ts first. Rows are ``(order_id, user_id,
+    province_id, ts, total)``; returns ``{order_id: (user_id, flag)}`` and
+    ``{user_id: first_batch_id}``."""
+    from datetime import datetime
+
     flags: dict[int, tuple] = {}
     claimed: dict[int, int] = {}
+
+    def rank(ts, order_id):  # NULL ts sorts first
+        return (ts is not None, ts or datetime.min, order_id)
+
     for batch_id, rows in enumerate(batches):
         kept: dict[int, tuple] = {}
         for r in rows:
-            if r[0] not in kept or r[3] < kept[r[0]][3]:
+            if r[0] not in kept or rank(r[3], 0) < rank(kept[r[0]][3], 0):
                 kept[r[0]] = r
         for order_id, user, _, ts, _ in kept.values():
             first = (
                 user is not None
                 and user not in claimed
                 and not any(
-                    u == user and (t, o) < (ts, order_id)
+                    u == user and rank(t, o) < rank(ts, order_id)
                     for o, u, _, t, _ in kept.values()
                 )
             )
@@ -637,8 +779,9 @@ def test_bucketed_first_order_matches_per_order_rule(spark, tmp_path):
     """The hash-bucketed first-order state flags every order exactly as
     the per-order statement of the rule does: five batches touching all
     16 buckets, users repeated within a batch, duplicate order_id rows,
-    ts ties broken by order_id, NULL users sharing a bucket and a batch
-    with user ids above 2**53, and a restart from the checkpoint midway.
+    ts ties broken by order_id, a NULL ts sorting first, NULL users
+    sharing a bucket and a batch with user ids above 2**53, and a restart
+    from the checkpoint midway.
     The USER_STATUS export equals the claims in the state store."""
     import random
 
@@ -686,8 +829,12 @@ def test_bucketed_first_order_matches_per_order_rule(spark, tmp_path):
                    (o + 6, None, 1, TS.format(1), 1.0)]
     batches[3] += [(o + 7, big[0], 1, TS.format(0), 1.0),
                    (o + 8, None, 1, TS.format(0), 1.0)]
+    # user 2000: the NULL-ts order sorts before an earlier-id one at 0 s
+    batches[4] += [(o + 9, 2000, 1, TS.format(0), 1.0),
+                   (o + 10, 2000, 1, None, 1.0)]
     want, claimed = _per_order_first_flags(batches)
     assert want[o + 1] == (1000, "1") and want[o + 2] == (1000, "0")
+    assert want[o + 10] == (2000, "1") and want[o + 9] == (2000, "0")
     assert want[o + 4] == (big[0], "1") and want[o + 7] == (big[0], "0")
 
     users = [(u,) for u in {r[1] for b in batches for r in b}]
