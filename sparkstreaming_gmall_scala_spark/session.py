@@ -3,9 +3,11 @@
 The reference hard-codes ``local[4]`` + a 5 s batch interval in every app
 (reference: app/DauApp.scala:21-22). We centralize session construction
 instead, with scale-oriented defaults: AQE (runtime coalescing + skew-join
-handling), partition counts sized from the env, UTC session time zone so
-results compare bit-for-bit with the DuckDB oracle, and Arrow enabled for
-the few Pandas-UDF operators.
+handling), batch shuffle-partition counts sized from the env, UTC session
+time zone so results compare bit-for-bit with the DuckDB oracle, and Arrow
+enabled for the few Pandas-UDF operators. The stateful real-time queries
+do not take the session's partition count: streaming/pipelines.py starts
+them with their state in one shuffle partition.
 """
 
 from __future__ import annotations

@@ -71,28 +71,43 @@ ALLOC_SCHEMA = T.StructType(
     ]
 )
 
+# The real-time queries' state is small (at most ~10k rows / 5 MB per
+# query) and the five of them running at once already fill the cores, so
+# a state partition per core buys no parallelism; each one only adds a
+# task, a Python-worker call and its state-store commits to every batch.
+# Spark records the count in the offset log, so a checkpoint restores
+# with the count it was written with.
+_STATE_PARTITIONS = 1
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 _NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
-_NO_DATA_LOCK = threading.Lock()
+_START_LOCK = threading.Lock()
 
 
-def _start_on_data_only(spark: SparkSession, writer):
-    """``writer.start()`` for a query that runs a micro-batch only when
-    input lands. A query whose state eviction emits no rows needs no
-    batch of its own to advance the watermark: its state evicts at the
-    next data batch, so skipping the empty batch changes no output and
-    takes its cost off the next tick's path. The query clones the session
-    conf inside ``start()``, so the flag is set only around that call and
-    the session keeps its own value; a restart goes through here again."""
-    with _NO_DATA_LOCK:
-        before = spark.conf.get(_NO_DATA_BATCHES, None)
-        spark.conf.set(_NO_DATA_BATCHES, "false")
+def _start_stateful(spark: SparkSession, writer, on_data_only: bool = True):
+    """``writer.start()`` for a stateful query: its state lives in
+    ``_STATE_PARTITIONS`` shuffle partitions and, ``on_data_only``, it
+    runs a micro-batch only when input lands. A query whose state
+    eviction emits no rows needs no batch of its own to advance the
+    watermark: its state evicts at the next data batch, so skipping the
+    empty batch changes no output and takes its cost off the next tick's
+    path. The query clones the session conf inside ``start()``, so both
+    are set only around that call and the session keeps its own values;
+    a restart goes through here again."""
+    conf = {_SHUFFLE_PARTITIONS: str(_STATE_PARTITIONS)}
+    if on_data_only:
+        conf[_NO_DATA_BATCHES] = "false"
+    with _START_LOCK:
+        before = {k: spark.conf.get(k, None) for k in conf}
+        for k, v in conf.items():
+            spark.conf.set(k, v)
         try:
             return writer.start()
         finally:
-            if before is None:
-                spark.conf.unset(_NO_DATA_BATCHES)
-            else:
-                spark.conf.set(_NO_DATA_BATCHES, before)
+            for k, v in before.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
 
 
 def dau_pipeline(
@@ -107,7 +122,7 @@ def dau_pipeline(
     events = file_stream(spark, src_dir, EVENT_SCHEMA)
     dau = dau_distinct(events, ts_col="ts", user_col="user_id")
     sink = IdempotentBatchWriter(out_dir)
-    return _start_on_data_only(
+    return _start_stateful(
         spark,
         dau.writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint)
@@ -158,9 +173,7 @@ def order_wide_pipeline(
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
     )
-    if how == "inner":
-        return _start_on_data_only(spark, writer)
-    return writer.start()
+    return _start_stateful(spark, writer, on_data_only=how == "inner")
 
 
 def allocation_pipeline(
@@ -193,7 +206,7 @@ def allocation_pipeline(
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
-    return _start_on_data_only(spark, writer)
+    return _start_stateful(spark, writer)
 
 
 def ods_router_pipeline(
@@ -355,7 +368,7 @@ def order_info_pipeline(
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_stateful(spark, writer, on_data_only=False)
 
 
 def sku_dim_pipeline(

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
 
 import pytest
 
@@ -30,6 +31,19 @@ def spark():
         extra_conf={"spark.sql.shuffle.partitions": "4"},
     )
     yield s
+
+
+@pytest.fixture(scope="session", autouse=True)
+def _run_tempdir(tmp_path_factory):
+    """Point ``tempfile`` at a dir of this run's pytest base temp, so the
+    build cache (``sources.tables.build_once``) and every other temp user
+    write there: builds are shared within a run, and pytest's retention
+    of old base temps removes them instead of leaving them in the system
+    temp dir."""
+    before = tempfile.tempdir
+    tempfile.tempdir = str(tmp_path_factory.mktemp("tempfile", numbered=False))
+    yield
+    tempfile.tempdir = before
 
 
 @pytest.fixture(scope="session")

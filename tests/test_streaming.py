@@ -476,6 +476,189 @@ def test_stateful_pipelines_run_no_empty_batches(spark, tmp_path):
             q.stop()
 
 
+def _offset_confs(ckpt):
+    """``{batch_id: session confs}`` as the checkpoint's offset log
+    recorded them (each entry's second line is its metadata)."""
+    import json
+
+    confs = {}
+    log = os.path.join(ckpt, "offsets")
+    for f in os.listdir(log):
+        if f.isdigit():
+            with open(os.path.join(log, f)) as fh:
+                fh.readline()
+                confs[int(f)] = json.loads(fh.readline())["conf"]
+    return confs
+
+
+def _state_partitions(ckpt):
+    """The checkpoint's ``operator/partition`` state-store dirs."""
+    root = os.path.join(ckpt, "state")
+    return sorted(
+        f"{op}/{part}"
+        for op in os.listdir(root)
+        if not op.startswith("_")
+        for part in os.listdir(os.path.join(root, op))
+        if not part.startswith("_")
+    )
+
+
+def test_stateful_pipelines_keep_state_in_one_partition(spark, tmp_path):
+    """dau, order_wide under both join modes, allocation and order_info
+    under both triggers keep their state in one shuffle partition: a
+    fresh checkpoint records spark.sql.shuffle.partitions "1" in its
+    offset log and holds only state/0/0. The session's own partition
+    count and noDataMicroBatches setting are the same after each
+    start()."""
+    from sparkstreaming_gmall_scala_spark.streaming.pipelines import (
+        ORDER_INFO_SCHEMA,
+        order_info_pipeline,
+    )
+
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.streaming.noDataMicroBatches.enabled",
+    )
+    odir, ddir, events, alloc, info = _dirs(
+        tmp_path, "in/orders", "in/details", "in/events", "in/alloc", "in/info"
+    )
+    ts = _ts(1)
+    _drop(spark, EVENT_SCHEMA, [(1, ts, 1, "start", 1.0, "{}")], events)
+    _drop(spark, ORDER_SCHEMA, [(1, ts, 5.0)], odir)
+    _drop(spark, DETAIL_SCHEMA, [(1, 1, ts, 5.0)], ddir)
+    _drop(spark, ALLOC_SCHEMA, [(1, 1, ts, 5.0, 5.0, 4.0)], alloc)
+    _drop(spark, ORDER_INFO_SCHEMA, [(1, 1, 1, ts, 5.0)], info)
+    # name -> (start(out, ckpt), drains and stops by itself)
+    pipelines = {
+        "dau": (lambda out, ckpt: dau_pipeline(spark, events, out, ckpt), False),
+        "wide_inner": (lambda out, ckpt: order_wide_pipeline(
+            spark, odir, ddir, out, ckpt), False),
+        "wide_left_outer": (lambda out, ckpt: order_wide_pipeline(
+            spark, odir, ddir, out, ckpt, how="left_outer"), False),
+        "alloc": (lambda out, ckpt: allocation_pipeline(
+            spark, alloc, out, ckpt), False),
+        "alloc_drain": (lambda out, ckpt: allocation_pipeline(
+            spark, alloc, out, ckpt, available_now=True), True),
+        "info": (lambda out, ckpt: order_info_pipeline(
+            spark, info, out + "_export", out, ckpt), False),
+        "info_drain": (lambda out, ckpt: order_info_pipeline(
+            spark, info, out + "_export", out, ckpt, available_now=True), True),
+    }
+    session = {k: spark.conf.get(k, None) for k in keys}
+    assert session[keys[0]] == "4"
+    for name, (start, drains) in pipelines.items():
+        out, ckpt = _dirs(tmp_path, f"{name}/out", f"{name}/ckpt")
+        q = start(out, ckpt)
+        try:
+            assert {k: spark.conf.get(k, None) for k in keys} == session, name
+            if drains:
+                assert q.awaitTermination(120), f"{name} did not terminate"
+            else:
+                q.processAllAvailable()
+        finally:
+            q.stop()
+        assert _offset_confs(ckpt)[0][keys[0]] == "1", name
+        assert _state_partitions(ckpt) == ["0/0"], (name, _state_partitions(ckpt))
+
+
+def test_stateful_checkpoint_keeps_its_partition_count(spark, tmp_path):
+    """A checkpoint written with the session's 4 state partitions (the
+    layout before the pipelines kept state in one) continues through
+    allocation_pipeline and order_info_pipeline with 4: every later
+    offset-log entry still records "4", and across the switch the shares
+    equal the order-keyed allocation loop and the flags equal the
+    per-order first-order rule."""
+    import random
+
+    from sparkstreaming_gmall_scala_spark.streaming.allocation import (
+        allocate_stateful,
+    )
+    from sparkstreaming_gmall_scala_spark.streaming.pipelines import (
+        ORDER_INFO_SCHEMA,
+        order_info_pipeline,
+        probe_first_order,
+    )
+    from sparkstreaming_gmall_scala_spark.streaming.sources import file_stream
+
+    key = "spark.sql.shuffle.partitions"
+    assert spark.conf.get(key) == "4"
+    four = ["0/0", "0/1", "0/2", "0/3"]
+
+    def start_directly(frame, out, ckpt):
+        q = (
+            frame.writeStream.foreachBatch(IdempotentBatchWriter(out))
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(120), "drain did not terminate"
+        assert _state_partitions(ckpt) == four
+        return len(_offset_confs(ckpt))
+
+    rng = random.Random(5)
+    at = lambda s: _T0_MS + s * 1000  # noqa: E731
+    alloc: list[list[tuple]] = [[] for _ in range(4)]
+    detail_id = 0
+    # orders of 2-4 details, split over their first batch and the next
+    for order_id in range(1, 25):
+        amounts = [rng.randrange(1, 5000) for _ in range(rng.randint(2, 4))]
+        original = sum(amounts)
+        final = original - rng.randrange(0, original // 3 + 1)
+        first = rng.randrange(3)
+        for a in amounts:
+            detail_id += 1
+            k = first + rng.randrange(2)
+            alloc[k].append((order_id, detail_id, at(10 * k + rng.randrange(10)),
+                             a / 100, original / 100, final / 100))
+    src, out, ckpt = _dirs(tmp_path, "alloc/src", "alloc/out", "alloc/ckpt")
+    _drop_each(spark, ALLOC_SCHEMA, [_alloc_rows(b) for b in alloc[:2]], src)
+    written = start_directly(
+        allocate_stateful(file_stream(spark, src, ALLOC_SCHEMA)), out, ckpt
+    )
+    _drop_each(spark, ALLOC_SCHEMA, [_alloc_rows(b) for b in alloc[2:]], src)
+    q = allocation_pipeline(spark, src, out, ckpt, available_now=True)
+    assert q.awaitTermination(120), "drain did not terminate"
+    confs = _offset_confs(ckpt)
+    assert len(confs) > written
+    assert {c[key] for c in confs.values()} == {"4"}
+    assert _state_partitions(ckpt) == four
+    shares = {
+        r["detail_id"]: r["final_detail_amount"]
+        for r in IdempotentBatchWriter(out).read(spark).collect()
+    }
+    assert shares == _per_order_allocation(alloc)
+
+    order_id = 0
+    info: list[list[tuple]] = []
+    for _ in range(4):
+        rows = []
+        for _ in range(30):
+            order_id += 1
+            rows.append((order_id, rng.randint(1, 40), 1,
+                         TS.format(rng.randrange(8)), float(order_id)))
+        info.append(rows)
+    src, state, out, ckpt = _dirs(
+        tmp_path, "info/src", "info/state", "info/out", "info/ckpt"
+    )
+    _drop_each(spark, ORDER_INFO_SCHEMA, info[:2], src)
+    written = start_directly(
+        probe_first_order(file_stream(spark, src, ORDER_INFO_SCHEMA)), out, ckpt
+    )
+    _drop_each(spark, ORDER_INFO_SCHEMA, info[2:], src)
+    q = order_info_pipeline(spark, src, state, out, ckpt, available_now=True)
+    assert q.awaitTermination(120), "drain did not terminate"
+    confs = _offset_confs(ckpt)
+    assert len(confs) > written
+    assert {c[key] for c in confs.values()} == {"4"}
+    assert _state_partitions(ckpt) == four
+    flags = {
+        r["order_id"]: (r["user_id"], r["if_first_order"])
+        for r in IdempotentBatchWriter(out).read(spark).collect()
+    }
+    assert flags == _per_order_first_flags(info)[0]
+
+
 def test_dau_state_evicts_and_keeps_day_user_set(spark, tmp_path):
     """The DAU dedup state is bounded: keys of a day evict once the 24 h
     watermark passes them, so over five daily batches of 50 users the
