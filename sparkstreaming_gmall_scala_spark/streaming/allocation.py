@@ -12,12 +12,11 @@ open order. Sums are integer cents — the reference's
 ``detailAmount == originalTotal - originSum`` equality test on doubles is
 a float-equality landmine; cents make it exact and deterministic.
 
-State layout. ``_bucketed_pandas_state`` (also under order_info's
-``probe_first_order``) keys the state by ``pmod(xxhash64(order_id),
-BUCKETS)``. Each bucket holds its open orders as four parallel arrays:
-``order_id``, ``origin_sum_cents``, ``split_sum_cents`` and
-``expire_ms``. Changing ``BUCKETS`` (or restoring a checkpoint keyed by
-order id) needs a fresh checkpoint.
+State layout. ``allocate_stateful`` keys the state by
+``pmod(xxhash64(order_id), BUCKETS)``. Each bucket holds its open orders
+as four parallel arrays: ``order_id``, ``origin_sum_cents``,
+``split_sum_cents`` and ``expire_ms``. Changing ``BUCKETS`` (or
+restoring a checkpoint keyed by order id) needs a fresh checkpoint.
 
 Why buckets: ``applyInPandasWithState`` pays ~4-5 ms of Python overhead
 per group, and an order-keyed state has one group per order (~1,000 per
@@ -51,8 +50,6 @@ arrival-order behavior for details split across micro-batches.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -60,7 +57,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-# Hash buckets of the pandas-state steps; part of their checkpoint layout.
+# Hash buckets of the allocation state; part of its checkpoint layout.
 BUCKETS = 16
 # The reference's Redis TTL: the watermark delay and an order's expiry.
 _TTL_S = 600
@@ -78,45 +75,6 @@ _STATE_SCHEMA = T.StructType(
         for name in ("order_id", "origin_sum_cents", "split_sum_cents", "expire_ms")
     ]
 )
-
-
-def _bucketed_pandas_state(
-    df: DataFrame,
-    key: str,
-    step: Callable[[pd.DataFrame, GroupState], pd.DataFrame | None],
-    out_schema: T.StructType,
-    state_schema: T.StructType | str,
-    timeout: str,
-) -> DataFrame:
-    """``step(pdf, state)`` once per batch for every
-    ``pmod(xxhash64(key), BUCKETS)`` bucket with data or a due timeout:
-    ``pdf`` holds the bucket's rows in ``df``'s columns (none on a
-    timeout), and a frame ``step`` returns is emitted. A long column
-    holding a NULL would reach pandas as float64, which rounds ids
-    >= 2**53, so each one crosses NULL-free plus a null mask and arrives
-    as a nullable ``Int64`` column."""
-    columns = df.columns
-    longs = [f.name for f in df.schema if f.dataType == T.LongType()]
-
-    def run(_key, pdf_iter, state: GroupState):
-        pdf = pd.concat(list(pdf_iter), ignore_index=True)
-        for c in longs:
-            pdf[c] = pd.arrays.IntegerArray(
-                pdf[c].to_numpy(np.int64), pdf[f"_null_{c}"].to_numpy(bool)
-            )
-        out = step(pdf[columns], state)
-        if out is not None:
-            yield out
-
-    return (
-        df.select(
-            *(F.coalesce(c, F.lit(0)).alias(c) if c in longs else c for c in columns),
-            *(F.col(c).isNull().alias(f"_null_{c}") for c in longs),
-            F.pmod(F.xxhash64(key), F.lit(BUCKETS)).alias("_bucket"),
-        )
-        .groupBy("_bucket")
-        .applyInPandasWithState(run, out_schema, state_schema, "append", timeout)
-    )
 
 
 def _cents(x: float) -> int:
@@ -217,7 +175,31 @@ def allocate_stateful(details: DataFrame) -> DataFrame:
     are allocated again (no rule yet)."""
     if details.isStreaming:
         details = details.withWatermark("ts", f"{_TTL_S} seconds")
-    return _bucketed_pandas_state(
-        details, "order_id", _allocate_bucket, _OUT_SCHEMA, _STATE_SCHEMA,
-        GroupStateTimeout.EventTimeTimeout,
+    # A long column holding a NULL would reach pandas as float64, which
+    # rounds ids >= 2**53, so each one crosses NULL-free plus a null mask
+    # and arrives as a nullable Int64 column.
+    columns = details.columns
+    longs = [f.name for f in details.schema if f.dataType == T.LongType()]
+
+    def run(_key, pdf_iter, state: GroupState):
+        pdf = pd.concat(list(pdf_iter), ignore_index=True)
+        for c in longs:
+            pdf[c] = pd.arrays.IntegerArray(
+                pdf[c].to_numpy(np.int64), pdf[f"_null_{c}"].to_numpy(bool)
+            )
+        out = _allocate_bucket(pdf[columns], state)
+        if out is not None:
+            yield out
+
+    return (
+        details.select(
+            *(F.coalesce(c, F.lit(0)).alias(c) if c in longs else c for c in columns),
+            *(F.col(c).isNull().alias(f"_null_{c}") for c in longs),
+            F.pmod(F.xxhash64("order_id"), F.lit(BUCKETS)).alias("_bucket"),
+        )
+        .groupBy("_bucket")
+        .applyInPandasWithState(
+            run, _OUT_SCHEMA, _STATE_SCHEMA, "append",
+            GroupStateTimeout.EventTimeTimeout,
+        )
     )

@@ -16,18 +16,16 @@ from __future__ import annotations
 import os
 import threading
 
-import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.window import Window
 
 from ..sinks.batch import IdempotentBatchWriter, upsert_parquet
 from ..sources.tables import read_parquet_memo
-from .allocation import _bucketed_pandas_state, allocate_stateful
+from .allocation import allocate_stateful
 from .dau import dau_distinct
 from .join import windowed_equi_join
 from .sources import file_stream
@@ -278,40 +276,50 @@ SKU_SCHEMA = T.StructType(
 )
 
 
-def _flag_bucket(pdf: pd.DataFrame, state: GroupState) -> pd.DataFrame:
-    claimed = list(state.get[0]) if state.exists else []
-    pdf = pdf.sort_values(["ts", "order_id"], na_position="first")
-    pdf = pdf.drop_duplicates("order_id")
-    user = pdf["user_id"]
-    first = user.notna() & ~user.duplicated() & ~user.isin(set(claimed))
-    first = first.to_numpy(bool)
-    if first.any():
-        state.update((claimed + user[first].tolist(),))
-    return pdf.assign(if_first_order=np.where(first, "1", "0"))
+_MARKER = "_user_first_seen"  # tags the rows probe_first_order adds
 
 
 def probe_first_order(orders: DataFrame) -> DataFrame:
-    """Every order once, with ``if_first_order``; the users already
-    claimed live in the state store (the reference's Phoenix
-    ``USER_STATUS``, dwd/OrderInfoApp.scala:92-117,262-279), keyed by
-    ``pmod(xxhash64(user_id), BUCKETS)`` through streaming/allocation.py's
-    bucketed pandas-state step: one pandas call per bucket, each holding
-    its claimed ids as one array, updated only when it claims a new user
-    and never expiring. Per batch:
-
-    - rows repeating an ``order_id`` collapse to the earliest by ``ts``
-      (copies that disagree on ``user_id`` hash apart and stay apart);
-    - a user's earliest order by ``(ts, order_id)``, NULL ``ts`` first,
-      is '1' iff no earlier batch claimed the user;
-    - a NULL ``user_id`` is no user's, so it is never first and claims
-      nothing (the reference's ``Long`` has no NULL, bean/OrderInfo.scala:7-8).
-
-    The state is never joined or broadcast (tests/test_plan_properties.py)."""
-    flagged = T.StructField("if_first_order", T.StringType())
-    return _bucketed_pandas_state(
-        orders, "user_id", _flag_bucket, T.StructType([*orders.schema, flagged]),
-        "user_id array<bigint>", GroupStateTimeout.NoTimeout,
+    """The order stream plus one marker row per user in the first batch
+    that holds the user. The users seen so far are the state of a
+    streaming ``dropDuplicates(["user_id"])`` (the reference's Phoenix
+    ``USER_STATUS``, dwd/OrderInfoApp.scala:92-117,262-279): one row per
+    user, written once, never expiring, never joined or broadcast
+    (tests/test_plan_properties.py). A NULL ``user_id`` gets no marker
+    (the reference's ``Long`` has no NULL, bean/OrderInfo.scala:7-8)."""
+    markers = orders.select("user_id").where("user_id IS NOT NULL")
+    return orders.withColumn(_MARKER, F.lit(False)).unionByName(
+        markers.dropDuplicates(["user_id"]).withColumn(_MARKER, F.lit(True)),
+        allowMissingColumns=True,
     )
+
+
+def _first_order_flags(batch_df: DataFrame) -> DataFrame:
+    """A batch of ``probe_first_order``'s stream as its orders with
+    ``if_first_order``, in one window: repeats of a ``(user_id,
+    order_id)`` collapse to the earliest by ``ts``, NULL first, and an
+    order is '1' iff its user's marker is in the batch and it is the
+    user's earliest order by ``(ts, order_id)``, NULL ``ts`` first."""
+    marker = F.col(_MARKER)
+    # markers sort after their user's orders, an order's copies next to
+    # each other, earliest first
+    by_user = Window.partitionBy("user_id").orderBy(
+        _MARKER, "order_id", F.col("ts").asc_nulls_first()
+    )
+    user = by_user.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    rank = F.struct(F.col("ts").isNotNull(), "ts", "order_id")
+    first = F.max(marker).over(user) & rank.eqNullSafe(
+        F.min(F.when(~marker, rank)).over(user)
+    )
+    # lag() of a struct is NULL only on a user's first row, so a NULL
+    # order_id is compared like any other
+    order = F.struct("order_id")
+    flagged = batch_df.select(
+        "*",
+        F.when(first, "1").otherwise("0").alias("if_first_order"),
+        F.lag(order).over(by_user).eqNullSafe(order).alias("_repeat"),
+    )
+    return flagged.where(~marker & ~F.col("_repeat")).drop(_MARKER, "_repeat")
 
 
 def order_info_pipeline(
@@ -324,15 +332,17 @@ def order_info_pipeline(
     available_now: bool = False,
 ):
     """OrderInfoApp end-to-end (dwd/OrderInfoApp.scala:40-290): order
-    stream → ``probe_first_order`` → dim enrichment → batch-keyed sink.
-    Exactly once comes from state-store versioning: a replay reloads the
-    state version its batch started from, recomputes the same flags and
-    rewrites its ``batch_id=N`` dir (the reference's IF_CONSUMED='1'
-    upsert would flip a replay's flags to '0'). The state grows with the
-    claimed users, one id each. ``state_dir`` gets ``USER_STATUS`` as an
-    export the flag never reads: one flat ``(user_id, first_batch_id)``
-    parquet file per batch, named by batch id. The state itself reads as
-    ``spark.read.format("statestore")`` on the checkpoint.
+    stream → ``probe_first_order`` → ``_first_order_flags`` → dim
+    enrichment → batch-keyed sink. Exactly once comes from state-store
+    versioning: a replay reloads the state version its batch started
+    from, so it gets the same markers and flags and rewrites its
+    ``batch_id=N`` dir (the reference's IF_CONSUMED='1' upsert would
+    flip a replay's flags to '0'). An ``order_id`` re-sent in a later
+    batch is written again with '0'. ``state_dir`` gets ``USER_STATUS``
+    as an export the flag never reads: one flat ``(user_id,
+    first_batch_id)`` parquet file per batch, named by batch id. The
+    state itself reads as ``spark.read.format("statestore")`` on the
+    checkpoint.
 
     Dims are re-read per batch like the reference's Phoenix fetch +
     broadcast (OrderInfoApp.scala:194-221), so a dim update shows in the
@@ -342,6 +352,7 @@ def order_info_pipeline(
     os.makedirs(state_dir, exist_ok=True)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df = _first_order_flags(batch_df)
         for dim_dir, fact_key, dim_key in dim_dirs:
             dim = read_parquet_memo(spark, dim_dir)
             if dim_key != fact_key:

@@ -76,8 +76,8 @@ def test_scans_prune_to_needed_columns(spark, sf_dir, registry):
 
 def test_first_order_state_probe_is_not_forced_broadcast(spark, tmp_path):
     """The first-order state holds every user ever claimed, so it lives in
-    the state store: the flag step is one FlatMapGroupsInPandasWithState
-    behind a hash exchange on the user bucket, and the state is never
+    the state store: the probe is one StreamingDeduplicate behind a hash
+    exchange on user_id, with no Python operator, and the state is never
     joined to the orders or broadcast, whatever its size."""
     from sparkstreaming_gmall_scala_spark.streaming.pipelines import (
         ORDER_INFO_SCHEMA,
@@ -91,8 +91,11 @@ def test_first_order_state_probe_is_not_forced_broadcast(spark, tmp_path):
     plan = spark._jvm.PythonSQLUtils.explainString(
         flagged._jdf.queryExecution(), "simple"
     )
-    assert "FlatMapGroupsInPandasWithState" in plan, plan[:2000]
-    assert "Exchange hashpartitioning(_bucket" in plan, plan[:2000]
+    lines = plan.split("\n")
+    dedup = [i for i, l in enumerate(lines) if "StreamingDeduplicate [user_id" in l]
+    assert len(dedup) == 1, plan[:2000]
+    assert "Exchange hashpartitioning(user_id" in lines[dedup[0] + 1], plan[:2000]
+    assert "Pandas" not in plan and "Python" not in plan, plan[:2000]
     assert "Join" not in plan and "Broadcast" not in plan, plan[:2000]
 
 

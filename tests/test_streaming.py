@@ -561,7 +561,9 @@ def test_stateful_pipelines_keep_state_in_one_partition(spark, tmp_path):
         assert _state_partitions(ckpt) == ["0/0"], (name, _state_partitions(ckpt))
 
 
-def test_stateful_checkpoint_keeps_its_partition_count(spark, tmp_path):
+def test_stateful_checkpoint_keeps_its_partition_count(
+    spark, tmp_path, monkeypatch
+):
     """A checkpoint written with the session's 4 state partitions (the
     layout before the pipelines kept state in one) continues through
     allocation_pipeline and order_info_pipeline with 4: every later
@@ -570,13 +572,13 @@ def test_stateful_checkpoint_keeps_its_partition_count(spark, tmp_path):
     per-order first-order rule."""
     import random
 
+    from sparkstreaming_gmall_scala_spark.streaming import pipelines
     from sparkstreaming_gmall_scala_spark.streaming.allocation import (
         allocate_stateful,
     )
     from sparkstreaming_gmall_scala_spark.streaming.pipelines import (
         ORDER_INFO_SCHEMA,
         order_info_pipeline,
-        probe_first_order,
     )
     from sparkstreaming_gmall_scala_spark.streaming.sources import file_stream
 
@@ -642,9 +644,14 @@ def test_stateful_checkpoint_keeps_its_partition_count(spark, tmp_path):
         tmp_path, "info/src", "info/state", "info/out", "info/ckpt"
     )
     _drop_each(spark, ORDER_INFO_SCHEMA, info[:2], src)
-    written = start_directly(
-        probe_first_order(file_stream(spark, src, ORDER_INFO_SCHEMA)), out, ckpt
-    )
+    # the first run as written before the pipeline kept state in one
+    # partition
+    monkeypatch.setattr(pipelines, "_STATE_PARTITIONS", 4)
+    q = order_info_pipeline(spark, src, state, out, ckpt, available_now=True)
+    assert q.awaitTermination(120), "drain did not terminate"
+    monkeypatch.undo()
+    assert _state_partitions(ckpt) == four
+    written = len(_offset_confs(ckpt))
     _drop_each(spark, ORDER_INFO_SCHEMA, info[2:], src)
     q = order_info_pipeline(spark, src, state, out, ckpt, available_now=True)
     assert q.awaitTermination(120), "drain did not terminate"
@@ -653,7 +660,7 @@ def test_stateful_checkpoint_keeps_its_partition_count(spark, tmp_path):
     assert {c[key] for c in confs.values()} == {"4"}
     assert _state_partitions(ckpt) == four
     flags = {
-        r["order_id"]: (r["user_id"], r["if_first_order"])
+        (r["order_id"], r["user_id"]): r["if_first_order"]
         for r in IdempotentBatchWriter(out).read(spark).collect()
     }
     assert flags == _per_order_first_flags(info)[0]
@@ -920,27 +927,84 @@ def test_order_info_null_user_is_never_first_order(spark, tmp_path):
     assert claims == [(5, 0), (6, 2)], claims
 
 
+def test_order_info_resent_order_is_written_again_with_0(spark, tmp_path):
+    """An order_id re-sent in a later batch is written again, flagged '0',
+    because the earlier copy's batch claimed its user: order 1 was its
+    user's first, order 2 was not, and the re-sent order 2 now sorts
+    before order 1 by ts. A new user's order in the same batch is still
+    first."""
+    from sparkstreaming_gmall_scala_spark.streaming.pipelines import (
+        ORDER_INFO_SCHEMA,
+        order_info_pipeline,
+    )
+
+    src, state, out, ckpt = _dirs(tmp_path, "src", "state", "out", "ckpt")
+    _drop_each(spark, ORDER_INFO_SCHEMA, [
+        [(1, 7, 1, TS.format(5), 1.0), (2, 7, 1, TS.format(6), 2.0)],
+        [(1, 7, 1, TS.format(5), 1.0), (2, 7, 1, TS.format(0), 2.0),
+         (3, 8, 1, TS.format(9), 3.0)],
+    ], src)
+    q = order_info_pipeline(spark, src, state, out, ckpt, available_now=True)
+    assert q.awaitTermination(120), "drain did not terminate"
+    flags = {
+        (r["batch_id"], r["order_id"]): r["if_first_order"]
+        for r in IdempotentBatchWriter(out).read(spark).collect()
+    }
+    assert flags == {
+        (0, 1): "1", (0, 2): "0", (1, 1): "0", (1, 2): "0", (1, 3): "1"
+    }, flags
+
+
+def test_order_info_state_written_per_batch_is_flat(spark, tmp_path):
+    """A batch writes only its own new users to the first-order state:
+    over six batches of 2,000 new users each, the newest state delta is
+    at most 1.5x the second, where a state that rewrote every user
+    claimed so far would write about three times as much."""
+    from sparkstreaming_gmall_scala_spark.streaming.pipelines import (
+        ORDER_INFO_SCHEMA,
+        order_info_pipeline,
+    )
+
+    src, state, out, ckpt = _dirs(tmp_path, "src", "state", "out", "ckpt")
+    n = 2000
+    _drop_each(spark, ORDER_INFO_SCHEMA, [
+        [(k * n + u, k * n + u, 1, TS.format(u % 60), 1.0) for u in range(n)]
+        for k in range(6)
+    ], src)
+    q = order_info_pipeline(spark, src, state, out, ckpt, available_now=True)
+    assert q.awaitTermination(120), "drain did not terminate"
+    store = os.path.join(ckpt, "state", "0", "0")
+    delta = {
+        int(f.split(".")[0]): os.path.getsize(os.path.join(store, f))
+        for f in os.listdir(store)
+        if f.endswith(".delta")
+    }
+    assert sorted(delta) == [1, 2, 3, 4, 5, 6], delta
+    assert delta[6] <= 1.5 * delta[2], delta
+
+
 def _per_order_first_flags(batches):
     """order_info's first-order rule, stated per order: within a batch,
-    repeats of an order_id collapse to their earliest copy; an order is
-    first iff its user is not NULL, no earlier batch claimed the user,
-    and no other order of the user in the batch sorts before it by
-    ``(ts, order_id)``, NULL ts first. Rows are ``(order_id, user_id,
-    province_id, ts, total)``; returns ``{order_id: (user_id, flag)}`` and
-    ``{user_id: first_batch_id}``."""
+    repeats of an ``(order_id, user_id)`` collapse to their earliest copy
+    by ts, NULL first; an order is first iff its user is not NULL, no
+    earlier batch claimed the user, and no other order of the user in the
+    batch sorts before it by ``(ts, order_id)``, NULL ts first. Rows are
+    ``(order_id, user_id, province_id, ts, total)``; returns
+    ``{(order_id, user_id): flag}`` and ``{user_id: first_batch_id}``."""
     from datetime import datetime
 
-    flags: dict[int, tuple] = {}
+    flags: dict[tuple, str] = {}
     claimed: dict[int, int] = {}
 
     def rank(ts, order_id):  # NULL ts sorts first
         return (ts is not None, ts or datetime.min, order_id)
 
     for batch_id, rows in enumerate(batches):
-        kept: dict[int, tuple] = {}
+        kept: dict[tuple, tuple] = {}
         for r in rows:
-            if r[0] not in kept or rank(r[3], 0) < rank(kept[r[0]][3], 0):
-                kept[r[0]] = r
+            key = (r[0], r[1])
+            if key not in kept or rank(r[3], 0) < rank(kept[key][3], 0):
+                kept[key] = r
         for order_id, user, _, ts, _ in kept.values():
             first = (
                 user is not None
@@ -950,45 +1014,30 @@ def _per_order_first_flags(batches):
                     for o, u, _, t, _ in kept.values()
                 )
             )
-            flags[order_id] = (user, "1" if first else "0")
-        for order_id in kept:
-            user, flag = flags[order_id]
-            if flag == "1":
+            flags[order_id, user] = "1" if first else "0"
+        for order_id, user in kept:
+            if flags[order_id, user] == "1":
                 claimed[user] = batch_id
     return flags, claimed
 
 
 def test_bucketed_first_order_matches_per_order_rule(spark, tmp_path):
-    """The hash-bucketed first-order state flags every order exactly as
-    the per-order statement of the rule does: five batches touching all
-    16 buckets, users repeated within a batch, duplicate order_id rows,
-    ts ties broken by order_id, a NULL ts sorting first, NULL users
-    sharing a bucket and a batch with user ids above 2**53, and a restart
-    from the checkpoint midway.
-    The USER_STATUS export equals the claims in the state store."""
+    """The first-order state flags every order exactly as the per-order
+    statement of the rule does: five batches, users repeated within a
+    batch, duplicate order_id rows, copies of one order_id that disagree
+    on user_id, ts ties broken by order_id, a NULL ts sorting first, NULL
+    users in a batch with user ids above 2**53, and a restart from the
+    checkpoint midway. The USER_STATUS export equals the claims in the
+    state store."""
     import random
 
-    from sparkstreaming_gmall_scala_spark.streaming.allocation import (
-        BUCKETS as FIRST_ORDER_BUCKETS,
-    )
     from sparkstreaming_gmall_scala_spark.streaming.pipelines import (
         ORDER_INFO_SCHEMA,
         order_info_pipeline,
     )
 
-    bucket = F.pmod(F.xxhash64("u"), F.lit(FIRST_ORDER_BUCKETS))
-    null_bucket = (
-        spark.sql("SELECT CAST(NULL AS BIGINT) AS u").select(bucket).first()[0]
-    )
     # odd ids above 2**53: a float64 round trip would change them
-    big = [
-        r["u"]
-        for r in spark.range(400)
-        .selectExpr(f"{2**53 + 1} + 2 * id AS u")
-        .where(bucket == null_bucket)
-        .limit(2)
-        .collect()
-    ]
+    big = [2**53 + 1, 2**53 + 3]
     rng = random.Random(11)
     order_id = 0
     batches: list[list[tuple]] = []
@@ -1004,8 +1053,8 @@ def test_bucketed_first_order_matches_per_order_rule(spark, tmp_path):
     # user 1000: a ts tie within a batch, decided by order_id
     batches[1] += [(o + 2, 1000, 1, TS.format(3), 1.0),
                    (o + 1, 1000, 1, TS.format(3), 1.0)]
-    # NULL users with the big ids in their bucket and batch; one big user
-    # orders again after the restart
+    # NULL users in the big ids' batch; one big user orders again after
+    # the restart
     batches[2] += [(o + 3, None, 1, TS.format(0), 1.0),
                    (o + 4, big[0], 1, TS.format(1), 1.0),
                    (o + 5, big[1], 1, TS.format(2), 1.0),
@@ -1015,16 +1064,15 @@ def test_bucketed_first_order_matches_per_order_rule(spark, tmp_path):
     # user 2000: the NULL-ts order sorts before an earlier-id one at 0 s
     batches[4] += [(o + 9, 2000, 1, TS.format(0), 1.0),
                    (o + 10, 2000, 1, None, 1.0)]
+    # order o+11 sent for two users: each copy is its user's order, so
+    # user 3000's copy is its first and claimed user 1000's is not
+    batches[3] += [(o + 11, 1000, 1, TS.format(0), 1.0),
+                   (o + 11, 3000, 1, TS.format(5), 1.0)]
     want, claimed = _per_order_first_flags(batches)
-    assert want[o + 1] == (1000, "1") and want[o + 2] == (1000, "0")
-    assert want[o + 10] == (2000, "1") and want[o + 9] == (2000, "0")
-    assert want[o + 4] == (big[0], "1") and want[o + 7] == (big[0], "0")
-
-    users = [(u,) for u in {r[1] for b in batches for r in b}]
-    touched = (
-        spark.createDataFrame(users, "u long").select(bucket).distinct().count()
-    )
-    assert touched == FIRST_ORDER_BUCKETS
+    assert want[o + 1, 1000] == "1" and want[o + 2, 1000] == "0"
+    assert want[o + 10, 2000] == "1" and want[o + 9, 2000] == "0"
+    assert want[o + 4, big[0]] == "1" and want[o + 7, big[0]] == "0"
+    assert want[o + 11, 1000] == "0" and want[o + 11, 3000] == "1"
 
     src, state, out, ckpt = _dirs(tmp_path, "src", "state", "out", "ckpt")
     for run in (batches[:3], batches[3:]):
@@ -1032,7 +1080,7 @@ def test_bucketed_first_order_matches_per_order_rule(spark, tmp_path):
         q = order_info_pipeline(spark, src, state, out, ckpt, available_now=True)
         assert q.awaitTermination(120), "drain did not terminate"
     sink = IdempotentBatchWriter(out).read(spark).collect()
-    got = {r["order_id"]: (r["user_id"], r["if_first_order"]) for r in sink}
+    got = {(r["order_id"], r["user_id"]): r["if_first_order"] for r in sink}
     assert len(sink) == len(got) == len(want)
     assert got == want
 
@@ -1042,10 +1090,7 @@ def test_bucketed_first_order_matches_per_order_rule(spark, tmp_path):
     }
     assert exported == set(claimed.items())
     in_store = (
-        spark.read.format("statestore")
-        .load(ckpt)
-        .selectExpr("explode(value.groupState.user_id) AS user_id")
-        .collect()
+        spark.read.format("statestore").load(ckpt).select("key.user_id").collect()
     )
     assert sorted(r["user_id"] for r in in_store) == sorted(claimed)
 
