@@ -21,9 +21,10 @@ from sparkstreaming_gmall_scala_spark.plans.catalog import load_all
 
 # One name per parity family: flagship agg chain, TPC-H Q1 shape,
 # broadcast enrich, first-per-group window, allocation, CDC routing,
-# stream join, streaming distinct, sessionization, exact + MinHash dedup,
-# exact ANN, text quality and the as-of join. The external correctness
-# gate budgets 50 rows; every name here has a full oracle.
+# stream join, streaming distinct, sessionization, the as-of join, and
+# four of gmallbench's mart queries (revenue rollup, rolling 7-day DAU,
+# event funnel, cohort retention). The external correctness gate
+# budgets 50 rows; every name here has a full oracle.
 CORE: tuple[str, ...] = (
     "trademark_stat",
     "pricing_summary",
@@ -34,11 +35,11 @@ CORE: tuple[str, ...] = (
     "windowed_order_join",
     "dau",
     "session_stats",
-    "dedup_exact",
-    "minhash_lsh_pairs",
-    "knn_bruteforce",
-    "doc_quality",
     "asof_last_click",
+    "revenue_rollup",
+    "rolling_dau_7d",
+    "event_funnel",
+    "user_retention",
 )
 
 

@@ -11,7 +11,6 @@ Modules:
                         dropDuplicatesWithinWatermark)
   join.py             - J1 watermarked stream-stream join
   allocation.py       - A4 stateful allocation (pandas state in hash buckets)
-  running.py          - W2 running sums (transformWithStateInPandas)
   pipelines.py        - the nine reference apps as wired pipelines
   dedup.py            - incremental LSH dedup over a persisted band index
                         (minhash / simhash-limb / embedding-hyperplane

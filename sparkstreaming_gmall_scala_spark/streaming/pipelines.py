@@ -652,18 +652,30 @@ def order_detail_pipeline(
     SkuInfoApp's job) sku dim, re-read per batch so a dim update is
     visible to the next micro-batch (the schema memo skips footer
     inference while it is unchanged); the per-record Kafka producer loop
-    becomes the batch-id-keyed sink (on a broker: sinks.kafka_fanout)."""
+    becomes the batch-id-keyed sink (on a broker: sinks.kafka_fanout).
+
+    Repeats of a ``detail_id`` within a batch collapse to the copy
+    earliest by ``ts``, NULL first, as allocation collapses them; a NULL
+    ``detail_id`` is never a repeat."""
     details = file_stream(spark, src_dir, ORDER_DETAIL_SCHEMA)
     sink = IdempotentBatchWriter(out_dir)
+    # the remaining columns break ts ties, so the surviving copy never
+    # depends on arrival order
+    by_detail = Window.partitionBy("detail_id").orderBy(
+        F.col("ts").asc_nulls_first(), "order_id", "sku_id", "amount"
+    )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         sku = read_parquet_memo(spark, sku_dim_dir).select(
             "sku_id", "sku_name", "spu_id", "spu_name", "tm_id", "tm_name",
             "category3_id", "category3_name",
         )
-        enriched = batch_df.dropDuplicates(["detail_id"]).join(
-            F.broadcast(sku), "sku_id", "left"
+        first = (
+            batch_df.select("*", F.row_number().over(by_detail).alias("_n"))
+            .where(F.col("detail_id").isNull() | (F.col("_n") == 1))
+            .drop("_n")
         )
+        enriched = first.join(F.broadcast(sku), "sku_id", "left")
         sink(enriched, batch_id)
 
     return (

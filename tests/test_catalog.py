@@ -94,11 +94,11 @@ def test_entry_contract(spark):
         "windowed_order_join",
         "dau",
         "session_stats",
-        "dedup_exact",
-        "minhash_lsh_pairs",
-        "knn_bruteforce",
-        "doc_quality",
         "asof_last_click",
+        "revenue_rollup",
+        "rolling_dau_7d",
+        "event_funnel",
+        "user_retention",
     )
     assert len(qs) <= 50
     assert set(oracles) == set(qs)

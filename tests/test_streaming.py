@@ -1305,120 +1305,6 @@ def test_streaming_sessionize_merges_across_batches_and_matches_batch(spark, tmp
     assert len(u1) == 1 and u1[0][3] == 3
 
 
-def test_transform_with_state_running_spend_matches_batch(spark, tmp_path):
-    """The Spark-4 StatefulProcessor running-sum must carry state across
-    micro-batches and reproduce the batch window analog exactly.
-
-    The engine-side run needs google.protobuf (the TWS state-server wire
-    protocol), absent from this container — skipped here, exercised on a
-    real deployment; the processor's Python semantics are covered by
-    test_running_spend_processor_logic_with_fake_state below."""
-    pytest.importorskip("google.protobuf")
-    from sparkstreaming_gmall_scala_spark.streaming.running import (
-        running_spend_stream,
-    )
-    from sparkstreaming_gmall_scala_spark.streaming.sources import file_stream
-
-    src, ckpt = _dirs(tmp_path, "run_src", "run_ckpt")
-    old_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        batch1 = [
-            (1, _ts(0), 1, "purchase", 10.004, "{}"),
-            (2, _ts(1), 1, "purchase", 0.003, "{}"),
-            (3, _ts(2), 2, "purchase", 5.0, "{}"),
-            (4, _ts(3), 1, "view", 99.0, "{}"),  # filtered out
-        ]
-        batch2 = [
-            (5, _ts(10), 1, "purchase", 2.5, "{}"),  # state carries 10.007
-            (6, _ts(11), 2, "purchase", 0.005, "{}"),
-        ]
-        stream = file_stream(spark, src, EVENT_SCHEMA)
-        out = running_spend_stream(stream)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("running_out")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            for rows in (batch1, batch2):
-                _drop(spark, EVENT_SCHEMA, rows, src)
-                q.processAllAvailable()
-            got = {
-                r["event_id"]: (r["user_id"], r["running_spend"])
-                for r in spark.sql("SELECT * FROM running_out").collect()
-            }
-        finally:
-            q.stop()
-    finally:
-        if old_provider is not None:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", old_provider
-            )
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-    # batch analog on the same rows (same fold order): floor(cumsum*100+.5)/100
-    assert got == {
-        1: (1, 10.0),     # 10.004
-        2: (1, 10.01),    # 10.007
-        3: (2, 5.0),
-        5: (1, 12.51),    # 12.507 — state crossed the batch boundary
-        6: (2, 5.01),     # 5.005 half-up
-    }
-
-
-def test_running_spend_processor_logic_with_fake_state(spark):
-    """The StatefulProcessor's fold logic, unit-tested against a fake
-    ValueState: in-batch (ts, event_id) ordering, half-up 2-dp rounding,
-    and state carry across handleInputRows calls (= micro-batches)."""
-    import pandas as pd
-
-    from sparkstreaming_gmall_scala_spark.streaming.running import (
-        RunningSpendProcessor,
-    )
-
-    class FakeState:
-        def __init__(self):
-            self.v = None
-
-        def exists(self):
-            return self.v is not None
-
-        def get(self):
-            return self.v
-
-        def update(self, t):
-            self.v = t
-
-    proc = RunningSpendProcessor()
-    proc._total = FakeState()
-
-    b1 = pd.DataFrame(
-        {"event_id": [2, 1], "ts": [pd.Timestamp("2024-01-01 00:00:01"),
-                                    pd.Timestamp("2024-01-01 00:00:00")],
-         "value": [0.003, 10.004]}
-    )
-    (out1,) = proc.handleInputRows((1,), iter([b1]), None)
-    # sorted by (ts, event_id): event 1 first, cumulative 10.004 → 10.007
-    assert list(out1["event_id"]) == [1, 2]
-    assert list(out1["running_spend"]) == [10.0, 10.01]
-
-    b2 = pd.DataFrame(
-        {"event_id": [5], "ts": [pd.Timestamp("2024-01-01 00:00:10")],
-         "value": [2.5]}
-    )
-    (out2,) = proc.handleInputRows((1,), iter([b2]), None)
-    assert list(out2["running_spend"]) == [12.51]  # state carried 10.007
-
-
 def test_streaming_sessionize_state_survives_restart(spark, tmp_path):
     """Kill the query between batches and restart from the checkpoint: the
     session store must recover so an event arriving after the restart
@@ -1714,6 +1600,51 @@ def test_order_detail_pipeline_enriches_from_sku_dim(spark, tmp_path):
     got = {r["detail_id"]: r for r in IdempotentBatchWriter(out).read(spark).collect()}
     assert got[3]["tm_name"] == "google"
     assert got[2]["tm_name"] is None  # already-written batch unchanged
+
+
+def test_order_detail_pipeline_null_and_repeated_detail_ids(spark, tmp_path):
+    """Details with a NULL ``detail_id`` are never repeats, so each one
+    is written; repeats of an id within a batch collapse to the copy
+    earliest by ``ts``, NULL first (allocation's rule)."""
+    from sparkstreaming_gmall_scala_spark.streaming.pipelines import (
+        ORDER_DETAIL_SCHEMA,
+        order_detail_pipeline,
+    )
+
+    src, sku_dim, out, ckpt = _dirs(tmp_path, "src", "sku", "out", "ckpt")
+    spark.createDataFrame(
+        [(100, "iphone", 1, "phones-spu", 5, "apple", 7, "phones")],
+        "sku_id long, sku_name string, spu_id long, spu_name string, "
+        "tm_id long, tm_name string, category3_id long, category3_name string",
+    ).write.mode("overwrite").parquet(sku_dim)
+    _drop(
+        spark,
+        ORDER_DETAIL_SCHEMA,
+        [
+            (None, 1, 100, _t(1), 1.0),
+            (None, 2, 100, _t(2), 2.0),
+            (5, 3, 100, _t(3), 3.0),
+            (5, 3, 100, _t(1), 4.0),  # earlier copy of 5 survives
+            (6, 4, 100, _t(0), 7.0),
+            (6, 4, 100, None, 6.0),  # NULL ts sorts first
+        ],
+        src,
+    )
+    q = order_detail_pipeline(spark, src, sku_dim, out, ckpt)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    got = sorted(
+        (r["order_id"], r["detail_id"], r["amount"], r["tm_name"])
+        for r in IdempotentBatchWriter(out).read(spark).collect()
+    )
+    assert got == [
+        (1, None, 1.0, "apple"),
+        (2, None, 2.0, "apple"),
+        (3, 5, 4.0, "apple"),
+        (4, 6, 6.0, "apple"),
+    ]
 
 
 def test_dim_to_sku_to_detail_composition(spark, tmp_path):
