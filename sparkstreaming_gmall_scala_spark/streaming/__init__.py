@@ -10,7 +10,7 @@ Modules:
   dau.py              - A2 streaming distinct (watermark +
                         dropDuplicatesWithinWatermark)
   join.py             - J1 watermarked stream-stream join
-  allocation.py       - A4 stateful allocation (pandas state in hash buckets)
+  allocation.py       - A4 stateful allocation (pandas state, one group)
   pipelines.py        - the nine reference apps as wired pipelines
   dedup.py            - incremental LSH dedup over a persisted band index
                         (minhash / simhash-limb / embedding-hyperplane

@@ -12,19 +12,16 @@ open order. Sums are integer cents — the reference's
 ``detailAmount == originalTotal - originSum`` equality test on doubles is
 a float-equality landmine; cents make it exact and deterministic.
 
-State layout. ``allocate_stateful`` keys the state by
-``pmod(xxhash64(order_id), BUCKETS)``. Each bucket holds its open orders
-as four parallel arrays: ``order_id``, ``origin_sum_cents``,
-``split_sum_cents`` and ``expire_ms``. Changing ``BUCKETS`` (or
-restoring a checkpoint keyed by order id) needs a fresh checkpoint.
-
-Why buckets: ``applyInPandasWithState`` pays ~4-5 ms of Python overhead
-per group, and an order-keyed state has one group per order (~1,000 per
-batch in the benchmark's ticks: 4-5 s of worker CPU per batch). With
-buckets one pandas call handles all of a bucket's details, in
-``(order_id, detail_id)`` order, so a batch costs ``BUCKETS`` calls
-whatever its order count. The price is that a bucket with data rewrites
-all of its open orders (four longs each) to the state store.
+State layout. ``allocate_stateful`` keys the whole stream by one
+constant group, so a micro-batch makes one pandas call whatever its
+order count (keyed by order, ``applyInPandasWithState`` would pay its
+per-group Python overhead once per order). The state is one row that
+holds the open orders as four parallel arrays: ``order_id``,
+``origin_sum_cents``, ``split_sum_cents`` and ``expire_ms``. A batch
+with data rewrites that row, four longs per open order. The group key
+is an ``int``. The earlier layout keyed 16 hash buckets by a
+``bigint``, so Spark refuses to restore one of its checkpoints
+(``STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE``); it needs a fresh start.
 
 State TTL is EVENT-time (watermark + 600 s), not the reference's
 processing-time Redis expiry. Deliberate: with
@@ -34,8 +31,8 @@ batches forever (and ``availableNow`` drains never terminate — observed:
 hundreds of empty batches and an eventual StackOverflowError in the file
 source). EventTimeTimeout ties cleanup to watermark advance, which only
 happens when data arrives. An order's ``expire_ms`` is its latest event
-time in its latest batch plus the TTL; the bucket evicts the order once
-the watermark passes it, and the bucket's own timeout is its earliest
+time in its latest batch plus the TTL; the group evicts the order once
+the watermark passes it, and the group's own timeout is its earliest
 ``expire_ms``. Eviction thus happens in the same batch, and after the
 same data, as it would with one state row per order timing out.
 ``allocation_pipeline`` runs no batch without data, so that batch is the
@@ -57,8 +54,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-# Hash buckets of the allocation state; part of its checkpoint layout.
-BUCKETS = 16
 # The reference's Redis TTL: the watermark delay and an order's expiry.
 _TTL_S = 600
 
@@ -82,7 +77,7 @@ def _cents(x: float) -> int:
     return int(x * 100 + 0.5)
 
 
-def _allocate_bucket(pdf: pd.DataFrame, state: GroupState) -> pd.DataFrame | None:
+def _allocate(pdf: pd.DataFrame, state: GroupState) -> pd.DataFrame | None:
     # open order id -> [origin_sum_cents, split_sum_cents, expire_ms]
     orders = (
         {o: [a, s, e] for o, a, s, e in zip(*state.get)} if state.exists else {}
@@ -187,7 +182,7 @@ def allocate_stateful(details: DataFrame) -> DataFrame:
             pdf[c] = pd.arrays.IntegerArray(
                 pdf[c].to_numpy(np.int64), pdf[f"_null_{c}"].to_numpy(bool)
             )
-        out = _allocate_bucket(pdf[columns], state)
+        out = _allocate(pdf[columns], state)
         if out is not None:
             yield out
 
@@ -195,9 +190,10 @@ def allocate_stateful(details: DataFrame) -> DataFrame:
         details.select(
             *(F.coalesce(c, F.lit(0)).alias(c) if c in longs else c for c in columns),
             *(F.col(c).isNull().alias(f"_null_{c}") for c in longs),
-            F.pmod(F.xxhash64("order_id"), F.lit(BUCKETS)).alias("_bucket"),
+            # an int key: a bigint one would restore a bucketed checkpoint
+            F.lit(0).alias("_group"),
         )
-        .groupBy("_bucket")
+        .groupBy("_group")
         .applyInPandasWithState(
             run, _OUT_SCHEMA, _STATE_SCHEMA, "append",
             GroupStateTimeout.EventTimeTimeout,

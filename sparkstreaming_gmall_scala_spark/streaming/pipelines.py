@@ -379,7 +379,7 @@ def order_info_pipeline(
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
-    return _start_stateful(spark, writer, on_data_only=False)
+    return _start_stateful(spark, writer)
 
 
 def sku_dim_pipeline(
@@ -656,7 +656,8 @@ def order_detail_pipeline(
 
     Repeats of a ``detail_id`` within a batch collapse to the copy
     earliest by ``ts``, NULL first, as allocation collapses them; a NULL
-    ``detail_id`` is never a repeat."""
+    ``detail_id`` is never a repeat. The step holds no state, so a
+    ``detail_id`` re-sent in a later batch is written again as sent."""
     details = file_stream(spark, src_dir, ORDER_DETAIL_SCHEMA)
     sink = IdempotentBatchWriter(out_dir)
     # the remaining columns break ts ties, so the surviving copy never

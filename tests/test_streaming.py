@@ -286,15 +286,13 @@ def _alloc_rows(rows):
 
 
 def test_bucketed_allocation_matches_per_order_loop(spark, tmp_path):
-    """The hash-bucketed allocation state gives every detail exactly the
-    share the order-keyed loop gives it: orders split across batches,
-    several orders per bucket, a detail landing after its order's 600 s
-    TTL, a late detail, NULL order_id / amount / ts details, order ids
-    above 2**53 in the NULL order_id's bucket, a detail repeated within
-    a batch, and two restarts from the checkpoint."""
+    """The allocation state, one group holding every open order, gives
+    every detail exactly the share the order-keyed loop gives it: orders
+    split across batches, a detail landing after its order's 600 s TTL,
+    a late detail, NULL order_id / amount / ts details, order ids above
+    2**53 in the NULL order_id's batch, a detail repeated within a
+    batch, and two restarts from the checkpoint."""
     import random
-
-    from sparkstreaming_gmall_scala_spark.streaming.allocation import BUCKETS
 
     rng = random.Random(7)
     batches: list[list[tuple]] = [[] for _ in range(7)]
@@ -326,28 +324,15 @@ def test_bucketed_allocation_matches_per_order_loop(spark, tmp_path):
                    (200, 906, at(100), 4.0, 9.0, 8.0)]  # late: dropped
     # Bad input. A NULL amount or order_id gets a NULL share and leaves
     # the state alone (order 500's second detail still takes the
-    # residual). Odd ids above 2**53 share the NULL order_id's bucket
-    # and batch: a float64 round trip would change them. Order 400's
-    # only detail has a NULL ts, so its expiry anchors on the watermark
-    # + 1 and it is gone by batch 6: 908 takes a fresh 0.51, not the
-    # residual 0.50.
-    bucket = F.pmod(F.xxhash64("o"), F.lit(BUCKETS))
-    null_bucket = (
-        spark.sql("SELECT CAST(NULL AS BIGINT) AS o").select(bucket).first()[0]
-    )
-    big = [
-        r["o"]
-        for r in spark.range(400)
-        .selectExpr(f"{2**53 + 1} + 2 * id AS o")
-        .where(bucket == null_bucket)
-        .limit(2)
-        .collect()
-    ]
+    # residual). Odd ids above 2**53 share the NULL order_id's batch: a
+    # float64 round trip would change them. Order 400's only detail has
+    # a NULL ts, so its expiry anchors on the watermark + 1 and it is
+    # gone by batch 6: 908 takes a fresh 0.51, not the residual 0.50.
     batches[1] += [(500, 910, at(40), None, 3.0, 2.0),
                    (500, 911, at(40), 3.0, 3.0, 2.0)]
     batches[2] += [(None, 912, at(65), 1.0, 1.0, 1.0),
-                   (big[0], 913, at(66), 1.0, 3.0, 2.0),
-                   (big[1], 914, at(66), 2.0, 3.0, 3.0)]
+                   (2**53 + 1, 913, at(66), 1.0, 3.0, 2.0),
+                   (2**53 + 3, 914, at(66), 2.0, 3.0, 3.0)]
     batches[4] += [(400, 907, None, 1.0, 2.0, 1.01)]
     batches[6] += [(400, 908, at(800), 1.0, 2.0, 1.01)]
     # Order 600: detail 920 twice in one batch, the later copy with a
@@ -364,15 +349,6 @@ def test_bucketed_allocation_matches_per_order_loop(spark, tmp_path):
     assert want[907] == 0.51 and want[908] == 0.51
     assert (want[920], want[921], want[922]) == (0.67, 0.67, 0.66)
 
-    order_ids = sorted({r[0] for b in batches for r in b} - {None})
-    per_bucket = (
-        spark.createDataFrame([(o,) for o in order_ids], "order_id long")
-        .groupBy(F.pmod(F.xxhash64("order_id"), F.lit(BUCKETS)))
-        .count()
-        .collect()
-    )
-    assert max(r["count"] for r in per_bucket) >= 2
-
     src, out, ckpt = _dirs(tmp_path, "src", "out", "ckpt")
     for run in (batches[:3], batches[3:5], batches[5:]):
         _drop_each(spark, ALLOC_SCHEMA, [_alloc_rows(b) for b in run], src)
@@ -386,6 +362,43 @@ def test_bucketed_allocation_matches_per_order_loop(spark, tmp_path):
     assert {r["detail_id"]: r["order_id"] for r in sink} == {
         d: sent[d] for d in want
     }
+
+
+def test_allocation_keeps_one_state_row(spark, tmp_path):
+    """The allocation state is one row, however many orders are open:
+    three batches open 900 orders at 0-60 s, a batch at 1,300 s opens 50
+    more, and a batch at 1,310 s, whose watermark (700 s) is past the
+    first 900 orders' expiry, opens 20 and evicts the 900. The last
+    batch reports one state row, and that row holds the 70 open orders."""
+    import random
+
+    rng = random.Random(11)
+    at = lambda s: _T0_MS + s * 1000  # noqa: E731
+    order_id = 0
+    batches = []
+    for n, lo, hi in ((300, 0, 60), (300, 0, 60), (300, 0, 60),
+                      (50, 1300, 1300), (20, 1310, 1310)):
+        rows = []
+        for _ in range(n):
+            order_id += 1
+            amounts = [rng.randrange(1, 5000) for _ in range(rng.randint(1, 3))]
+            total = sum(amounts) / 100
+            rows += [(order_id, order_id * 10 + k, at(rng.randint(lo, hi)),
+                      a / 100, total, total) for k, a in enumerate(amounts)]
+        batches.append(rows)
+    open_orders = {r[0] for r in batches[3] + batches[4]}
+
+    src, out, ckpt = _dirs(tmp_path, "src", "out", "ckpt")
+    _drop_each(spark, ALLOC_SCHEMA, [_alloc_rows(b) for b in batches], src)
+    q = allocation_pipeline(spark, src, out, ckpt, available_now=True)
+    assert q.awaitTermination(120), "drain did not terminate"
+    assert q.lastProgress["numInputRows"] == len(batches[4])
+    assert q.lastProgress["stateOperators"][0]["numRowsTotal"] == 1
+    state = (
+        spark.read.format("statestore").load(ckpt)
+        .selectExpr("explode(value.groupState.order_id) AS order_id").collect()
+    )
+    assert sorted(r["order_id"] for r in state) == sorted(open_orders)
 
 
 def test_allocation_same_shares_under_every_trigger(spark, tmp_path):
@@ -430,17 +443,22 @@ def test_allocation_same_shares_under_every_trigger(spark, tmp_path):
 
 
 def test_stateful_pipelines_run_no_empty_batches(spark, tmp_path):
-    """dau, the inner order_wide join and allocation run a micro-batch
-    only when a file lands, although each file moves the watermark past
-    state the previous ones left: every batch that ran read input. The
-    session's own noDataMicroBatches setting is the same after each
-    start()."""
+    """dau, the inner order_wide join, allocation and order_info run a
+    micro-batch only when a file lands, although each file moves the
+    watermark past state the previous ones left: every batch that ran
+    read input. The session's own noDataMicroBatches setting is the same
+    after each start()."""
     from datetime import datetime, timedelta
+
+    from sparkstreaming_gmall_scala_spark.streaming.pipelines import (
+        ORDER_INFO_SCHEMA,
+        order_info_pipeline,
+    )
 
     key = "spark.sql.streaming.noDataMicroBatches.enabled"
     day = [datetime(2024, 1, 1, 10) + timedelta(days=k) for k in range(3)]
-    odir, ddir, events, alloc = _dirs(
-        tmp_path, "in/orders", "in/details", "in/events", "in/alloc"
+    odir, ddir, events, alloc, info = _dirs(
+        tmp_path, "in/orders", "in/details", "in/events", "in/alloc", "in/info"
     )
 
     def start(name, make):
@@ -455,6 +473,8 @@ def test_stateful_pipelines_run_no_empty_batches(spark, tmp_path):
             spark, odir, ddir, out, ckpt)),
         start("alloc", lambda out, ckpt: allocation_pipeline(
             spark, alloc, out, ckpt)),
+        start("info", lambda out, ckpt: order_info_pipeline(
+            spark, info, out + "_export", out, ckpt)),
     ]
     assert spark.conf.get(key) == "true"
     try:
@@ -463,6 +483,7 @@ def test_stateful_pipelines_run_no_empty_batches(spark, tmp_path):
             _drop(spark, ORDER_SCHEMA, [(k, ts, 5.0)], odir)
             _drop(spark, DETAIL_SCHEMA, [(k, k, ts, 5.0)], ddir)
             _drop(spark, ALLOC_SCHEMA, [(k, k, ts, 5.0, 5.0, 4.0)], alloc)
+            _drop(spark, ORDER_INFO_SCHEMA, [(k, k, 1, ts, 5.0)], info)
             for q in queries:
                 q.processAllAvailable()
         for q in queries:
@@ -1645,6 +1666,46 @@ def test_order_detail_pipeline_null_and_repeated_detail_ids(spark, tmp_path):
         (3, 5, 4.0, "apple"),
         (4, 6, 6.0, "apple"),
     ]
+
+
+def test_order_detail_resent_detail_is_written_again(spark, tmp_path):
+    """A ``detail_id`` re-sent in a later batch is written again, as sent:
+    the pipeline holds no state across batches. Detail 1 comes back
+    unchanged and detail 2 with a new amount; each later copy lands in
+    the later batch, and the earlier batch's rows stay as written."""
+    from sparkstreaming_gmall_scala_spark.streaming.pipelines import (
+        ORDER_DETAIL_SCHEMA,
+        order_detail_pipeline,
+    )
+
+    src, sku_dim, out, ckpt = _dirs(tmp_path, "src", "sku", "out", "ckpt")
+    spark.createDataFrame(
+        [(100, "iphone", 1, "phones-spu", 5, "apple", 7, "phones")],
+        "sku_id long, sku_name string, spu_id long, spu_name string, "
+        "tm_id long, tm_name string, category3_id long, category3_name string",
+    ).write.mode("overwrite").parquet(sku_dim)
+    _drop_each(spark, ORDER_DETAIL_SCHEMA, [
+        [(1, 10, 100, _t(1), 1.0), (2, 10, 100, _t(2), 2.0)],
+        [(1, 10, 100, _t(1), 1.0), (2, 10, 100, _t(3), 5.0),
+         (3, 11, 100, _t(4), 3.0)],
+    ], src)
+    q = order_detail_pipeline(spark, src, sku_dim, out, ckpt)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    got = sorted(
+        (r["batch_id"], r["detail_id"], r["order_id"], r["ts"], r["amount"],
+         r["tm_name"])
+        for r in IdempotentBatchWriter(out).read(spark).collect()
+    )
+    assert got == [
+        (0, 1, 10, _t(1), 1.0, "apple"),
+        (0, 2, 10, _t(2), 2.0, "apple"),
+        (1, 1, 10, _t(1), 1.0, "apple"),
+        (1, 2, 10, _t(3), 5.0, "apple"),
+        (1, 3, 11, _t(4), 3.0, "apple"),
+    ], got
 
 
 def test_dim_to_sku_to_detail_composition(spark, tmp_path):
